@@ -828,6 +828,13 @@ class LakeTable:
         Replay guard: if ``batch_id`` was already committed, returns the
         existing commit without touching data — this is what makes
         crash-recovery exactly-once (engine re-runs a batch, merge no-ops).
+
+        ``precommit_check`` runs after the data write and before the commit
+        becomes visible: raising there leaves only vacuum-able orphans, and
+        a dict it returns replaces ``app_metadata`` — for metadata that
+        only the write itself can produce (the engine's offsets). A
+        returned commit whose ``app_metadata`` differs came from the replay
+        or split-brain guard: another run committed this ``batch_id``.
         """
         write_salt = max(1, int(write_salt))
         if batch_id is not None:
@@ -909,6 +916,8 @@ class LakeTable:
             .parquet(cdir)
         )
         added = self._scan_written(cdir, cdir_rel, nb)
+        if precommit_check is not None:
+            app_metadata = precommit_check() or app_metadata
         # retry through commit races: a separate maintenance process
         # (compaction/expiry) landing a commit between this merge's state
         # read and its commit write is the NORMAL deployment, not an
@@ -936,11 +945,6 @@ class LakeTable:
                     "commit_retries": _attempt,
                 },
             )
-            if precommit_check is not None:
-                # the caller's consistency gate: runs AFTER the data write,
-                # BEFORE the commit becomes visible — raising here leaves
-                # only vacuum-able orphans
-                precommit_check()
             try:
                 self._write_commit(commit)
                 return commit
@@ -1098,6 +1102,8 @@ class LakeTable:
         )
 
         added = self._scan_written(cdir, cdir_rel, nb)
+        if precommit_check is not None:
+            app_metadata = precommit_check() or app_metadata
         # retry through commit races (same deployment reality as the MoR
         # path: a separate maintenance process commits concurrently). A
         # CoW rewrite REMOVES old_files, so re-attempting at the new head
@@ -1129,11 +1135,6 @@ class LakeTable:
                     "commit_retries": _attempt,
                 },
             )
-            if precommit_check is not None:
-                # the caller's consistency gate: runs AFTER the data
-                # write, BEFORE the commit becomes visible — raising here
-                # leaves only vacuum-able orphans
-                precommit_check()
             try:
                 self._write_commit(commit)
                 return commit

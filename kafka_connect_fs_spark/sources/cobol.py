@@ -19,6 +19,7 @@ columns, never Python objects per record.
 
 from __future__ import annotations
 
+import logging
 import math
 from typing import Iterator
 
@@ -40,6 +41,8 @@ from .copybook import (
     spark_type_for,
 )
 from .readers import WorkItem, _open_raw, register_reader
+
+log = logging.getLogger("kafka_connect_fs_spark")
 
 __all__ = ["read_cobol", "CobolOptions"]
 
@@ -374,12 +377,7 @@ def _frame_odo(
                     # so the desynced file surfaces to the operator instead
                     # of the remainder being silently skipped
                     raise ValueError(msg)
-                import sys
-
-                print(
-                    msg + "; stopping framing for this split",
-                    file=sys.stderr,
-                )
+                log.warning("%s; stopping framing for this split", msg)
                 break
             comp = (m["max_occurs"] - c) * m["item_size"]
             comps.append(comp)

@@ -32,13 +32,15 @@ same delivered set, one fewer failure mode. Wire via
 
 from __future__ import annotations
 
+import logging
 import re
-import sys
 from dataclasses import dataclass
 from typing import Callable
 
 from kafka_connect_fs_spark.sources.discovery import FileMeta
 from kafka_connect_fs_spark.sources.s3_events import _stat_uri
+
+log = logging.getLogger("kafka_connect_fs_spark")
 
 COPY_TMP_SUFFIX = "._COPYING_"
 
@@ -151,10 +153,9 @@ class HdfsInotifyPolicy:
                 # stop this poll. A caller-provided reopen path (or the
                 # listing-diff fallback) covers the gap; crashing every
                 # subsequent trigger (the alternative) helps nobody.
-                print(
-                    f"kcfs: inotify stream error ({type(e).__name__}): {e} — "
-                    "events may have been missed; consider a listing sweep",
-                    file=sys.stderr,
+                log.warning(
+                    "inotify stream error (%s): %s — events may have been "
+                    "missed; consider a listing sweep", type(e).__name__, e,
                 )
                 break
             if batch is None:
@@ -180,7 +181,7 @@ class HdfsInotifyPolicy:
             try:
                 return self.stat_fn(uri)
             except OSError as e:
-                print(f"kcfs: cannot stat '{uri}': {e}", file=sys.stderr)
+                log.warning("cannot stat '%s': %s", uri, e)
                 return None
 
         if len(uris) <= 1:
@@ -217,10 +218,9 @@ class HdfsInotifyPolicy:
             admin = jvm.org.apache.hadoop.hdfs.client.HdfsAdmin(juri, conf)
             stream = admin.getInotifyEventStream()
         except Exception as e:
-            print(
-                f"kcfs: HDFS inotify unavailable for '{uri}' "
-                f"({type(e).__name__}); falling back to listing-diff",
-                file=sys.stderr,
+            log.warning(
+                "HDFS inotify unavailable for '%s' (%s); falling back to "
+                "listing-diff", uri, type(e).__name__,
             )
             return None
         return cls(stream, uri, regexp=regexp, stat_fn=stat_fn)

@@ -10,7 +10,15 @@ file, offset = records or bytes consumed, ``seek(offset)`` to resume. Here:
   codegen, no per-row Python). Large files are split Hadoop-style at
   arbitrary byte boundaries with newline re-alignment, so one hot file
   parallelizes across the cluster — something the reference's one-iterator-
-  per-file model cannot do.
+  per-file model cannot do. Planning and packing stay on the driver: the
+  ranges are packed into byte-balanced bins — ``defaultParallelism`` of
+  them, or one per ``max_split_bytes`` of the batch if that is more — and
+  one Python task scans one bin, so a batch of many small tails pays the
+  Python worker's fixed cost once per core, not once per file. Each
+  range reports its outcome (consumed end, OK / PARTIAL / FAILED, record
+  count) into a caller-supplied accumulator from inside the task, so the
+  caller learns its resume offsets from the same Spark job that consumes
+  the lines.
 - **Self-describing columnar formats** (Parquet / Avro / ORC): native
   ``spark.read`` (vectorized scans, predicate pushdown, column pruning
   — the reference's hand-built Parquet ``projection``,
@@ -18,9 +26,9 @@ file, offset = records or bytes consumed, ``seek(offset)`` to resume. Here:
   rotate-based: a file is ingested whole on first sight (the reference's
   "seek" for Parquet is also re-init+skip, ParquetFileReader.java:87-96).
 - **Whole-file-record formats** (YAML / XML / whole-file JSON / text with
-  record_per_line=false): an Arrow ``mapInPandas`` reads file bytes and
-  converts to a JSON string per record in vectorized Python; typing is
-  again JVM-side ``from_json``.
+  record_per_line=false): an Arrow ``mapInPandas`` reads file bytes (files
+  packed into host-sized bins the same way) and converts to a JSON string
+  per record in vectorized Python; typing is again JVM-side ``from_json``.
 
 Offsets are byte positions in the (decompressed) stream; gzip/bz2 files
 (CompressionType.java:3-23) cannot be random-accessed, so their tail resume
@@ -34,21 +42,52 @@ import bz2
 import datetime
 import decimal
 import gzip
+import heapq
 import json
+import logging
 import os
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark import AccumulatorParam
 from pyspark.sql import types as T
 
-# sentinel _line_no values for per-range outcome markers (never real lines)
-LINE_NO_RANGE_OK = -2  # range fully consumed up to its responsibility end
-LINE_NO_RANGE_FAILED = -1  # read error: offset must not advance past range_start
-LINE_NO_RANGE_PARTIAL = -4  # read ok but tail held back (unterminated line):
-# consumed_end (marker _src_end) < snapshot end ⇒ not eof
+log = logging.getLogger("kafka_connect_fs_spark")
+
+# per-range outcome kinds
+RANGE_OK = "ok"  # range fully consumed up to its responsibility end
+RANGE_FAILED = "failed"  # read error: offset must not advance past range_start
+RANGE_PARTIAL = "partial"  # read ok but tail held back (unterminated line or
+# record cap): consumed_end < snapshot end ⇒ not eof
+
+
+class RangeOutcome(NamedTuple):
+    """What one scanned byte range reports back to the driver."""
+
+    path: str
+    range_start: int
+    consumed_end: int  # resume point: end of the last line this range owns
+    kind: str  # RANGE_OK | RANGE_PARTIAL | RANGE_FAILED
+    records: int  # lines emitted
+
+
+class _ListParam(AccumulatorParam):
+    def zero(self, value):
+        return []
+
+    def addInPlace(self, a, b):
+        a.extend(b)
+        return a
+
+
+def outcome_accumulator(spark: SparkSession):
+    """An accumulator that collects ``RangeOutcome``s from scan tasks.
+    Spark re-adds the updates of a re-executed task, so the same outcome
+    can arrive more than once."""
+    return spark.sparkContext.accumulator([], _ListParam())
 
 LINE_SCHEMA = T.StructType(
     [
@@ -151,6 +190,44 @@ def plan_line_splits(
     return rows
 
 
+def _pack(sizes: list[int], k: int) -> list[list[int]]:
+    """Indices of ``sizes`` packed into at most ``k`` bins balanced by
+    total size: largest first, each into the currently lightest bin."""
+    k = max(1, min(k, len(sizes)))
+    heap = [(0, b) for b in range(k)]
+    bins: list[list[int]] = [[] for _ in range(k)]
+    for i in sorted(range(len(sizes)), key=lambda i: -sizes[i]):
+        load, b = heapq.heappop(heap)
+        bins[b].append(i)
+        heapq.heappush(heap, (load + sizes[i], b))
+    return bins
+
+
+def _scan_bins(
+    spark: SparkSession, work: list, sizes: list[int], scan_one, schema,
+    split_bytes: int = 128 * 1024 * 1024,
+) -> DataFrame:
+    """One Python task per bin of ``work``, packed by ``sizes`` into
+    ``max(defaultParallelism, ceil(sum(sizes) / split_bytes))`` bins;
+    ``scan_one(item)`` yields the pandas frames of one work item. The bins
+    travel in the task closure and each task is one ``spark.range`` id, so
+    there is no work-list DataFrame to shuffle. Every Python task pays a
+    fixed worker cost far above a small tail's scan time, so many small
+    items collapse into one task per core; a large scan keeps about one
+    task per ``split_bytes``, so one hot file still spreads over the
+    cluster and a retried task re-scans one split's worth."""
+    k = max(spark.sparkContext.defaultParallelism, -(-sum(sizes) // split_bytes))
+    bins = [[work[i] for i in b] for b in _pack(sizes, k)]
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for b in pdf["id"]:
+                for item in bins[b]:
+                    yield from scan_one(item)
+
+    return spark.range(len(bins), numPartitions=len(bins)).mapInPandas(scan, schema)
+
+
 def read_lines(
     spark: SparkSession,
     items: list[WorkItem],
@@ -158,11 +235,11 @@ def read_lines(
     emit_unterminated_final_line: bool = True,
     max_split_bytes: int = 128 * 1024 * 1024,
     arrow_batch_rows: int = 10_000,
-    with_markers: bool = False,
     rows_to_skip: int = 0,
     max_records_per_file: int = 0,
     skip_header_line: bool = False,
     comment_prefix: str | None = None,
+    outcomes=None,
 ) -> DataFrame:
     """Distributed byte-range line scan → DataFrame of raw lines + lineage.
 
@@ -170,10 +247,11 @@ def read_lines(
     (TextFileReader.java:80-112). ``_src_offset``/``_src_end`` are byte
     offsets in the decompressed stream — the resume watermark unit.
 
-    With ``with_markers=True`` each range additionally emits one outcome
-    row (``_line_no`` = LINE_NO_RANGE_OK / LINE_NO_RANGE_FAILED, value
-    NULL) so a caller tracking resume offsets can detect failed ranges and
-    refuse to commit past them (the engine does).
+    ``outcomes`` (an ``outcome_accumulator``) receives one ``RangeOutcome``
+    per scanned range, added from inside the task whenever an action runs
+    the scan, so a caller tracking resume offsets learns them — and any
+    failed range it must not commit past — from the action that consumes
+    the lines (the engine's merge write).
     """
     # the scanner splits the RAW BYTE stream on b"\n" — only sound for
     # encodings where "\n" is the single byte 0x0A and 0x0A never appears
@@ -185,76 +263,47 @@ def read_lines(
             "byte-range line scanner supports ASCII-supersets only "
             "(utf-8, latin-1, ...)"
         )
-    if max_records_per_file:
-        # record-cap semantics are per FILE per trigger
-        # (file_reader.batch_size, AbstractFileReader.java:76-86): one
-        # range per file so split-level caps can't multiply to N x splits.
-        # The cap already bounds per-task work, so losing intra-file
-        # splits costs nothing.
-        max_split_bytes = 1 << 60
-    rows = plan_line_splits(items, max_split_bytes)
+    # record-cap semantics are per FILE per trigger
+    # (file_reader.batch_size, AbstractFileReader.java:76-86): one range
+    # per file so split-level caps can't multiply to N x splits. The cap
+    # already bounds per-task work, so losing intra-file splits costs
+    # nothing.
+    rows = plan_line_splits(items, 1 << 60 if max_records_per_file else max_split_bytes)
     if not rows:
         return spark.createDataFrame([], LINE_SCHEMA)
-    work = spark.createDataFrame(rows, WORK_SCHEMA).repartition(len(rows))
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                try:
-                    yield from _scan_one_range(
-                        r.path,
-                        int(r.start_offset),
-                        int(r.snap_length),
-                        int(r.range_start),
-                        int(r.range_end),
-                        encoding,
-                        emit_unterminated_final_line,
-                        arrow_batch_rows,
-                        rows_to_skip,
-                        max_records_per_file,
-                        skip_header_line,
-                        comment_prefix,
-                    )
-                    # success markers (OK / PARTIAL, with the consumed end
-                    # position) are emitted inside _scan_one_range; the
-                    # engine only advances a file's offset when NO range of
-                    # it failed — a failed early split with a successful
-                    # later split must not commit past the hole (the tail is
-                    # re-read next trigger; idempotent LWW absorbs the
-                    # partial emit)
-                except (OSError, EOFError, ValueError) as e:
-                    # per-file error tolerance: warn + continue, offset not
-                    # advanced (the reference's FsSourceTask.java:101-105)
-                    import sys
+    def scan_range(r: tuple) -> Iterator[pd.DataFrame]:
+        path, start_offset, snap_length, range_start, range_end = r
+        try:
+            out = yield from _scan_one_range(
+                path,
+                start_offset,
+                snap_length,
+                range_start,
+                range_end,
+                encoding,
+                emit_unterminated_final_line,
+                arrow_batch_rows,
+                rows_to_skip,
+                max_records_per_file,
+                skip_header_line,
+                comment_prefix,
+            )
+        except (OSError, EOFError, ValueError) as e:
+            # per-file error tolerance: warn + continue, offset not
+            # advanced (the reference's FsSourceTask.java:101-105). The
+            # engine only advances a file's offset when NO range of it
+            # failed — a failed early split with a successful later split
+            # must not commit past the hole (the tail is re-read next
+            # trigger; idempotent LWW absorbs the partial emit)
+            log.warning("unreadable file range %s: %s", path, e)
+            out = RangeOutcome(path, range_start, range_start, RANGE_FAILED, 0)
+        if outcomes is not None:
+            outcomes.add([out])
 
-                    print(
-                        f"kcfs: unreadable file range {r.path}: {e}",
-                        file=sys.stderr,
-                    )
-                    yield _marker_row(
-                        r.path,
-                        int(r.range_start),
-                        int(r.range_start),
-                        LINE_NO_RANGE_FAILED,
-                    )
-
-    out = work.mapInPandas(scan, LINE_SCHEMA)
-    if not with_markers:
-        out = out.filter(F.col("_line_no") >= 0)
-    return out
-
-
-def _marker_row(path: str, start: int, end: int, line_no: int) -> pd.DataFrame:
-    """One range-outcome marker row (value NULL, _line_no < 0)."""
-    return pd.DataFrame(
-        {
-            "_src_file": [path],
-            "_src_offset": [int(start)],
-            "_src_end": [int(end)],
-            "_line_no": [int(line_no)],
-            "value": [None],
-        }
-    )
+    # compressed ranges decompress the whole stream: weigh them by file size
+    sizes = [r[2] if _compression_of(r[0]) else r[4] - r[3] for r in rows]
+    return _scan_bins(spark, rows, sizes, scan_range, LINE_SCHEMA, max_split_bytes)
 
 
 def _scan_one_range(
@@ -281,11 +330,11 @@ def _scan_one_range(
     split and a straddling line by the previous one (which reads past its
     range_end to finish it).
 
-    Always ends with one outcome-marker row: OK if the range consumed up to
+    Returns the range's ``RangeOutcome``: OK if the range consumed up to
     its responsibility end (range_end / snapshot end), PARTIAL if a final
-    unterminated line was held back (consumed end = marker ``_src_end``) —
-    the engine needs this to distinguish "fully consumed" from "tail
-    pending", which offsets alone cannot express for compressed streams.
+    unterminated line (or the record cap's remainder) was held back — the
+    engine needs this to distinguish "fully consumed" from "tail pending",
+    which offsets alone cannot express for compressed streams.
     """
     import numpy as np
 
@@ -313,8 +362,8 @@ def _scan_one_range(
                 # If the skipped line did NOT terminate within the listing
                 # snapshot, the OWNING (previous) split held it back as torn
                 # (clamp_truncated) — this split must claim NOTHING, or its
-                # OK marker (pos >= logical_end) would win the engine's
-                # max(_src_end) and commit past the held-back bytes,
+                # OK outcome (pos >= logical_end) would win the engine's
+                # max(consumed_end) and commit past the held-back bytes,
                 # permanently skipping them. Terminated-in-snapshot means a
                 # newline at or before logical_end; a newline-less tail
                 # ending exactly at the snapshot is claimed by the owner
@@ -324,13 +373,11 @@ def _scan_one_range(
                     not skipped.endswith(b"\n") and pos == logical_end and emit_final
                 )
                 if not (terminated or final_claimed):
-                    yield _marker_row(
-                        path, start_offset, start_offset, LINE_NO_RANGE_PARTIAL
+                    return RangeOutcome(
+                        path, range_start, start_offset, RANGE_PARTIAL, 0
                     )
-                    return
                 if pos >= min(range_end, logical_end):
-                    yield _marker_row(path, range_start, pos, LINE_NO_RANGE_OK)
-                    return
+                    return RangeOutcome(path, range_start, pos, RANGE_OK, 0)
             else:
                 stream.seek(pos)
             limit = min(range_end, logical_end) - pos
@@ -370,8 +417,7 @@ def _scan_one_range(
         at_end = pos + len(buf) >= logical_end
 
     if not buf:
-        yield _marker_row(path, range_start, pos, LINE_NO_RANGE_OK)
-        return
+        return RangeOutcome(path, range_start, pos, RANGE_OK, 0)
 
     fully_terminated = buf.endswith(b"\n")
     parts = buf.split(b"\n")
@@ -384,8 +430,7 @@ def _scan_one_range(
         unterminated_last = False
         held_back = True
         if not parts:
-            yield _marker_row(path, range_start, pos, LINE_NO_RANGE_PARTIAL)
-            return
+            return RangeOutcome(path, range_start, pos, RANGE_PARTIAL, 0)
 
     lens = np.fromiter((len(p) for p in parts), dtype=np.int64, count=len(parts))
     starts = pos + np.concatenate(([0], np.cumsum(lens[:-1] + 1)))
@@ -423,17 +468,17 @@ def _scan_one_range(
             if emit_from < len(parts):
                 emit_from += 1  # the header line itself
         if emit_from == len(parts):
-            yield _marker_row(
+            return RangeOutcome(
                 path,
                 range_start,
                 int(ends[-1]),
-                LINE_NO_RANGE_PARTIAL if held_back else LINE_NO_RANGE_OK,
+                RANGE_PARTIAL if held_back else RANGE_OK,
+                0,
             )
-            return
 
     emit_to = len(parts)
     if max_records and emit_to - emit_from > max_records:
-        # record cap: admit exactly max_records lines; the PARTIAL marker
+        # record cap: admit exactly max_records lines; the PARTIAL outcome
         # pins the committed offset at the last admitted line's end so the
         # next trigger resumes there (no loss, no duplication)
         emit_to = emit_from + max_records
@@ -455,14 +500,12 @@ def _scan_one_range(
             }
         )
 
-    consumed_end = int(ends[emit_to - 1])
-    yield _marker_row(
+    return RangeOutcome(
         path,
         range_start,
-        consumed_end,
-        LINE_NO_RANGE_PARTIAL
-        if (held_back or emit_to < len(parts))
-        else LINE_NO_RANGE_OK,
+        int(ends[emit_to - 1]),
+        RANGE_PARTIAL if (held_back or emit_to < len(parts)) else RANGE_OK,
+        emit_to - emit_from,
     )
 
 
@@ -758,38 +801,26 @@ def read_whole_files(spark: SparkSession, items: list[WorkItem]) -> DataFrame:
     """One record per file: (path, content bytes). Used by YAML/XML/whole-
     file JSON/whole-file text (TextFileReader.java:54,87-92 record_per_line
     =false; YamlFileReader.java:34-36 forces one doc per file)."""
-    rows = [(w.path, w.start_offset, w.snap_length, 0, 0) for w in items]
-    if not rows:
+    if not items:
         return spark.createDataFrame([], FILE_SCHEMA)
-    work = spark.createDataFrame(rows, WORK_SCHEMA).repartition(len(rows))
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                limit = None if _compression_of(r.path) else int(r.snap_length)
-                try:
-                    data = _read_decompressed(r.path, limit_compressed=limit)
-                except FileNotFoundError:
-                    # vanished between listing and read (rotation/cleanup):
-                    # skip — it will not appear in the next listing. Other
-                    # I/O errors still fail the batch: committing the full
-                    # snapshot length over a transient read failure would
-                    # be silent loss.
-                    import sys
+    def scan_file(w: WorkItem) -> Iterator[pd.DataFrame]:
+        limit = None if _compression_of(w.path) else w.snap_length
+        try:
+            data = _read_decompressed(w.path, limit_compressed=limit)
+        except FileNotFoundError:
+            # vanished between listing and read (rotation/cleanup): skip —
+            # it will not appear in the next listing. Other I/O errors
+            # still fail the batch: committing the full snapshot length
+            # over a transient read failure would be silent loss.
+            log.warning("whole-file source vanished, skipping: %s", w.path)
+            return
+        yield pd.DataFrame(
+            {"_src_file": [w.path], "_src_offset": [0], "_src_end": [len(data)],
+             "content": [data]}
+        )
 
-                    print(
-                        f"kcfs: whole-file source vanished, skipping: {r.path}",
-                        file=sys.stderr,
-                    )
-                    continue
-                out.append((r.path, 0, len(data), data))
-            if out:
-                yield pd.DataFrame(
-                    out, columns=["_src_file", "_src_offset", "_src_end", "content"]
-                )
-
-    return work.mapInPandas(scan, FILE_SCHEMA)
+    return _scan_bins(spark, items, [w.snap_length for w in items], scan_file, FILE_SCHEMA)
 
 
 def _records_to_json_lines(content: bytes, fmt: str, options: dict) -> list[str]:
@@ -855,9 +886,7 @@ def parse_whole_file_records(
                     # is marked consumed rather than blocking the pipeline
                     # forever (divergence from the reference's infinite
                     # re-offer, documented).
-                    import sys
-
-                    print(f"kcfs: unparseable {fmt} file {src}: {e}", file=sys.stderr)
+                    log.warning("unparseable %s file %s: %s", fmt, src, e)
                     continue
                 for i, js in enumerate(recs):
                     rows.append((src, int(off), int(end), i, js))
@@ -989,12 +1018,7 @@ def read_avro_python(
         try:
             return _read_decompressed(path, limit_compressed=limit)
         except FileNotFoundError:
-            import sys
-
-            print(
-                f"kcfs: whole-file source vanished, skipping: {path}",
-                file=sys.stderr,
-            )
+            log.warning("whole-file source vanished, skipping: %s", path)
             return None
 
     def _decode(src, content):
@@ -1006,12 +1030,7 @@ def read_avro_python(
         try:
             writer_schema, records = parse_container(bytes(content))
         except Exception as e:
-            import sys
-
-            print(
-                f"kcfs: skipping corrupt avro container {src}: {e}",
-                file=sys.stderr,
-            )
+            log.warning("skipping corrupt avro container %s: %s", src, e)
             return None
         if reader_schema is not None:
             # per-file resolution: defaults apply against THIS file's

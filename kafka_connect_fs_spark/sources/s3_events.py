@@ -19,13 +19,15 @@ and tested with the same fixture strategy.
 from __future__ import annotations
 
 import json
+import logging
 import re
-import sys
 from dataclasses import dataclass
 from typing import Callable, Protocol
 from urllib.parse import unquote_plus
 
 from kafka_connect_fs_spark.sources.discovery import FileMeta
+
+log = logging.getLogger("kafka_connect_fs_spark")
 
 
 @dataclass(frozen=True)
@@ -208,7 +210,7 @@ class S3EventNotificationsPolicy:
                     meta = self.stat_fn(uri)
                 except OSError as e:
                     meta = None
-                    print(f"kcfs: cannot stat '{uri}': {e}", file=sys.stderr)
+                    log.warning("cannot stat '%s': %s", uri, e)
                 if meta is not None:
                     out.append(meta)
                     msg_paths.append(uri)

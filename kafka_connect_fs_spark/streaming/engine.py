@@ -11,35 +11,47 @@ as a Spark plan):
                FsSourceTask.java:83-91, AbstractPolicy.java:233-248)
 3. read:       distributed vectorized parse (sources/readers.py) into the
                change-event DataFrame with per-record lineage
-               (_src_file, _src_offset)
+               (_src_file, _src_offset) — a lazy plan, nothing runs yet
 4. resolve:    last-writer-wins per (key, ts) inside the MERGE
-5. commit:     idempotent MERGE into the lake table (batch_id guard), then
-               watermark commit; a crash between the two replays the batch,
-               the MERGE no-ops, and the watermark delta is recovered from
-               the lake commit's app_metadata — exactly-once end to end
-               (upgrades the reference's documented at-least-once,
+5. commit:     idempotent MERGE into the lake table (batch_id guard). Its
+               data write is the batch's one Spark pass: it runs the
+               scanner, whose ranges report their outcomes into an
+               accumulator, and the record counts ride the same action as
+               observed metrics. After the write and before the commit,
+               the outcomes fold into the watermark updates the commit
+               carries in its app_metadata; then the watermark commit. A
+               crash between the two replays the batch, the MERGE no-ops,
+               and the watermark delta is recovered from the lake commit's
+               app_metadata — exactly-once end to end (upgrades the
+               reference's documented at-least-once,
                docs/source/faq.rst:7-17)
 6. cleanup:    fully-consumed files get NONE/MOVE/DELETE side-effects
                (AbstractPolicy.java:281-331), applied post-commit and
                idempotent under replay
-7. metrics:    per-batch lineage (files, splits, events, per-bucket rows,
-               durations) appended to <checkpoint>/metrics.jsonl
+7. metrics:    per-batch lineage (files, events, quarantined records, range
+               outcomes, per-bucket rows, duration) appended to
+               <checkpoint>/metrics.jsonl
 
 Scale: discovery is O(listing); everything row-shaped is a distributed
-DataFrame; per-batch driver state is bounded by files-per-trigger, and the
-MERGE shuffle is bucket-pruned + partial-aggregated (see plans/lake.py).
+DataFrame; per-batch driver state is bounded by files-per-trigger (the
+range outcomes are one small tuple per scanned range, in one accumulator
+emptied per batch), scanner tasks are sized to the host's parallelism (or
+to the batch's bytes, when that needs more), and the MERGE shuffle is
+bucket-pruned + partial-aggregated (see plans/lake.py).
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -48,10 +60,13 @@ from kafka_connect_fs_spark.plans.lake import LakeTable
 from kafka_connect_fs_spark.sources.discovery import FileMeta, list_files
 from kafka_connect_fs_spark.sources.readers import (
     CUSTOM_READERS,
-    LINE_NO_RANGE_FAILED,
-    LINE_NO_RANGE_PARTIAL,
+    RANGE_FAILED,
+    RANGE_OK,
+    RANGE_PARTIAL,
+    RangeOutcome,
     WorkItem,
     format_for,
+    outcome_accumulator,
     parse_csv,
     parse_fixed_width,
     parse_jsonl,
@@ -65,6 +80,8 @@ from kafka_connect_fs_spark.sources.readers import (
     read_whole_files,
 )
 from kafka_connect_fs_spark.sources.watermarks import WatermarkStore
+
+log = logging.getLogger("kafka_connect_fs_spark")
 
 LINE_FORMATS = {"text", "csv", "tsv", "jsonl", "fixedwidth", "xml_lines"}
 NATIVE_LINE_FORMATS = {"text", "csv", "tsv", "jsonl"}  # JVM fast path (offset-0 files)
@@ -126,7 +143,7 @@ class IngestConfig:
     # maxBytesPerTrigger analog: caps the tail bytes admitted per batch)
     # record-level parity with file_reader.batch_size
     # (AbstractFileReader.java:76-86): at most N lines admitted per FILE
-    # per trigger; the scanner's PARTIAL marker pins the committed offset
+    # per trigger; the scanner's PARTIAL outcome pins the committed offset
     # at the last admitted line so the file drains across triggers with no
     # loss or duplication. Implies the offset-aware scanner (no JVM
     # whole-file fast path) for line formats.
@@ -166,6 +183,9 @@ class BatchResult:
     cleaned: list[str] = field(default_factory=list)
     duration_s: float = 0.0
     schema_diff: dict | None = None
+    quarantined: int = 0  # records dropped for a null key or ts
+    # scanned byte ranges by outcome kind
+    ranges: dict = field(default_factory=lambda: _range_counts({}))
 
 
 class IngestEngine:
@@ -196,6 +216,9 @@ class IngestEngine:
         # runtime-settable confs its semantics depend on.
         spark.conf.set("spark.sql.ansi.enabled", "false")
         spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # emptied per batch: PySpark never drops a driver-side
+        # accumulator, so one per batch would grow without bound
+        self._outcomes = outcome_accumulator(spark)
         self.lake = (
             LakeTable(spark, config.table_root)
             if LakeTable.exists(config.table_root)
@@ -336,22 +359,20 @@ class IngestEngine:
         return fmt
 
     # --------------------------------------------------------------- reading
-    def _read(
-        self, work: list[WorkItem]
-    ) -> tuple[DataFrame | None, DataFrame | None, set[str], list[DataFrame]]:
-        """Returns (lines_union_or_None, events_df, native_paths,
-        persisted_lines_parts).
+    def _read(self, work: list[WorkItem], outcomes) -> tuple[DataFrame, set[str]]:
+        """Returns (events_df, native_paths), both lazy.
 
-        ``native_paths`` are whole files read via the JVM-native fast path —
-        they have no byte-offset line stats; their watermark commits the
-        full snapshot length (a native read failure fails the batch, so no
-        false progress is possible)."""
+        Ranges read by the offset-aware scanner report their outcomes into
+        ``outcomes`` when an action runs the scan. ``native_paths`` are
+        whole files read via the JVM-native fast path — they report no
+        outcomes; their watermark commits the full snapshot length (a
+        native read failure fails the batch, so no false progress is
+        possible)."""
         cfg = self.config
         groups: dict[str, list[WorkItem]] = {}
         for w in work:
             groups.setdefault(self._fmt_of(w.path), []).append(w)
 
-        lines_parts: list[DataFrame] = []
         event_parts: list[DataFrame] = []
         native_paths: set[str] = set()
         rows_to_skip = int(cfg.reader_options.get("rows_to_skip", 0))
@@ -383,8 +404,8 @@ class IngestEngine:
                         # stat'ed every file — a happy-path pre-check would
                         # be a second full listing at 10^5 files/trigger),
                         # drop the vanished ones, and let them fall through
-                        # to the Python scanner, which emits a FAILED
-                        # marker (offset not advanced; the file simply
+                        # to the Python scanner, which reports a FAILED
+                        # outcome (offset not advanced; the file simply
                         # isn't listed next trigger). A file vanishing
                         # AFTER planning still fails the batch — retried.
                         try:
@@ -438,20 +459,15 @@ class IngestEngine:
                     encoding=cfg.reader_options.get("encoding", "utf-8"),
                     emit_unterminated_final_line=cfg.emit_unterminated_final_line,
                     max_split_bytes=cfg.max_split_bytes,
-                    with_markers=True,
                     rows_to_skip=rows_to_skip,
                     max_records_per_file=cfg.records_per_file_per_trigger,
                     skip_header_line=skip_hdr,
                     comment_prefix=(cfg.reader_options.get("csv_options") or {}).get(
                         "comment"
                     ),
+                    outcomes=outcomes,
                 )
-                lines = lines.persist()
-                lines_parts.append(lines)
-                # range-outcome markers (_line_no < 0) are bookkeeping, not records
-                event_parts.append(
-                    self._parse_lines(fmt, lines.filter(F.col("_line_no") >= 0))
-                )
+                event_parts.append(self._parse_lines(fmt, lines))
             elif fmt in WHOLE_FILE_FORMATS:
                 files_df = read_whole_files(self.spark, items)
                 if fmt == "text_whole":
@@ -491,19 +507,10 @@ class IngestEngine:
             else:
                 raise ValueError(f"unknown format: {fmt}")
 
-        lines_df = None
-        if lines_parts:
-            lines_df = lines_parts[0]
-            for p in lines_parts[1:]:
-                lines_df = lines_df.unionByName(p)
-        events = None
-        if event_parts:
-            events = event_parts[0]
-            for p in event_parts[1:]:
-                events = events.unionByName(p, allowMissingColumns=True)
-        # lines_parts returned too: each part is persisted individually and
-        # must be unpersisted individually (unpersisting the union is a no-op)
-        return lines_df, events, native_paths, lines_parts
+        events = event_parts[0]
+        for p in event_parts[1:]:
+            events = events.unionByName(p, allowMissingColumns=True)
+        return events, native_paths
 
     def _parse_lines(self, fmt: str, lines: DataFrame) -> DataFrame:
         cfg = self.config
@@ -549,23 +556,7 @@ class IngestEngine:
         # watermark/cleanup half from the lake commit's metadata and move on
         recovered = self.lake.get_commit_by_batch_id(batch_id)
         if recovered is not None:
-            md = recovered.app_metadata or {}
-            cleaned = self._cleanup(md.get("cleanup", []))
-            self.watermarks.commit(md.get("watermarks", []), seq, removed_paths=cleaned)
-            if cfg.discovery_ack_fn is not None:
-                cfg.discovery_ack_fn(
-                    {w["path"] for w in md.get("watermarks", [])}
-                    | set(md.get("cleanup", []))
-                    | self._vanished
-                )
-                self._vanished = set()
-            res = BatchResult(
-                batch_id, seq, len(md.get("watermarks", [])), 0,
-                recovered.metrics.get("rows_written", 0), recovered=True,
-                cleaned=cleaned, duration_s=time.monotonic() - t0,
-            )
-            self._log_metrics(res, recovered.metrics, version=recovered.version)
-            return res
+            return self._finish_recovered(recovered, seq, t0)
 
         raw_listing = list(
             cfg.discovery_fn()
@@ -616,7 +607,6 @@ class IngestEngine:
             )
         listing = [by_path[p] for p in sorted(by_path)]
         work, finished = self._plan(listing, wm_rows)
-        snap = {w.path: w.snap_length for w in work}
         if cfg.discovery_fn is not None:
             planned = {w.path for w in work} | set(finished)
             self._carryover = {
@@ -637,195 +627,86 @@ class IngestEngine:
             self._log_metrics(res, {})
             return res
 
-        lines_df, events, native_paths, lines_parts = self._read(work)
-        try:
-            if cfg.transform is not None:
-                events = cfg.transform(events)
+        self._outcomes.value = []
+        events, native_paths = self._read(work, self._outcomes)
+        if cfg.transform is not None:
+            events = cfg.transform(events)
+        # error tolerance: unparseable records (null keys/ts after the
+        # typed parse) are quarantined, not fatal — the reference warns
+        # and continues on bad files (FsSourceTask.java:101-105). Both
+        # counts are observed metrics of the merge write's own action:
+        # never a separate count() job
+        key_cols = [c for c in (*cfg.keys, cfg.ts_col) if c in events.columns]
+        keep = F.expr(" AND ".join(f"`{c}` IS NOT NULL" for c in key_cols) or "true")
+        obs = Observation()
+        events = events.observe(
+            obs, F.count(F.lit(1)).alias("n"), F.count_if(~keep).alias("quarantined")
+        ).filter(keep)
 
-            # one stats pass over the cached raw lines yields the per-file
-            # consumed offsets, the per-range failure flags, AND the record
-            # count (no separate count() job on the fast path)
-            fmts = {self._fmt_of(w.path) for w in work}
-            line_stats = []
-            if lines_df is not None:
-                line_stats = (
-                    lines_df.groupBy("_src_file")
-                    .agg(
-                        F.max("_src_end").alias("end"),
-                        # real records only (markers have _line_no < 0)
-                        F.count(F.when(F.col("_line_no") >= 0, 1)).alias("cnt"),
-                        F.count(
-                            F.when(F.col("_line_no") == LINE_NO_RANGE_FAILED, 1)
-                        ).alias("n_failed_ranges"),
-                        F.count(
-                            F.when(F.col("_line_no") == LINE_NO_RANGE_PARTIAL, 1)
-                        ).alias("n_partial_ranges"),
-                    )
-                    .collect()
-                )
-            # fast count only where 1 raw line == 1 record and no transform
-            # drops rows (csv/tsv headers and custom transforms change the
-            # record count)
-            fast_count = (
-                cfg.transform is None
-                and lines_df is not None
-                and not native_paths
-                and fmts <= {"jsonl", "text"}
+        # schema evolution (M4): detect adds/renames vs the table schema;
+        # renames apply as metadata-only commits, adds flow through the
+        # union-by-name merge; the diff lands in batch metrics/lineage
+        schema_diff = None
+        tbl_schema = self.lake.current_schema()
+        if tbl_schema is not None:
+            tbl_clean = T.StructType(
+                [
+                    f
+                    for f in tbl_schema.fields
+                    if f.name != "op" and not f.name.startswith("_")
+                ]
             )
-            obs = None
-            if fast_count:
-                n_events = sum(r["cnt"] for r in line_stats)
-            else:
-                # NEVER a separate count() job: on the native path that
-                # would re-scan and re-parse every file once more before
-                # the merge scans them again. Observed metrics ride the
-                # merge write's own action for free.
-                from pyspark.sql import Observation
+            incoming = T.StructType(
+                [
+                    f
+                    for f in events.schema.fields
+                    if f.name != "op" and not f.name.startswith("_")
+                ]
+            )
+            d = diff_schemas(tbl_clean, incoming, cfg.rename_hints)
+            for old, new in d.renamed.items():
+                self.lake.rename_column(old, new)
+            if not d.is_noop:
+                schema_diff = d.to_dict()
 
-                obs = Observation()
-                events = events.observe(obs, F.count(F.lit(1)).alias("n"))
-                n_events = -1  # filled from obs after the merge action runs
-            # error tolerance: unparseable records (null keys/ts after the
-            # typed parse) are quarantined, not fatal — the reference warns
-            # and continues on bad files (FsSourceTask.java:101-105)
-            key_cols = [c for c in (*cfg.keys, cfg.ts_col) if c in events.columns]
-            if key_cols:
-                cond = " AND ".join(f"`{c}` IS NOT NULL" for c in key_cols)
-                events = events.filter(cond)
+        # scanner bookkeeping never reaches the table: _src_end/_line_no
+        # exist only for the scan (LWW ties break on _src_file/_src_offset,
+        # which ARE lineage) — merging them would store two dead int64
+        # columns in every data file and leak them through read()
+        events = events.drop("_src_end", "_line_no")
 
-            # schema evolution (M4): detect adds/renames vs the table schema;
-            # renames apply as metadata-only commits, adds flow through the
-            # union-by-name merge; the diff lands in batch metrics/lineage
-            schema_diff = None
-            tbl_schema = self.lake.current_schema()
-            if tbl_schema is not None:
-                tbl_clean = T.StructType(
-                    [
-                        f
-                        for f in tbl_schema.fields
-                        if f.name != "op" and not f.name.startswith("_")
-                    ]
-                )
-                incoming = T.StructType(
-                    [
-                        f
-                        for f in events.schema.fields
-                        if f.name != "op" and not f.name.startswith("_")
-                    ]
-                )
-                d = diff_schemas(tbl_clean, incoming, cfg.rename_hints)
-                for old, new in d.renamed.items():
-                    self.lake.rename_column(old, new)
-                if not d.is_noop:
-                    schema_diff = d.to_dict()
+        folded: dict = {}
 
-            # per-file consumed offsets + failure flags from the stats pass;
-            # whole-file and columnar formats commit the full snapshot length
-            consumed: dict[str, int] = {r["_src_file"]: r["end"] for r in line_stats}
-            failed: set[str] = {
-                r["_src_file"] for r in line_stats if r["n_failed_ranges"] > 0
+        def fold_into_watermarks() -> dict:
+            # runs after the merge's data write, before its commit: the
+            # write ran the scan, so every scanned range has reported
+            folded["ranges"] = fold_outcomes(self._outcomes.value)
+            folded["md"] = {
+                "watermarks": self._watermark_updates(
+                    work, native_paths, folded["ranges"]
+                ),
+                "cleanup": finished,
             }
-            partial: set[str] = {
-                r["_src_file"] for r in line_stats if r["n_partial_ranges"] > 0
-            }
-            wm_updates = []
-            for w in work:
-                fmt = self._fmt_of(w.path)
-                if w.path in native_paths:
-                    # whole file consumed via the JVM-native scan
-                    end = w.snap_length
-                elif fmt in LINE_FORMATS:
-                    if w.path in failed:
-                        # ANY failed range ⇒ no progress for the whole file:
-                        # it is re-read from the committed offset next
-                        # trigger (reference semantics: warn + continue; the
-                        # idempotent MERGE absorbs the partial emit)
-                        end = w.start_offset
-                    else:
-                        end = consumed.get(w.path, w.start_offset)
-                else:
-                    end = w.snap_length
-                end = max(end, w.start_offset)
-                # compressed offsets are decompressed-bytes, so eof can NEVER
-                # be end>=size (decompressed end typically exceeds compressed
-                # size even when records were held back — e.g. by the
-                # records-per-file cap's PARTIAL marker); for compressed
-                # files eof means "stream fully consumed this trigger":
-                # every range read successfully, nothing held back
-                if _compressed(w.path):
-                    eof = w.path not in failed and w.path not in partial
-                else:
-                    eof = bool(end >= snap[w.path])
-                wm_updates.append(
-                    {
-                        "path": w.path,
-                        "committed_offset": int(end),
-                        "file_size": int(snap[w.path]),
-                        "eof": eof,
-                    }
-                )
+            return folded["md"]
 
-            # scanner bookkeeping never reaches the table: _src_end/_line_no
-            # exist only for offset stats (LWW ties break on
-            # _src_file/_src_offset, which ARE lineage) — merging them would
-            # store two dead int64 columns in every data file and leak them
-            # through read()
-            events = events.drop("_src_end", "_line_no")
-
-            def _stats_still_hold() -> None:
-                # persist() is a cache, not a barrier: if an executor lost
-                # cached scan partitions DURING the merge write and the
-                # recompute saw different bytes (a source file vanished
-                # mid-batch), the write is short while the already-collected
-                # offsets would still commit — silent loss. Scan ranges are
-                # pinned at planning (growth cannot change them), so
-                # re-running the cheap cached stats pass and comparing is an
-                # exact consistency check; a mismatch aborts BEFORE the
-                # commit and the batch replays cleanly.
-                if lines_df is None:
-                    return
-                again = {
-                    r["_src_file"]: (r["end"], r["cnt"], r["n_failed_ranges"])
-                    for r in lines_df.groupBy("_src_file")
-                    .agg(
-                        F.max("_src_end").alias("end"),
-                        F.count(F.when(F.col("_line_no") >= 0, 1)).alias("cnt"),
-                        F.count(
-                            F.when(F.col("_line_no") == LINE_NO_RANGE_FAILED, 1)
-                        ).alias("n_failed_ranges"),
-                    )
-                    .collect()
-                }
-                before = {
-                    r["_src_file"]: (r["end"], r["cnt"], r["n_failed_ranges"])
-                    for r in line_stats
-                }
-                if again != before:
-                    raise RuntimeError(
-                        "scan results changed between offset stats and the "
-                        "merge write (cached partitions recomputed over "
-                        "changed files) — aborting before commit; the batch "
-                        "will replay"
-                    )
-
+        with _keep_empty_stages(self.spark):
             commit = self.lake.merge(
                 events,
                 batch_id=batch_id,
-                app_metadata={"watermarks": wm_updates, "cleanup": finished},
                 write_salt=(
                     self._auto_salt if cfg.write_salt == "auto" else cfg.write_salt
                 ),
-                precommit_check=_stats_still_hold,
+                precommit_check=fold_into_watermarks,
             )
-            if cfg.write_salt == "auto":
-                self._update_auto_salt(commit)
-            if obs is not None:
-                # the merge's write action has run, so the metric is ready
-                # (no blocking wait, no extra job)
-                n_events = int(obs.get["n"])
-        finally:
-            for p in lines_parts:
-                p.unpersist()
+        if cfg.write_salt == "auto":
+            self._update_auto_salt(commit)
+        if commit.app_metadata != folded.get("md"):
+            # another run committed this batch_id first (merge's replay or
+            # split-brain guard returned its commit): finish THAT commit,
+            # as crash recovery would
+            return self._finish_recovered(commit, seq, t0)
+        wm_updates = folded["md"]["watermarks"]
+        counts = obs.get
 
         cleaned = self._cleanup(finished)
         self.watermarks.commit(wm_updates, seq, removed_paths=cleaned + wm_purge)
@@ -849,12 +730,91 @@ class IngestEngine:
             self.lake.vacuum()
 
         res = BatchResult(
-            batch_id, seq, len(work), n_events,
+            batch_id, seq, len(work), int(counts["n"]),
             commit.metrics.get("rows_written", 0), cleaned=cleaned,
             duration_s=time.monotonic() - t0, schema_diff=schema_diff,
+            quarantined=int(counts["quarantined"]),
+            ranges=_range_counts(folded["ranges"]),
         )
         self._log_metrics(res, commit.metrics, added=commit.added, version=commit.version)
         return res
+
+    def _finish_recovered(self, commit, seq: int, t0: float) -> BatchResult:
+        """Watermark/cleanup half of a batch whose MERGE is already in the
+        lake: its offsets and cleanup list come from the commit's
+        app_metadata, so the replay reads nothing."""
+        cfg = self.config
+        md = commit.app_metadata or {}
+        cleaned = self._cleanup(md.get("cleanup", []))
+        self.watermarks.commit(md.get("watermarks", []), seq, removed_paths=cleaned)
+        if cfg.discovery_ack_fn is not None:
+            cfg.discovery_ack_fn(
+                {w["path"] for w in md.get("watermarks", [])}
+                | set(md.get("cleanup", []))
+                | self._vanished
+            )
+            self._vanished = set()
+        res = BatchResult(
+            commit.batch_id, seq, len(md.get("watermarks", [])), 0,
+            commit.metrics.get("rows_written", 0), recovered=True,
+            cleaned=cleaned, duration_s=time.monotonic() - t0,
+        )
+        self._log_metrics(res, commit.metrics, version=commit.version)
+        return res
+
+    def _watermark_updates(
+        self,
+        work: list[WorkItem],
+        native_paths: set[str],
+        ranges: dict[tuple[str, int], RangeOutcome],
+    ) -> list[dict]:
+        """Per-file watermark rows from the folded range outcomes;
+        whole-file and columnar formats commit the full snapshot length."""
+        consumed: dict[str, int] = {}
+        failed: set[str] = set()
+        partial: set[str] = set()
+        for o in ranges.values():
+            consumed[o.path] = max(consumed.get(o.path, o.consumed_end), o.consumed_end)
+            if o.kind == RANGE_FAILED:
+                failed.add(o.path)
+            elif o.kind == RANGE_PARTIAL:
+                partial.add(o.path)
+        out = []
+        for w in work:
+            if w.path in native_paths:
+                # whole file consumed via the JVM-native scan
+                end = w.snap_length
+            elif self._fmt_of(w.path) in LINE_FORMATS:
+                if w.path in failed:
+                    # ANY failed range ⇒ no progress for the whole file:
+                    # it is re-read from the committed offset next
+                    # trigger (reference semantics: warn + continue; the
+                    # idempotent MERGE absorbs the partial emit)
+                    end = w.start_offset
+                else:
+                    end = consumed.get(w.path, w.start_offset)
+            else:
+                end = w.snap_length
+            end = max(end, w.start_offset)
+            # compressed offsets are decompressed-bytes, so eof can NEVER
+            # be end>=size (decompressed end typically exceeds compressed
+            # size even when records were held back — e.g. by the
+            # records-per-file cap's PARTIAL outcome); for compressed
+            # files eof means "stream fully consumed this trigger":
+            # every range read successfully, nothing held back
+            if _compressed(w.path):
+                eof = w.path not in failed and w.path not in partial
+            else:
+                eof = bool(end >= w.snap_length)
+            out.append(
+                {
+                    "path": w.path,
+                    "committed_offset": int(end),
+                    "file_size": int(w.snap_length),
+                    "eof": eof,
+                }
+            )
+        return out
 
     def run(self, policy, stop_on_error: bool = False) -> list[BatchResult]:
         """Drain a trigger policy (streaming/triggers.py).
@@ -873,11 +833,7 @@ class IngestEngine:
             except Exception as e:
                 if stop_on_error:
                     raise
-                import sys
-                import traceback
-
-                print(f"kcfs: batch failed, will retry next trigger: {e}", file=sys.stderr)
-                traceback.print_exc()
+                log.exception("batch failed, will retry next trigger: %s", e)
         return results
 
     # ---------------------------------------------------------- auto salt
@@ -925,9 +881,7 @@ class IngestEngine:
                 # transient I/O only — deterministic config errors
                 # (unknown mode, missing move dir, cross-FS move) raise at
                 # __init__ or propagate here instead of retrying forever
-                import sys
-
-                print(f"kcfs: cleanup failed for {p}, will retry: {e}", file=sys.stderr)
+                log.warning("cleanup failed for %s, will retry: %s", p, e)
         return done
 
     def _cleanup_one(self, p: str, mode: str) -> None:
@@ -990,6 +944,8 @@ class IngestEngine:
             "recovered": res.recovered,
             "cleaned": len(res.cleaned),
             "duration_s": round(res.duration_s, 4),
+            "quarantined": res.quarantined,
+            "ranges": res.ranges,
             "merge": merge_metrics,
         }
         if res.schema_diff:
@@ -1001,6 +957,49 @@ class IngestEngine:
             rec["rows_per_bucket"] = {str(k): v for k, v in sorted(per_bucket.items())}
         with open(self._metrics_path, "a") as f:
             f.write(json.dumps(rec) + "\n")
+
+
+def fold_outcomes(outcomes: list[RangeOutcome]) -> dict[tuple[str, int], RangeOutcome]:
+    """One outcome per scanned range, keyed (path, range_start). Spark
+    re-adds the accumulator updates of a re-executed scan task: identical
+    duplicates collapse into one. Two different outcomes for one range mean
+    the bytes changed between the two scans (a source file vanished or was
+    rewritten mid-batch), so the write may not match any offset derived
+    from them — raising here, before the commit, makes the batch replay."""
+    out: dict[tuple[str, int], RangeOutcome] = {}
+    for o in outcomes:
+        seen = out.setdefault((o.path, o.range_start), o)
+        if seen != o:
+            raise RuntimeError(
+                f"range {o.path}@{o.range_start} reported two outcomes "
+                f"({tuple(seen)} and {tuple(o)}): the scan results changed "
+                "during the merge write — aborting before commit; the batch "
+                "will replay"
+            )
+    return out
+
+
+@contextmanager
+def _keep_empty_stages(spark: SparkSession):
+    """AQE's empty-relation rule off for the merge only: when every record
+    is quarantined, the rule drops the write's empty input stage with its
+    CollectMetrics node, and Observation.get fails after the commit."""
+    key = "spark.sql.adaptive.optimizer.excludedRules"
+    rule = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, ",".join(filter(None, [before, rule])))
+    try:
+        yield
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+def _range_counts(ranges: dict) -> dict[str, int]:
+    kinds = [o.kind for o in ranges.values()]
+    return {k: kinds.count(k) for k in (RANGE_OK, RANGE_PARTIAL, RANGE_FAILED)}
 
 
 def _fs_for_uri(uri: str):

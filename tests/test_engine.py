@@ -570,19 +570,20 @@ def test_torn_line_at_snapshot_boundary_held_back(spark, tmp_path):
     with open(p, "ab") as f:
         f.write(last[cut:])
 
-    lines_df, events, native, parts = engine._read(work)
-    try:
-        texts = [r.value for r in lines_df.filter("_line_no >= 0").collect()]
-        assert len(texts) == len(rows) - 1  # torn record held back entirely
-        assert all(_json.loads(t) for t in texts)  # every emitted line parses
-        from kafka_connect_fs_spark.sources.readers import LINE_NO_RANGE_PARTIAL
+    from kafka_connect_fs_spark.sources.readers import (
+        RANGE_PARTIAL,
+        outcome_accumulator,
+    )
 
-        markers = lines_df.filter(f"_line_no = {LINE_NO_RANGE_PARTIAL}").collect()
-        assert len(markers) == 1  # tail pending -> not eof, re-read next trigger
-        assert markers[0]._src_end == snap_len - cut
-    finally:
-        for part in parts:
-            part.unpersist()
+    acc = outcome_accumulator(spark)
+    events, native = engine._read(work, acc)
+    got = events.collect()
+    assert len(got) == len(rows) - 1  # torn record held back entirely
+    assert all(r.conv_id is not None for r in got)  # every emitted line parses
+    # tail pending -> not eof, re-read next trigger
+    assert [(o.kind, o.consumed_end) for o in acc.value] == [
+        (RANGE_PARTIAL, snap_len - cut)
+    ]
 
     # and end-to-end: the next engine pass picks the completed line up
     engine.run_once()
@@ -1137,3 +1138,166 @@ def test_watermark_old_layout_migration(spark, tmp_path):
     store.commit([_wm_row("/old/c", off=1)], 4)
     fresh = WatermarkStore(spark, str(root))
     assert set(fresh.load_dict()) == {"/old/a", "/old/b", "/old/c"}
+
+
+# ------------------------------------------- one Spark pass per tail batch
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    import time
+
+    time.sleep(1.0)  # the status store is fed by an asynchronous listener
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_tail_batch_runs_only_the_merge_jobs(spark, tmp_path):
+    """A tail batch (offset > 0, no compaction) is one Spark pass: the
+    merge's data write runs the scanner and the offsets come back from it.
+    Every job of run_once belongs to the merge, so a change that adds a
+    stats pass, a count or a consistency re-scan fails here."""
+    engine = make_engine(spark, tmp_path)
+    rows = transcript_change_events(8, 4, seed=3)
+    half = len(rows) // 2
+    paths = [str(tmp_path / "src" / f"{n}.jsonl") for n in "ab"]
+    for p, part in zip(paths, (rows[:half:2], rows[1:half:2])):
+        write_jsonl(part, p)
+    engine.run_once()
+    for p, part in zip(paths, (rows[half::2], rows[half + 1 :: 2])):
+        append_jsonl(part, p)
+
+    sc = spark.sparkContext
+    real_merge = engine.lake.merge
+
+    def merge_in_own_group(*a, **kw):
+        sc.setLocalProperty("spark.jobGroup.id", "tail-batch-merge")
+        try:
+            return real_merge(*a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", "tail-batch")
+
+    engine.lake.merge = merge_in_own_group
+    sc.setLocalProperty("spark.jobGroup.id", "tail-batch")
+    try:
+        res = engine.run_once()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res.n_events == len(rows) - half and res.quarantined == 0
+    assert res.ranges == {"ok": 2, "partial": 0, "failed": 0}
+    assert _jobs_in_group(spark, "tail-batch") == 0  # nothing outside the merge
+    assert 1 <= _jobs_in_group(spark, "tail-batch-merge") <= 2
+    assert_matches_oracle(engine, rows)
+
+
+def test_fold_outcomes_collapses_duplicates_and_rejects_conflicts():
+    from kafka_connect_fs_spark.sources.readers import (
+        RANGE_FAILED,
+        RANGE_OK,
+        RangeOutcome,
+    )
+    from kafka_connect_fs_spark.streaming.engine import fold_outcomes
+
+    a = RangeOutcome("/f", 0, 10, RANGE_OK, 2)
+    b = RangeOutcome("/f", 10, 20, RANGE_OK, 1)
+    # a re-executed task re-adds its updates
+    assert fold_outcomes([a, b, a, a]) == {("/f", 0): a, ("/f", 10): b}
+    with pytest.raises(RuntimeError, match="two outcomes"):
+        fold_outcomes([a, RangeOutcome("/f", 0, 0, RANGE_FAILED, 0)])
+
+
+def test_conflicting_range_outcomes_abort_before_commit(spark, tmp_path, monkeypatch):
+    """Two different outcomes for one range (a re-executed scan task saw
+    other bytes) abort the batch after the data write and before the
+    commit: no new lake version, watermarks unchanged; the replay is clean."""
+    from kafka_connect_fs_spark.sources.readers import RANGE_OK, RangeOutcome
+
+    engine = make_engine(spark, tmp_path)
+    rows = transcript_change_events(5, 4, seed=5)
+    half = len(rows) // 2
+    p = str(tmp_path / "src" / "a.jsonl")
+    write_jsonl(rows[:half], p)
+    engine.run_once()
+    append_jsonl(rows[half:], p)
+    version, wm = engine.lake.latest_version(), engine.watermarks.load_dict()
+    start = wm[p]["committed_offset"]
+
+    real_read = engine._read
+
+    def seeded_read(work, outcomes):
+        outcomes.add([RangeOutcome(p, start, start + 1, RANGE_OK, 1)])
+        return real_read(work, outcomes)
+
+    monkeypatch.setattr(engine, "_read", seeded_read)
+    with pytest.raises(RuntimeError, match="two outcomes"):
+        engine.run_once()
+    assert engine.lake.latest_version() == version
+    assert engine.watermarks.load_dict() == wm
+    monkeypatch.setattr(engine, "_read", real_read)
+    assert engine.run_once().n_events == len(rows) - half
+    assert_matches_oracle(engine, rows)
+
+
+def test_already_committed_batch_commits_its_own_watermarks(spark, tmp_path):
+    """When merge hands back a batch another run already committed (replay
+    or split-brain guard), the engine commits the watermarks stored in that
+    commit, not the ones its own scan would have produced."""
+    engine = make_engine(spark, tmp_path)
+    rows = transcript_change_events(4, 2, seed=9)
+    p = str(tmp_path / "src" / "a.jsonl")
+    write_jsonl(rows, p)
+    theirs = [{"path": p, "committed_offset": 7, "file_size": 7, "eof": False}]
+    real_merge = engine.lake.merge
+
+    def racing_merge(events, batch_id=None, **kw):
+        real_merge(events, batch_id=batch_id,
+                   app_metadata={"watermarks": theirs, "cleanup": []})
+        return real_merge(events, batch_id=batch_id, **kw)
+
+    engine.lake.merge = racing_merge
+    res = engine.run_once()
+    assert res.recovered and res.n_events == 0
+    assert engine.watermarks.load_dict()[p]["committed_offset"] == 7
+
+
+def test_fully_quarantined_batch_completes_in_one_trigger(spark, tmp_path):
+    """An offset-0 file whose every record lacks a key: the batch commits,
+    counts its records as seen and quarantined, and finishes the file."""
+    import json
+
+    rules = "spark.sql.adaptive.optimizer.excludedRules"
+    session_rules = spark.conf.get(rules, None)
+    engine = make_engine(spark, tmp_path)
+    p = str(tmp_path / "src" / "nokeys.jsonl")
+    with open(p, "w") as f:
+        for i in range(5):
+            f.write(json.dumps({"turn_idx": i, "ts": "2024-01-01 00:00:00"}) + "\n")
+    res = engine.run_once()
+    # the merge plans without AQE's empty-relation rule; the session does not
+    assert spark.conf.get(rules, None) == session_rules
+    assert (res.n_events, res.quarantined, res.rows_written) == (5, 5, 0)
+    assert not res.recovered
+    rec = [json.loads(l) for l in open(tmp_path / "ckpt" / "metrics.jsonl")][-1]
+    assert rec["n_events"] == 5 and rec["quarantined"] == 5
+    assert engine.watermarks.load_dict()[p]["eof"] is True
+    assert engine.run_once().n_files == 0
+
+
+def test_outcome_channel_does_not_grow_with_batches(spark, tmp_path):
+    """One outcome accumulator per engine, emptied per batch: PySpark keeps
+    every driver-side accumulator for the life of the process, so one per
+    batch would grow the driver with the batch count."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    engine = make_engine(spark, tmp_path)
+    rows = transcript_change_events(6, 4, seed=11)
+    parts = [rows[i::5] for i in range(5)]
+    p = str(tmp_path / "src" / "a.jsonl")
+    write_jsonl(parts[0], p)
+    engine.run_once()
+    registered = len(_accumulatorRegistry)
+    for part in parts[1:]:
+        append_jsonl(part, p)
+        res = engine.run_once()
+        assert len(_accumulatorRegistry) == registered
+        assert res.ranges == {"ok": 1, "partial": 0, "failed": 0}
+        assert len(engine._outcomes.value) == 1  # this batch's range only
+    assert_matches_oracle(engine, rows)

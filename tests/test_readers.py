@@ -14,11 +14,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_fs_spark.sources.readers import (
+    RANGE_FAILED,
+    RANGE_OK,
+    RANGE_PARTIAL,
     WorkItem,
     detect_delimiter,
     format_for,
     infer_csv_header,
     infer_json_schema,
+    outcome_accumulator,
     parse_csv,
     parse_xml_lines,
     parse_fixed_width,
@@ -386,10 +390,13 @@ def test_rows_to_skip_preamble(spark, tmp_path):
     out = read_lines(spark, work(str(p)), rows_to_skip=2).orderBy("_src_offset").collect()
     assert [r.value for r in out] == ["a,b", "1,2", "3,4"]
     # consumed offset still covers the skipped preamble bytes
-    marked = read_lines(spark, work(str(p)), rows_to_skip=2, with_markers=True)
+    acc = outcome_accumulator(spark)
+    read_lines(spark, work(str(p)), rows_to_skip=2, outcomes=acc).collect()
     import os as _os
 
-    assert marked.agg(F.max("_src_end")).first()[0] == _os.path.getsize(p)
+    assert [(o.kind, o.consumed_end, o.records) for o in acc.value] == [
+        (RANGE_OK, _os.path.getsize(p), 3)
+    ]
     # skipping more lines than the file has: everything consumed, nothing emitted
     none = read_lines(spark, work(str(p)), rows_to_skip=99).collect()
     assert none == []
@@ -594,29 +601,22 @@ def test_crlf_line_endings(spark, tmp_path):
 def test_torn_line_across_split_boundary_not_skipped(spark, tmp_path):
     """A line that (a) straddles a split boundary and (b) grew past the
     listing snapshot must be held back by its OWNING split, and the next
-    split's skip-ahead must not out-claim the hold-back with an OK marker
-    whose end jumps past the held-back bytes (max(_src_end) is what the
-    engine commits)."""
-    from kafka_connect_fs_spark.sources.readers import (
-        LINE_NO_RANGE_OK,
-        LINE_NO_RANGE_PARTIAL,
-    )
-
+    split's skip-ahead must not out-claim the hold-back with an OK outcome
+    whose end jumps past the held-back bytes (the max consumed end is what
+    the engine commits)."""
     p = tmp_path / "grow.txt"
     # on disk: "aaaa\n" + 14-byte torn tail (no newline, still growing)
     p.write_bytes(b"aaaa\nbbbbbbbbbbcccc")
     snap = 15  # listing-time snapshot, mid-tail
     items = [WorkItem(str(p), 0, snap)]
     # max_split_bytes=8 → splits [0,8) and [8,15); the tail straddles 8
-    out = read_lines(
-        spark, items, max_split_bytes=8, with_markers=True
-    ).collect()
-    records = [r for r in out if r._line_no >= 0]
-    assert [r.value for r in records] == ["aaaa"]  # torn tail never emitted
-    # committed offset = max(_src_end) must stay at the torn line's start
-    assert max(r._src_end for r in out) == 5
-    kinds = sorted(r._line_no for r in out if r._line_no < 0)
-    assert LINE_NO_RANGE_PARTIAL in kinds and LINE_NO_RANGE_OK not in kinds
+    acc = outcome_accumulator(spark)
+    out = read_lines(spark, items, max_split_bytes=8, outcomes=acc).collect()
+    assert [r.value for r in out] == ["aaaa"]  # torn tail never emitted
+    # committed offset = max consumed end must stay at the torn line's start
+    assert max(o.consumed_end for o in acc.value) == 5
+    kinds = sorted(o.kind for o in acc.value)
+    assert RANGE_PARTIAL in kinds and RANGE_OK not in kinds
     # once the line is finished on disk and the snapshot covers it, the
     # resume from offset 5 yields it exactly once
     p.write_bytes(b"aaaa\nbbbbbbbbbbccccdd\n")
@@ -737,3 +737,55 @@ def test_whole_file_vanished_is_skipped_not_fatal(spark, tmp_path):
 
     rows = read_whole_files(spark, items).collect()
     assert [r._src_file for r in rows] == [keep]
+
+
+def test_scan_packs_ranges_into_host_sized_tasks(spark, tmp_path):
+    """Many small ranges scan in at most defaultParallelism Python tasks,
+    and an unreadable range reports FAILED at its start instead of failing
+    the scan."""
+    items = []
+    for i in range(12):
+        p = tmp_path / f"f{i}.txt"
+        write_lines(p, [f"{i}-{j}" for j in range(i + 1)])
+        items.append(WorkItem(str(p), 0, os.path.getsize(p)))
+    gone = str(tmp_path / "gone.txt")
+    items.append(WorkItem(gone, 3, 100))
+    acc = outcome_accumulator(spark)
+    df = read_lines(spark, items, outcomes=acc)
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert df.count() == sum(range(1, 13))
+    by_path = {o.path: o for o in acc.value}
+    assert by_path.pop(gone) == (gone, 3, 3, RANGE_FAILED, 0)
+    assert all(o.kind == RANGE_OK for o in by_path.values())
+    assert sum(o.records for o in by_path.values()) == sum(range(1, 13))
+
+
+def test_large_scan_keeps_one_task_per_split(spark, tmp_path):
+    """Packing only saves worker start-up on small ranges: a scan of more
+    splits than defaultParallelism keeps one task per split, so one large
+    file still spreads over every core and a retry re-scans one split."""
+    p = tmp_path / "big.txt"
+    write_lines(p, [f"line-{i:04d}" for i in range(1000)])
+    size = os.path.getsize(p)
+    dp = spark.sparkContext.defaultParallelism
+    split = size // (2 * dp) + 1
+    n_splits = -(-size // split)
+    assert n_splits > dp
+    acc = outcome_accumulator(spark)
+    df = read_lines(spark, [WorkItem(str(p), 0, size)], max_split_bytes=split,
+                    outcomes=acc)
+    assert df.rdd.getNumPartitions() == n_splits
+    assert df.count() == 1000
+    assert len(acc.value) == n_splits
+    assert all(o.kind == RANGE_OK for o in acc.value)
+    assert max(o.consumed_end for o in acc.value) == size
+
+
+def test_pack_balances_bins_largest_first():
+    from kafka_connect_fs_spark.sources.readers import _pack
+
+    bins = _pack([10, 9, 1, 1, 1, 4], 2)
+    assert sorted(i for b in bins for i in b) == list(range(6))
+    loads = sorted(sum([10, 9, 1, 1, 1, 4][i] for i in b) for b in bins)
+    assert loads == [13, 13]
+    assert len(_pack([5, 5], 8)) == 2  # never more bins than items
