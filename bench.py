@@ -166,9 +166,11 @@ def _steady_state(
 ) -> dict:
     """THE merge-on-read claim, measured: seed a table ~`seed_rep`× larger
     than each update batch, then apply small update batches whose keys are
-    spread across every bucket — the steady-state CDC shape. CoW must
-    rewrite every affected bucket (≈ the whole table) per batch; MoR
-    appends one delta set sized to the batch. Run via SPARK_GRAFT_STEADY=1."""
+    spread across every bucket — the steady-state CDC shape. The "mor"
+    side merges each batch as one delta set sized to the batch. The "cow"
+    side measures the resolve-free layout: merge() then
+    compact(min_files_per_bucket=2), which rewrites every touched bucket
+    (≈ the whole table) per batch. Run via SPARK_GRAFT_STEADY=1."""
     from pyspark.sql import functions as F
 
     from kafka_connect_fs_spark.plans.lake import LakeTable
@@ -192,7 +194,7 @@ def _steady_state(
         for mode in ("mor", "cow"):
             tbl = LakeTable.create(
                 spark, os.path.join(base, mode), keys=["conv_id", "turn_idx"],
-                ts_col="ts", n_buckets=32, merge_mode=mode,
+                ts_col="ts", n_buckets=32,
             )
             t0 = time.monotonic()
             tbl.merge(seed.drop("event_id"), batch_id="seed")
@@ -209,10 +211,16 @@ def _steady_state(
                     "_src_file", "_src_offset",
                 )
                 t0 = time.monotonic()
-                c = tbl.merge(src, batch_id=f"b{b}")
+                commits = [tbl.merge(src, batch_id=f"b{b}")]
+                if mode == "cow":
+                    commits.append(tbl.compact(min_files_per_bucket=2))
                 times.append(round(time.monotonic() - t0, 3))
-                touched.append(c.metrics["files_added"] + c.metrics["files_removed"])
-                rows_written.append(c.metrics["rows_written"])
+                touched.append(sum(
+                    c.metrics["files_added"] + c.metrics["files_removed"]
+                    for c in commits
+                ))
+                # the last commit's files: the delta, or the rewritten buckets
+                rows_written.append(sum(a["rows"] for a in commits[-1].added))
             out[mode] = {
                 "seed_seconds": seed_s,
                 "per_batch_seconds": times,
@@ -221,8 +229,9 @@ def _steady_state(
                 "mean_update_batch_s": round(sum(times) / len(times), 3),
             }
         out["seed_events"] = seed.count()
-        # CoW rewrites the full resolved content of every affected bucket,
-        # so its per-batch rows_written IS the resolved table size
+        # the compaction rewrites the full resolved content of every
+        # touched bucket, so its per-batch rows_written IS the resolved
+        # table size
         out["resolved_table_rows"] = out["cow"]["rows_written_per_batch"][0]
         out["update_batch_rows"] = out["mor"]["rows_written_per_batch"][0]
         out["write_amp_ratio_cow_over_mor"] = round(

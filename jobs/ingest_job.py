@@ -44,7 +44,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--reader-options-json", default=None,
                    help="inline JSON or a path to a JSON file with per-reader "
                         "options (e.g. cobol copybook_content, csv sep)")
-    p.add_argument("--merge-mode", default="mor", choices=["mor", "cow"])
     p.add_argument("--write-salt", default="1",
                    help="spread each bucket's delta write over N tasks for "
                         "hot conv_id batches (int), or 'auto' to let the "
@@ -108,7 +107,6 @@ def main(argv: list[str] | None = None) -> int:
             cleanup_move_dir=args.cleanup_move_dir,
             cleanup_move_prefix=args.cleanup_move_prefix,
             reader_options=reader_options,
-            merge_mode=args.merge_mode,
             write_salt=(
                 "auto" if args.write_salt == "auto" else int(args.write_salt)
             ),

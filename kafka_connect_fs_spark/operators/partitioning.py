@@ -87,7 +87,7 @@ def exact_slot_rekey(slot: Column, n_slots: int) -> Column:
 def dense_slot(col: Column, values) -> Column:
     """Map each distinct int in ``values`` to its dense index [0, len).
 
-    For writes touching a known SUBSET of buckets (CoW merge, compaction,
+    For writes touching a known SUBSET of buckets (compaction and
     tombstone expiry — the driver already holds the affected bucket ids),
     ``exact_slot_rekey(dense_slot(bucket, affected), len(affected))``
     gives one task per affected bucket with zero empties, instead of

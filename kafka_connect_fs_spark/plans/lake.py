@@ -5,17 +5,15 @@ Why this exists: BASELINE.json mandates "MERGE INTO an Iceberg table keyed
 iceberg-spark-runtime jar (and no network), so this module provides an
 Iceberg-*shaped* table: an append-only JSON commit log with periodic state
 checkpoints, immutable parquet data files hash-bucketed by key, snapshot
-reads, MERGE in copy-on-write OR merge-on-read mode, schema evolution
-(add / rename), and idempotent commits keyed by ``batch_id``. On a cluster
+reads, merge-on-read MERGE, schema evolution (add / rename), and
+idempotent commits keyed by ``batch_id``. On a cluster
 with Iceberg available, ``IngestEngine`` can swap this for
 ``spark.sql("MERGE INTO ...")`` without touching callers.
 
 Scale design (100 TB / 10^10 events):
-- Merge-on-read (the engine default): each batch appends ONE
-  bucket-partitioned delta file set — write amplification O(batch), never
-  O(table); readers LWW-resolve across files; compact() folds deltas down.
-  CoW remains for low-frequency loads touching few buckets (there, bucket
-  pruning bounds the rewrite: the driver collects *bucket ids*, never rows).
+- Merge-on-read: each batch appends ONE bucket-partitioned delta file
+  set — write amplification O(batch), never O(table); readers LWW-resolve
+  across files; compact() folds deltas down.
 - The per-key LWW resolve is a declarative aggregate (partial agg map-side),
   so hot conv_ids do not skew the shuffle (see operators/lww.py); AQE
   additionally splits any residual skewed partitions.
@@ -159,20 +157,14 @@ class _State:
 class LakeTable:
     """A keyed, bucketed, transactional parquet table supporting MERGE.
 
-    Keys + bucketing spec + merge mode are fixed at create time (like an
-    Iceberg partition spec); schema may evolve (add columns, rename columns).
+    Keys + bucketing spec are fixed at create time (like an Iceberg
+    partition spec); schema may evolve (add columns, rename columns).
 
-    ``merge_mode``:
-    - ``"cow"`` (copy-on-write): merge resolves LWW at write time and
-      rewrites every affected bucket — reads are resolve-free, but a
-      steady-state stream touching all buckets rewrites the whole table
-      per batch.
-    - ``"mor"`` (merge-on-read): merge appends one delta file set per
-      batch (write amplification O(batch), never O(table)); reads resolve
-      LWW across base+delta files; ``compact()`` folds deltas back into
-      one resolved file per bucket. This is the mode a 10^10-event
-      steady-state CDC stream needs (Iceberg's MoR row-level deletes have
-      the same shape).
+    Merge-on-read: merge appends one delta file set per batch (write
+    amplification O(batch), never O(table)); reads resolve LWW across
+    base+delta files; ``compact()`` folds deltas back into one resolved
+    file per bucket. This is the shape a 10^10-event steady-state CDC
+    stream needs (Iceberg's MoR row-level deletes have the same shape).
     """
 
     _ckpt_every = 25  # commits between _state checkpoints (Delta: 10)
@@ -190,7 +182,6 @@ class LakeTable:
         # state replay (each operation snapshots state before acting)
         self._base_n_buckets: int = meta["n_buckets"]
         self.n_buckets: int = meta["n_buckets"]
-        self.merge_mode: str = meta.get("merge_mode", "cow")
         self._mem: _State | None = None
         self._commit_cache: dict[str, Commit] = {}
         # eager replay on open: a table reopened after set_n_buckets must
@@ -206,10 +197,15 @@ class LakeTable:
         keys: Sequence[str],
         ts_col: str,
         n_buckets: int = 16,
-        merge_mode: str = "cow",
+        merge_mode: str = "mor",
     ) -> "LakeTable":
-        if merge_mode not in ("cow", "mor"):
-            raise ValueError(f"merge_mode must be 'cow' or 'mor', got {merge_mode!r}")
+        # the keyword stays for callers that still pass "mor"
+        if merge_mode != "mor":
+            raise ValueError(
+                f"merge_mode must be 'mor', got {merge_mode!r}: every merge "
+                "appends a delta; call compact() after merge() for one "
+                "resolved file per bucket"
+            )
         os.makedirs(os.path.join(root, _LOG_DIR), exist_ok=True)
         os.makedirs(os.path.join(root, _DATA_DIR), exist_ok=True)
         meta_path = os.path.join(root, _TABLE_META)
@@ -221,7 +217,9 @@ class LakeTable:
                         "keys": list(keys),
                         "ts_col": ts_col,
                         "n_buckets": n_buckets,
-                        "merge_mode": merge_mode,
+                        # older builds read a missing key as copy-on-write
+                        # and would skip the LWW resolve on read
+                        "merge_mode": "mor",
                     },
                     f,
                 )
@@ -433,8 +431,8 @@ class LakeTable:
         for old, new in renames.items():
             if old in df.columns and new in df.columns:
                 # files written before AND after the rename coexist (renames
-                # are metadata-only; merges rewrite buckets lazily): fold the
-                # old physical column into the new one
+                # are metadata-only; compaction rewrites buckets lazily): fold
+                # the old physical column into the new one
                 df = df.withColumn(new, F.coalesce(F.col(new), F.col(old))).drop(old)
             elif old in df.columns:
                 df = df.withColumnRenamed(old, new)
@@ -460,11 +458,11 @@ class LakeTable:
         )
 
     def _resolve(self, df: DataFrame) -> DataFrame:
-        """MoR read-time LWW resolve: one row per key across base+delta
-        files (map-side partial max_by — hot keys don't skew, see
-        operators/lww.py). CoW files are already resolved at write time."""
-        if self.merge_mode != "mor":
-            return df
+        """Read-time LWW resolve: one row per key across base+delta files
+        (map-side partial max_by — hot keys don't skew, see
+        operators/lww.py). Files that are already resolved (compaction
+        output, or a table an older build wrote copy-on-write) come out
+        unchanged."""
         if not all(k in df.columns for k in self.keys) or self.ts_col not in df.columns:
             return df  # never-written placeholder frame
         return lww_dedup(df, self.keys, self.ts_col)
@@ -472,7 +470,7 @@ class LakeTable:
     def read(
         self, at_version: int | None = None, columns: Sequence[str] | None = None
     ) -> DataFrame:
-        """User-facing view: LWW-resolved (MoR), tombstones filtered,
+        """User-facing view: LWW-resolved, tombstones filtered,
         lineage/bucket dropped.
 
         ``columns`` prunes the scan BELOW the LWW resolve: the MoR
@@ -676,8 +674,8 @@ class LakeTable:
         *partition of the key space* (which would break cross-day LWW:
         a key's versions must stay co-located by bucket).
 
-        Rows are filtered to ts_from <= ts < ts_to; in MoR mode, versions
-        are resolved among the in-range files — i.e. "latest state of the
+        Rows are filtered to ts_from <= ts < ts_to; versions are resolved
+        among the in-range files — i.e. "latest state of the
         keys as touched within the window", the incremental-export
         semantics. Files with unknown stats are conservatively read.
 
@@ -729,8 +727,8 @@ class LakeTable:
         (from_version, to_version] — the downstream-consumer API (a second
         pipeline tails THIS table like the engine tails files).
 
-        In MoR mode this is metadata-only: each merge commit's delta files
-        ARE its change batch (op column included, deletes as op='delete'),
+        This is metadata-only: each merge commit's delta files ARE its
+        change batch (op column included, deletes as op='delete'),
         so serving changes costs one file-list lookup plus a scan of
         exactly those files — no diffing of snapshots. Maintenance commits
         (compaction/expiry, batch_id None) rewrite physical layout without
@@ -740,10 +738,9 @@ class LakeTable:
         Vacuum interplay: change files of versions older than the latest
         snapshot stay on disk until vacuum() removes unreferenced files —
         use vacuum(retain_versions=N) to keep a changelog window readable.
-        Only supported in MoR mode (a CoW commit's files are whole
-        rewritten buckets, not changes)."""
-        if self.merge_mode != "mor":
-            raise ValueError("read_changes requires merge_mode='mor'")
+        A batch commit that removed files is a copy-on-write rewrite by an
+        older build: its files are whole resolved buckets, not changes, so
+        it raises instead of serving them."""
         to_v = self.latest_version() if to_version is None else to_version
         parts = []
         for name in self._list_commit_names():
@@ -753,6 +750,12 @@ class LakeTable:
             c = self._load_commit(name)
             if c.batch_id is None or not c.added:
                 continue  # maintenance commit: no new logical changes
+            if c.removed:
+                raise ValueError(
+                    f"read_changes: batch commit {c.version} rewrote whole "
+                    "buckets (copy-on-write by an older build); its files "
+                    "are not a change set"
+                )
             df = self._read_files([a["path"] for a in c.added])
             parts.append(
                 df.withColumn(
@@ -816,7 +819,12 @@ class LakeTable:
     ) -> Commit:
         """Idempotent MERGE: upsert rows of ``source`` keyed ``self.keys``
         with last-writer-wins on ``self.ts_col``; rows with ``op='delete'``
-        remove the key. Rewrites only the buckets present in the source.
+        remove the key (as tombstones that keep winning LWW).
+
+        Merge-on-read: ONE bucket-partitioned delta write, no target read,
+        no rewrite — write amplification is O(batch) however large the
+        table. Readers resolve LWW across files; compact() folds deltas
+        down (merge() then compact() leaves one resolved file per bucket).
 
         ``write_salt`` > 1 spreads each bucket's WRITE across that many
         tasks (deterministic salt from the full key) — the north-rule hot
@@ -836,7 +844,7 @@ class LakeTable:
         returned commit whose ``app_metadata`` differs came from the replay
         or split-brain guard: another run committed this ``batch_id``.
         """
-        write_salt = max(1, int(write_salt))
+        salt = max(1, int(write_salt))
         if batch_id is not None:
             existing = self.get_commit_by_batch_id(batch_id)
             if existing is not None:
@@ -853,44 +861,17 @@ class LakeTable:
         # refresh + capture the CURRENT bucket scheme once: the stamp, the
         # write placement and the manifest scheme tag must all agree even
         # if a concurrent set_n_buckets lands mid-merge
-        self._state_full()
+        st = self._state_full()
         nb = self.n_buckets
         src = src.withColumn(_BUCKET_COL, self._bucket_expr(self.keys[0], nb))
-        if self.merge_mode == "mor":
-            return self._merge_mor(
-                src, batch_id, app_metadata, write_salt, precommit_check, nb
-            )
-        # persist: the source feeds two jobs (bucket discovery + the merge
-        # write) — don't recompute the upstream parse twice
-        src = src.persist()
-        try:
-            return self._merge_persisted(
-                src, batch_id, app_metadata, write_salt, precommit_check,
-                scheme=nb,
-            )
-        finally:
-            src.unpersist()
-
-    def _merge_mor(
-        self,
-        src: DataFrame,
-        batch_id: str | None,
-        app_metadata: dict | None,
-        write_salt: int = 1,
-        precommit_check=None,
-        scheme: int | None = None,
-    ) -> Commit:
-        """Merge-on-read apply: ONE bucket-partitioned delta write, no
-        target read, no rewrite — write amplification is O(batch) however
-        large the table (the CoW path rewrites every affected bucket, which
-        at steady state is the whole table per micro-batch). Readers
-        resolve LWW across files; compact() folds deltas down."""
-        st = self._state_full()
-        nb = scheme or self.n_buckets
         version = st.version + 1
+        # unique dir per ATTEMPT, not per version: two writers racing to the
+        # same version must never write into the same directory (the loser's
+        # mode('overwrite') would delete the winner's already-committed
+        # files before losing the log race); losers leave only orphan files
+        # that vacuum() removes
         cdir_rel = f"c{version:020d}-{uuid.uuid4().hex[:8]}"
         cdir = os.path.join(self.root, _DATA_DIR, cdir_rel)
-        salt = write_salt
         if salt > 1:
             # deterministic salt over (key, ts): a hot bucket's rows —
             # including many versions of ONE hot key — spread over `salt`
@@ -921,10 +902,10 @@ class LakeTable:
         # retry through commit races: a separate maintenance process
         # (compaction/expiry) landing a commit between this merge's state
         # read and its commit write is the NORMAL deployment, not an
-        # error. A MoR delta only ADDS files and is version-independent,
-        # so re-attempting at the new head is always safe — only the
-        # schema union must be recomputed against the new head's schema
-        # (the concurrent commit may itself have evolved it).
+        # error. A delta only ADDS files and is version-independent, so
+        # re-attempting at the new head is always safe — only the schema
+        # union must be recomputed against the new head's schema (the
+        # concurrent commit may itself have evolved it).
         for _attempt in range(4):
             commit = Commit(
                 version=version,
@@ -936,7 +917,6 @@ class LakeTable:
                 ),
                 app_metadata=app_metadata or {},
                 metrics={
-                    "mode": "mor",
                     "affected_buckets": len({a["bucket"] for a in added}),
                     "rows_written": sum(a["rows"] for a in added),
                     "files_added": len(added),
@@ -1003,159 +983,6 @@ class LakeTable:
                 fields.append(f)
         fields.extend(f for f in new.fields if f.name in by_name)
         return T.StructType(fields).json()
-
-    def _merge_persisted(
-        self,
-        src: DataFrame,
-        batch_id: str | None,
-        app_metadata: dict | None,
-        write_salt: int = 1,
-        precommit_check=None,
-        scheme: int | None = None,
-        _restarts: int = 0,
-    ) -> Commit:
-        nb = scheme or self.n_buckets
-        # Driver collects *bucket ids* only — bounded by n_buckets, never rows.
-        affected = sorted(
-            r[0] for r in src.select(_BUCKET_COL).distinct().collect()
-        )
-        # ONE state snapshot drives everything: the files read, the schema
-        # union AND the commit version (st.version + 1). Re-listing
-        # latest_version() after the read would let a concurrent commit
-        # land in between and be silently overwritten — deriving the
-        # version from the snapshot turns that race into the put-if-absent
-        # ConcurrentCommitError the commit protocol promises.
-        st = self._state_full()
-        live = st.live
-        # bucket-spec evolution: live files written under OLDER schemes
-        # bucket the same key differently — a CoW merge MUST rewrite every
-        # file that can hold a version of an affected key under ITS scheme
-        # (CoW reads are resolve-free, so missing one would leave stale
-        # versions visible). One tiny distinct-collect per extra scheme;
-        # the rewrite re-stamps under the current scheme, migrating them.
-        aff_by_scheme: dict[int, set] = {nb: set(affected)}
-        for s in {
-            a.get("scheme", self._base_n_buckets) for a in live.values()
-        } - {nb}:
-            aff_by_scheme[s] = {
-                r[0]
-                for r in src.select(
-                    self._bucket_expr(self.keys[0], s)
-                ).distinct().collect()
-            }
-        old_files = [
-            p
-            for p, a in live.items()
-            if a["bucket"] in aff_by_scheme[a.get("scheme", self._base_n_buckets)]
-        ]
-        target = self._read_files(old_files)
-
-        if target is not None:
-            if _OP_COL not in target.columns:
-                target = target.withColumn(_OP_COL, F.lit("upsert"))
-            merged_in = target.unionByName(src, allowMissingColumns=True)
-        else:
-            merged_in = src
-
-        resolved = lww_dedup(merged_in, self.keys, self.ts_col)
-        # deletes persist as TOMBSTONES (op='delete' rows): an older upsert
-        # replayed later must NOT resurrect the key, so the delete has to
-        # keep winning LWW. read() filters them out; a compaction policy can
-        # expire tombstones older than the max replay horizon.
-        # recompute bucket post-union (schema-evolution may have nulled it on
-        # old rows only in pathological cases; cheap and safe)
-        resolved = resolved.withColumn(
-            _BUCKET_COL, self._bucket_expr(self.keys[0], nb)
-        )
-
-        version = st.version + 1
-        # unique dir per ATTEMPT, not per version: two writers racing to the
-        # same version must never write into the same directory (the loser's
-        # mode('overwrite') would delete the winner's already-committed
-        # files before losing the log race); losers leave only orphan files
-        # that vacuum() removes
-        cdir_rel = f"c{version:020d}-{uuid.uuid4().hex[:8]}"
-        cdir = os.path.join(self.root, _DATA_DIR, cdir_rel)
-        # exact placement over the AFFECTED buckets only (the driver already
-        # holds `affected`): one write task per touched bucket(/salt), no
-        # birthday quantization, no empty tasks for untouched buckets.
-        # During a bucket-spec transition (old-scheme files live), rows
-        # from rewritten old-scheme files re-stamp into CURRENT-scheme
-        # buckets outside `affected` — use the full range so every row has
-        # an exact slot (empty slots write nothing; transition-only cost)
-        slot_domain = list(range(nb)) if len(aff_by_scheme) > 1 else affected
-        slot = dense_slot(F.col(_BUCKET_COL), slot_domain)
-        n_slots = max(len(slot_domain), 1)
-        if write_salt > 1:
-            # same hot-bucket write spreading as the MoR path
-            slot = slot * F.lit(write_salt) + F.pmod(
-                F.xxhash64(*[F.col(k) for k in self.keys], F.col(self.ts_col)),
-                F.lit(write_salt),
-            )
-            n_slots *= write_salt
-        (
-            resolved.withColumn("_pb", F.col(_BUCKET_COL))
-            .repartition(n_slots, exact_slot_rekey(slot, n_slots))
-            .write.partitionBy("_pb")
-            .mode("overwrite")
-            .parquet(cdir)
-        )
-
-        added = self._scan_written(cdir, cdir_rel, nb)
-        if precommit_check is not None:
-            app_metadata = precommit_check() or app_metadata
-        # retry through commit races (same deployment reality as the MoR
-        # path: a separate maintenance process commits concurrently). A
-        # CoW rewrite REMOVES old_files, so re-attempting at the new head
-        # is safe only while those inputs are all still live; if a
-        # concurrent commit replaced them (compaction of the same
-        # buckets), this rewrite is stale — recompute the whole merge
-        # from a fresh snapshot (bounded; the orphaned write is
-        # vacuum-able).
-        for _attempt in range(4):
-            commit = Commit(
-                version=version,
-                batch_id=batch_id,
-                added=added,
-                removed=old_files,
-                # union with the PREVIOUS table schema: the target read
-                # covered only affected buckets, so columns living solely
-                # in untouched buckets' files must not vanish from the
-                # tracked schema
-                schema_json=self._union_schema_json(
-                    st.schema_json, resolved.drop(_BUCKET_COL).schema
-                ),
-                app_metadata=app_metadata or {},
-                metrics={
-                    "affected_buckets": len(affected),
-                    "rows_written": sum(a["rows"] for a in added),
-                    "files_added": len(added),
-                    "files_removed": len(old_files),
-                    "write_salt": write_salt,
-                    "commit_retries": _attempt,
-                },
-            )
-            try:
-                self._write_commit(commit)
-                return commit
-            except ConcurrentCommitError:
-                st = self._state_full()
-                # split-brain guard (same as the MoR path): a racing writer
-                # that committed THIS batch_id wins — no duplicate log entry
-                existing = self.get_commit_by_batch_id(batch_id)
-                if existing is not None:
-                    return existing
-                if not set(old_files) <= set(st.live):
-                    if _restarts >= 3:
-                        raise
-                    return self._merge_persisted(
-                        src, batch_id, app_metadata, write_salt,
-                        precommit_check, scheme=nb, _restarts=_restarts + 1,
-                    )
-                version = st.version + 1
-        raise ConcurrentCommitError(
-            "merge commit lost the race 4 times in a row"
-        )
 
     def _scan_written(
         self, cdir: str, cdir_rel: str, scheme: int | None = None
@@ -1252,9 +1079,8 @@ class LakeTable:
         analog for the bucket spec: a METADATA-ONLY commit switches the
         current write scheme; no data is rewritten. Existing files stay
         valid under the scheme they were written with (tracked per file in
-        the manifest): read_key prunes each file under ITS scheme, CoW
-        merges rewrite affected old-scheme files, and compact() migrates
-        remaining old-scheme files to the current scheme lazily. The
+        the manifest): read_key prunes each file under ITS scheme, and
+        compact() migrates old-scheme files to the current scheme lazily. The
         operational lever when conv_id cardinality outgrows the create-time
         bucket count at 10^10-event scale (n_buckets ≫ cores keeps write
         parallelism un-quantized) — without the full-table rewrite a naive
@@ -1300,10 +1126,10 @@ class LakeTable:
         """Rewrite buckets fragmented across ≥ min_files_per_bucket files
         into one file each — the lakehouse small-files compaction (Iceberg's
         rewrite_data_files). Logical content unchanged; commit is
-        batch_id=None (maintenance). In MoR mode this is also the delta
-        fold-down: the rewrite LWW-resolves, leaving one row per key (the
-        winning tombstones included — they must keep absorbing older
-        replays until expire_tombstones).
+        batch_id=None (maintenance). This is also the delta fold-down: the
+        rewrite LWW-resolves, leaving one row per key (the winning
+        tombstones included — they must keep absorbing older replays until
+        expire_tombstones).
 
         ``max_buckets`` bounds one call to the N MOST fragmented buckets —
         incremental compaction: a steady-state ingest loop spreads the
@@ -1312,7 +1138,6 @@ class LakeTable:
         inline fold after 4 x 6M-event batches cost a 14-20 s pause
         against 3.6 s steady batches). Remaining buckets stay fragmented
         until a later call — read-side LWW is unaffected."""
-        # one snapshot drives files AND version (see _merge_persisted)
         st = self._state_full()
         nb = self.n_buckets
         # group by (scheme, bucket): after set_n_buckets, equal bucket ids
@@ -1326,8 +1151,7 @@ class LakeTable:
             for sb, ps in by_bucket.items()
             # old-scheme groups are ALWAYS targets regardless of
             # fragmentation: compaction is the lazy migration path of
-            # bucket-spec evolution (rewrites re-stamp to the current
-            # scheme below)
+            # bucket-spec evolution (the rewrite re-stamps them)
             if len(ps) >= min_files_per_bucket or sb[0] != nb
         }
         if not targets:
@@ -1343,19 +1167,36 @@ class LakeTable:
             if len(targets) > max_buckets:
                 worst = sorted(targets, key=lambda b: len(targets[b]), reverse=True)
                 targets = {b: targets[b] for b in worst[:max_buckets]}
-        migrating = any(s != nb for s, _ in targets)
-        old_files = [p for ps in targets.values() for p in ps]
+        return self._rewrite_buckets(
+            st, [p for ps in targets.values() for p in ps], {"compaction": True}
+        )
+
+    def _rewrite_buckets(
+        self, st: _State, old_files: list[str], metrics: dict, drop=None
+    ) -> Commit | None:
+        """Replace ``old_files`` (whole buckets) with their LWW-resolved
+        rewrite, one key-sorted file per bucket, minus rows matching
+        ``drop``. ``st`` is the snapshot the caller chose the files from:
+        it also fixes the commit version, so a concurrent commit after it
+        surfaces as ConcurrentCommitError instead of being overwritten."""
+        nb = self.n_buckets
         df = self._resolve(self._read_files(old_files))
-        if migrating:
+        if drop is not None:
+            df = df.filter(~drop)
+        stored = {
+            (st.live[p].get("scheme", self._base_n_buckets), st.live[p]["bucket"])
+            for p in old_files
+        }
+        if {s for s, _ in stored} != {nb}:
+            # bucket-spec transition: output files must be single-scheme —
             # re-stamp under the current scheme (a no-op value-wise for
-            # rows already written under it)
+            # rows already written under it). Re-stamped rows can land in
+            # ANY current-scheme bucket: exact placement over the full
+            # range (empty slots write nothing; transition-only cost)
             df = df.withColumn(_BUCKET_COL, self._bucket_expr(self.keys[0], nb))
-            # re-stamped rows can land in ANY current-scheme bucket —
-            # exact placement over the full range (empty slots write
-            # nothing; transition-only cost)
             slot_domain: list[int] = list(range(nb))
         else:
-            slot_domain = sorted({b for _, b in targets})
+            slot_domain = sorted(b for _, b in stored)
         version = st.version + 1
         cdir_rel = f"c{version:020d}-{uuid.uuid4().hex[:8]}"  # unique per attempt
         cdir = os.path.join(self.root, _DATA_DIR, cdir_rel)
@@ -1381,7 +1222,8 @@ class LakeTable:
         return self._commit_maintenance(
             version, added, old_files,
             metrics={
-                "compaction": True,
+                **metrics,
+                "buckets": len(stored),
                 "files_removed": len(old_files),
                 "files_added": len(added),
             },
@@ -1432,101 +1274,50 @@ class LakeTable:
     def expire_tombstones(self, older_than) -> Commit | None:
         """Drop op='delete' tombstones with ts < older_than (safe once no
         replay can carry events older than the horizon). Rewrites only
-        buckets that contain expired tombstones. In MoR mode the rewrite
-        LWW-resolves FIRST — dropping a winning tombstone while older
-        upserts of the key still sit in other delta files would resurrect
-        the key; resolving removes those losers in the same rewrite."""
+        buckets that contain expired tombstones. The rewrite LWW-resolves
+        FIRST — dropping a winning tombstone while older upserts of the key
+        still sit in other delta files would resurrect the key; resolving
+        removes those losers in the same rewrite."""
         snap = self.snapshot()
         if _OP_COL not in snap.columns:
             return None
-        expired = snap.filter(
-            (F.col(_OP_COL) == "delete") & (F.col(self.ts_col) < F.lit(older_than))
+        expired_rows = (F.col(_OP_COL) == "delete") & (
+            F.col(self.ts_col) < F.lit(older_than)
         )
-        # one snapshot drives files AND version (see _merge_persisted):
-        # a concurrent commit after this point surfaces as
-        # ConcurrentCommitError instead of being silently overwritten
         st = self._state_full()
-        nb = self.n_buckets
         default = self._base_n_buckets
-        live_schemes = {a.get("scheme", default) for a in st.live.values()}
-        if len(live_schemes) > 1:
-            # bucket-spec transition: a tombstoned key's OTHER versions can
-            # live in files of another scheme whose bucket id (hash under
-            # that scheme) differs from the tombstone file's stored id —
-            # selecting by stored id alone would skip them, and dropping
-            # the tombstone would resurrect those losers at read time
-            # (e.g. a late upsert landing post-evolution in bucket h%13
-            # while the expired tombstone sits pre-evolution in h%8).
-            # Compute the expired keys' buckets under EVERY live scheme
-            # (one small distinct aggregate, ≤ n_buckets ints per scheme,
-            # same shape as _merge_persisted's aff_by_scheme) and rewrite
-            # all of those files; the resolve below removes the losers in
-            # the same pass.
-            kc = self.keys[0]
-            row = (
-                expired.select(kc)
-                .distinct()
-                .agg(
-                    *[
-                        F.collect_set(
-                            F.pmod(F.xxhash64(F.col(kc)), F.lit(s)).cast("int")
-                        ).alias(f"s{s}")
-                        for s in sorted(live_schemes)
-                    ]
-                )
-                .collect()[0]
+        schemes = sorted({a.get("scheme", default) for a in st.live.values()})
+        # the expired keys' bucket under EVERY live scheme, in one small
+        # aggregate (≤ n_buckets ints per scheme reach the driver): during
+        # a bucket-spec transition a tombstoned key's loser versions can
+        # sit in a file of another scheme whose bucket id differs from the
+        # tombstone file's — skipping that file would let dropping the
+        # tombstone resurrect them at read time
+        kc = self.keys[0]
+        row = (
+            snap.filter(expired_rows)
+            .select(kc)
+            .distinct()
+            .agg(
+                *[
+                    F.collect_set(
+                        F.pmod(F.xxhash64(F.col(kc)), F.lit(s)).cast("int")
+                    ).alias(f"s{s}")
+                    for s in schemes
+                ]
             )
-            by_scheme = {s: set(row[f"s{s}"]) for s in live_schemes}
-            buckets = sorted(set().union(*by_scheme.values()))
-            if not buckets:
-                return None
-            old_files = [
-                p
-                for p, a in st.live.items()
-                if a["bucket"] in by_scheme[a.get("scheme", default)]
-            ]
-        else:
-            # single scheme: the stored bucket id IS hash % scheme
-            buckets = [
-                r[0] for r in expired.select(_BUCKET_COL).distinct().collect()
-            ]
-            if not buckets:
-                return None
-            old_files = [p for p, a in st.live.items() if a["bucket"] in buckets]
-        df = self._resolve(self._read_files(old_files)).filter(
-            ~((F.col(_OP_COL) == "delete") & (F.col(self.ts_col) < F.lit(older_than)))
+            .collect()[0]
         )
-        mixed = {
-            st.live[p].get("scheme", self._base_n_buckets) for p in old_files
-        } != {nb}
-        if mixed:
-            # bucket-spec transition: rewritten output must be single-
-            # scheme per file — re-stamp to the current scheme (also
-            # migrates these files, same as compact)
-            df = df.withColumn(_BUCKET_COL, self._bucket_expr(self.keys[0], nb))
-            slot_domain: list[int] = list(range(nb))
-        else:
-            slot_domain = sorted(buckets)
-        version = st.version + 1
-        cdir_rel = f"c{version:020d}-{uuid.uuid4().hex[:8]}"  # unique per attempt
-        cdir = os.path.join(self.root, _DATA_DIR, cdir_rel)
-        n_slots = len(slot_domain)
-        (
-            df.withColumn("_pb", F.col(_BUCKET_COL))
-            .repartition(
-                n_slots,
-                exact_slot_rekey(
-                    dense_slot(F.col(_BUCKET_COL), slot_domain), n_slots
-                ),
-            )
-            .write.partitionBy("_pb")
-            .mode("overwrite")
-            .parquet(cdir)
-        )
-        added = self._scan_written(cdir, cdir_rel, nb)
-        return self._commit_maintenance(
-            version, added, old_files,
-            metrics={"tombstones_expired": True, "buckets": len(buckets)},
+        by_scheme = {s: set(row[f"s{s}"]) for s in schemes}
+        old_files = [
+            p
+            for p, a in st.live.items()
+            if a["bucket"] in by_scheme[a.get("scheme", default)]
+        ]
+        if not old_files:
+            return None
+        return self._rewrite_buckets(
+            st, old_files, {"tombstones_expired": True}, drop=expired_rows
         )
 
     # ---------------------------------------------------------------- utils

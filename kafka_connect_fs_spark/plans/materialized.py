@@ -94,8 +94,6 @@ class IncrementalRollup:
         n_buckets: int = 16,
         derived: dict[str, Column] | None = None,
     ):
-        if base.merge_mode != "mor":
-            raise ValueError("IncrementalRollup requires a MoR base table")
         if not group_cols or group_cols[0] != base.keys[0]:
             raise ValueError(
                 f"group_cols must start with the base bucket key "
@@ -130,7 +128,7 @@ class IncrementalRollup:
         else:
             self.table = LakeTable.create(
                 base.spark, root, keys=self.group_cols, ts_col=_MV_TS,
-                n_buckets=n_buckets, merge_mode="mor",
+                n_buckets=n_buckets,
             )
 
     # ------------------------------------------------------------ state
@@ -234,6 +232,24 @@ class IncrementalRollup:
         Idempotent: the MV merge's batch_id encodes the (from, to)
         window, so a refresh that committed but whose caller crashed
         before observing it replays as a no-op."""
+        cached: list[DataFrame] = []
+        try:
+            return self._refresh(to_version, cached)
+        finally:
+            # a failed refresh must not leave its shared subplans cached
+            for df in cached:
+                df.unpersist()
+
+    def _refresh(
+        self, to_version: int | None, cached: list[DataFrame]
+    ) -> RefreshStats:
+        """The refresh itself; every frame it persists goes into
+        ``cached`` for ``refresh`` to release."""
+
+        def persist(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return df
+
         base = self.base
         last = self.refreshed_version()
         head = base.latest_version() if to_version is None else int(to_version)
@@ -288,7 +304,7 @@ class IncrementalRollup:
             # arbitrary group columns (role, time windows, ...).
             # persist: feeds the semi-join AND the gone-group anti-join
             bk = self.group_cols[0]
-            touched_keys = changes.select(bk).distinct().persist()
+            touched_keys = persist(changes.select(bk).distinct())
 
         snap = base._read_files(candidates, renames=renames)
         agg_exprs = [expr.alias(name) for name, expr in self.aggs.items()]
@@ -310,7 +326,7 @@ class IncrementalRollup:
                 # group anti-join/count AND the MV merge write): persist so
                 # the touched-bucket read + resolve + re-aggregation runs
                 # once per refresh, not once per consumer
-                recomputed = recomputed.persist()
+                recomputed = persist(recomputed)
 
         mv_rows = None
         if recomputed is not None:
@@ -364,7 +380,7 @@ class IncrementalRollup:
                 )
             # bounded: ⊆ the touched keys' previous groups. Persisted: the
             # count here and the MV merge below both consume it
-            gone = gone.persist()
+            gone = persist(gone)
             n_deleted = gone.count()
             if n_deleted:
                 gone_rows = gone.select(
@@ -390,11 +406,6 @@ class IncrementalRollup:
                 app_metadata={"mv_base_version": head, "mv_from_version": last},
             )
             n_groups = int(commit.metrics.get("rows_written", 0)) - n_deleted
-        if touched_keys is not None:
-            touched_keys.unpersist()
-            gone.unpersist()
-            if recomputed is not None:
-                recomputed.unpersist()
         return RefreshStats(
             last, head, n_groups, n_deleted, len(candidates), len(live),
             partial=not initial,

@@ -278,7 +278,7 @@ def _cached_lake(spark: SparkSession, sf_dir: str, cache: dict, prefix: str, bui
     atexit.register(shutil.rmtree, base, ignore_errors=True)
     lake = LakeTable.create(
         spark, os.path.join(base, "t"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=8, merge_mode="mor",
+        ts_col="ts", n_buckets=8,
     )
     build(lake, _transcript_src(spark, sf_dir))
     cache[sf_dir] = base

@@ -120,11 +120,6 @@ class IngestConfig:
     keys: tuple = ("conv_id", "turn_idx")
     ts_col: str = "ts"
     n_buckets: int = 16
-    # "mor" (default): each batch appends a bucket-partitioned delta —
-    # write amplification O(batch); readers LWW-resolve and compact_every
-    # folds deltas down. "cow" rewrites affected buckets per batch (only
-    # sane for low-frequency batch loads touching few buckets).
-    merge_mode: str = "mor"
     # >1 spreads each bucket's delta WRITE over N tasks (deterministic
     # key salt) — for hot conv_id batches; compaction folds the extra files.
     # "auto" = adaptive: the engine sizes the NEXT batch's salt from the
@@ -228,7 +223,6 @@ class IngestEngine:
                 keys=list(config.keys),
                 ts_col=config.ts_col,
                 n_buckets=config.n_buckets,
-                merge_mode=config.merge_mode,
             )
         )
         # an EXISTING table's frozen spec wins over the config — but a
@@ -244,7 +238,6 @@ class IngestEngine:
                 ("keys", tuple(self.lake.keys), tuple(config.keys)),
                 ("ts_col", self.lake.ts_col, config.ts_col),
                 ("n_buckets", self.lake.n_buckets, config.n_buckets),
-                ("merge_mode", self.lake.merge_mode, config.merge_mode),
             )
             if got != want
         }

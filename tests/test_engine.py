@@ -599,7 +599,6 @@ def test_mor_steady_state_file_count_bounded_by_compaction(spark, tmp_path):
         spark, tmp_path, n_buckets=4, compact_every=3,
         compact_min_files_per_bucket=2,
     )
-    assert engine.lake.merge_mode == "mor"
     rows = transcript_change_events(8, 2, n_versions=3)
     per = max(1, len(rows) // 9)
     counts = []
@@ -987,7 +986,7 @@ def test_merge_precommit_check_aborts_before_commit(spark, tmp_path):
 
     t = LakeTable.create(
         spark, str(tmp_path / "pc"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=2, merge_mode="mor",
+        ts_col="ts", n_buckets=2,
     )
     from tests.test_lake import edf, ev
 

@@ -147,6 +147,7 @@ def test_schema_evolution_rename_column(spark, table):
 def test_vacuum_removes_dead_files(spark, table):
     table.merge(edf(spark, [ev("c1", 0, "a", 1)]), "b1")
     table.merge(edf(spark, [ev("c1", 0, "b", 2)]), "b2")
+    table.compact()  # the folded deltas become dead files
     assert table.vacuum(min_age_seconds=0) >= 1
     assert table.read().collect()[0].text == "b"
 
@@ -163,7 +164,7 @@ def test_delete_tombstone_blocks_older_upsert_resurrection(spark, table):
 
 
 def test_compact_rewrites_buckets(spark, table):
-    # copy-on-write keeps one file per bucket per commit; different convs
+    # each merge adds one delta file per touched bucket; different convs
     # land in different buckets across commits
     for i in range(6):
         table.merge(edf(spark, [ev(f"c{i}", 0, f"t{i}", i + 1)]), f"b{i}")
@@ -243,19 +244,11 @@ def test_xxhash64_parity(spark):
 # ------------------------------------------------------------- merge-on-read
 
 
-@pytest.fixture()
-def mor_table(spark, tmp_path):
-    return LakeTable.create(
-        spark, str(tmp_path / "m"), keys=["conv_id", "turn_idx"], ts_col="ts",
-        n_buckets=4, merge_mode="mor",
-    )
-
-
-def test_mor_merge_never_rewrites_prior_files(spark, mor_table):
+def test_mor_merge_never_rewrites_prior_files(spark, table):
     """The 100x-scale contract: a steady-state batch appends a delta and
     touches NOTHING that exists — write amplification is O(batch), not
-    O(table) (CoW rewrites every affected bucket per batch)."""
-    t = mor_table
+    O(table)."""
+    t = table
     t.merge(edf(spark, [ev(f"c{i}", 0, f"t{i}", 1) for i in range(50)]), "b1")
     before, _, _ = t._state()
     c = t.merge(edf(spark, [ev("c1", 0, "upd", 9), ev("new", 0, "n", 9)]), "b2")
@@ -267,10 +260,10 @@ def test_mor_merge_never_rewrites_prior_files(spark, mor_table):
     assert len(rows) == 51
 
 
-def test_mor_semantics_match_cow(spark, mor_table):
+def test_mor_semantics_match_cow(spark, table):
     """LWW, stale-loses, tombstone-blocks-zombie, replay no-op — the full
     upsert contract, resolved at read time instead of write time."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("c1", 0, "old", 1), ev("c2", 0, "keep", 1)]), "b1")
     t.merge(edf(spark, [ev("c1", 0, "new", 5)]), "b2")
     t.merge(edf(spark, [ev("c1", 0, "stale", 3)]), "b3")  # older ts loses
@@ -285,8 +278,8 @@ def test_mor_semantics_match_cow(spark, mor_table):
     assert t.read_key("c2").count() == 0
 
 
-def test_mor_compact_resolves_deltas(spark, mor_table):
-    t = mor_table
+def test_mor_compact_resolves_deltas(spark, table):
+    t = table
     for i in range(5):
         t.merge(edf(spark, [ev("c1", 0, f"v{i}", i), ev(f"c{i}", 1, "x", i)]), f"b{i}")
     before = {(r.conv_id, r.turn_idx): r.text for r in t.read().collect()}
@@ -299,11 +292,11 @@ def test_mor_compact_resolves_deltas(spark, mor_table):
     assert snap.groupBy("conv_id", "turn_idx").count().where("count > 1").count() == 0
 
 
-def test_incremental_compaction_bounded_and_converges(spark, mor_table):
+def test_incremental_compaction_bounded_and_converges(spark, table):
     """max_buckets bounds one compaction call to the N MOST fragmented
     buckets (bounded maintenance pause); repeated calls converge to the
     fully-folded state with logical content unchanged throughout."""
-    t = mor_table
+    t = table
     # fragment several buckets unevenly: conv c0..c5 across buckets
     for i in range(6):
         t.merge(
@@ -343,12 +336,12 @@ def test_incremental_compaction_bounded_and_converges(spark, mor_table):
         t.compact(min_files_per_bucket=1, max_buckets=-1)
 
 
-def test_compaction_retries_after_losing_commit_race(spark, mor_table):
+def test_compaction_retries_after_losing_commit_race(spark, table):
     """A separate maintenance process compacting alongside a live ingest
     loop loses the version race to an ingest commit: compact must re-read
     the head and re-attempt (its parquet output is version-independent),
     not raise — and the concurrent batch's rows must survive."""
-    t = mor_table
+    t = table
     for i in range(3):
         t.merge(edf(spark, [ev("c1", 0, f"v{i}", i)]), f"b{i}")
 
@@ -373,15 +366,14 @@ def test_compaction_retries_after_losing_commit_race(spark, mor_table):
     assert got[("c1", 0)] == "v2" and got[("c9", 9)] == "concurrent"
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_merge_race_same_batch_id_commits_once(spark, tmp_path, mode):
+def test_merge_race_same_batch_id_commits_once(spark, tmp_path):
     """Split-brain daemons replaying the SAME batch (operator restarts the
     ingest job while the old process is mid-MERGE): the loser of the commit
     race must return the winner's existing commit, not log batch_id twice —
     the exactly-once-per-batch_id replay guard holds under dual writers."""
     t = LakeTable.create(
         spark, str(tmp_path / "sb"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode=mode,
+        ts_col="ts", n_buckets=4,
     )
     t.merge(edf(spark, [ev("c1", 0, "base", 1)]), "b0")
 
@@ -410,8 +402,8 @@ def test_merge_race_same_batch_id_commits_once(spark, tmp_path, mode):
     assert got == {("c1", 0): "base", ("c1", 1): "winner"}
 
 
-def test_mor_expire_tombstones_does_not_resurrect(spark, mor_table):
-    t = mor_table
+def test_mor_expire_tombstones_does_not_resurrect(spark, table):
+    t = table
     t.merge(edf(spark, [ev("c1", 0, "body", 1)]), "b1")
     t.merge(edf(spark, [ev("c1", 0, "", 10, op="delete")]), "b2")
     c = t.expire_tombstones(ts(100))
@@ -420,10 +412,10 @@ def test_mor_expire_tombstones_does_not_resurrect(spark, mor_table):
     assert t.snapshot().where("conv_id = 'c1'").count() == 0
 
 
-def test_mor_schema_union_survives_narrow_batches(spark, mor_table):
+def test_mor_schema_union_survives_narrow_batches(spark, table):
     """A delta batch MISSING an optional column must not shrink the table
     schema, and reads fill the gap with nulls (mergeSchema)."""
-    t = mor_table
+    t = table
     wide = edf(spark, [ev("c1", 0, "a", 1)]).withColumn("quality", F.lit(0.9))
     t.merge(wide, "b1")
     t.merge(edf(spark, [ev("c2", 0, "b", 2)]), "b2")  # narrow batch
@@ -502,7 +494,7 @@ def test_losing_writer_cannot_clobber_committed_data(spark, tmp_path, monkeypatc
 
     root = str(tmp_path / "race")
     t1 = LakeTable.create(spark, root, keys=["conv_id", "turn_idx"], ts_col="ts",
-                          n_buckets=4, merge_mode="mor")
+                          n_buckets=4)
     t1.merge(edf(spark, [ev("c1", 0, "winner", 1)]), "b1")
 
     t2 = LakeTable(spark, root)
@@ -523,10 +515,10 @@ def test_losing_writer_cannot_clobber_committed_data(spark, tmp_path, monkeypatc
 # --------------------------------------------------------- time-range reads
 
 
-def test_read_range_prunes_files_by_ts_stats(spark, mor_table):
+def test_read_range_prunes_files_by_ts_stats(spark, table):
     """Per-file [ts_min, ts_max] footer stats recorded at commit time let
     a time-window read skip files entirely (manifest-stat pruning)."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("c1", 0, "day0", 0), ev("c2", 0, "day0", 10)]), "b1")
     t.merge(edf(spark, [ev("c3", 0, "day1", 86400), ev("c4", 0, "day1", 86410)]), "b2")
     live, _, _ = t._state()
@@ -580,7 +572,7 @@ def test_mor_write_salt_spreads_hot_bucket(spark, tmp_path):
     through several tasks/files instead of serializing into one; content
     identical either way."""
     t1 = LakeTable.create(spark, str(tmp_path / "s1"), keys=["conv_id", "turn_idx"],
-                          ts_col="ts", n_buckets=4, merge_mode="mor")
+                          ts_col="ts", n_buckets=4)
     rows = [ev("hot", 0, f"v{i}", i) for i in range(400)] + [ev("c2", 0, "x", 1)]
     # at toy scale AQE would re-coalesce the salted partitions (they are
     # kilobytes); at real scale a hot bucket exceeds the advisory partition
@@ -611,7 +603,7 @@ def test_type_widening_evolution_int_to_long(spark, tmp_path):
     AND after coexist and read back upcast (Spark 4 parquet read-side
     widening behind the promoted footer schema)."""
     t = LakeTable.create(spark, str(tmp_path / "w"), keys=["conv_id", "turn_idx"],
-                         ts_col="ts", n_buckets=4, merge_mode="mor")
+                         ts_col="ts", n_buckets=4)
     S_INT = "conv_id string, turn_idx int, score int, ts timestamp"
     S_LONG = "conv_id string, turn_idx int, score long, ts timestamp"
     t.merge(spark.createDataFrame([("c1", 0, 7, ts(1))], S_INT), "b1")
@@ -624,7 +616,7 @@ def test_type_widening_evolution_int_to_long(spark, tmp_path):
     assert dict(t.read().dtypes)["score"] == "bigint"
     # float -> double widening through the same path
     t2 = LakeTable.create(spark, str(tmp_path / "w2"), keys=["conv_id", "turn_idx"],
-                          ts_col="ts", n_buckets=4, merge_mode="mor")
+                          ts_col="ts", n_buckets=4)
     t2.merge(spark.createDataFrame([("c1", 0, 1.5, ts(1))],
                                    "conv_id string, turn_idx int, v float, ts timestamp"), "b1")
     t2.merge(spark.createDataFrame([("c2", 0, 2.5, ts(2))],
@@ -633,10 +625,10 @@ def test_type_widening_evolution_int_to_long(spark, tmp_path):
     assert {r.conv_id: r.v for r in t2.read().collect()} == {"c1": 1.5, "c2": 2.5}
 
 
-def test_read_key_prunes_files_by_key_stats(spark, mor_table):
+def test_read_key_prunes_files_by_key_stats(spark, table):
     """After key-clustered compaction, per-file [key_min, key_max] stats
     let a point lookup skip sibling files in its own bucket."""
-    t = mor_table
+    t = table
     # many keys, several merges → several files per bucket
     for b in range(3):
         t.merge(edf(spark, [ev(f"c{i:03d}", 0, f"{b}:{i}", b * 100 + i)
@@ -662,8 +654,12 @@ def test_read_key_prunes_files_by_key_stats(spark, mor_table):
 
 def test_vacuum_retention_preserves_time_travel(spark, table):
     c1 = table.merge(edf(spark, [ev("c1", 0, "v1", 1)]), "b1")
-    c2 = table.merge(edf(spark, [ev("c1", 0, "v2", 2)]), "b2")
-    c3 = table.merge(edf(spark, [ev("c1", 0, "v3", 3)]), "b3")
+    table.merge(edf(spark, [ev("c1", 0, "v2", 2)]), "b2")
+    # each compaction folds the bucket to one file, leaving the previous
+    # ones dead (reachable only by time travel)
+    c2 = table.compact()
+    table.merge(edf(spark, [ev("c1", 0, "v3", 3)]), "b3")
+    c3 = table.compact()
     # keep the last 2 versions' files: v2 and v3 readable, v1's file gone
     table.vacuum(retain_versions=2, min_age_seconds=0)
     assert table.read(at_version=c3.version).collect()[0].text == "v3"
@@ -675,11 +671,11 @@ def test_vacuum_retention_preserves_time_travel(spark, table):
     assert table.read().collect()[0].text == "v3"
 
 
-def test_read_changes_serves_exact_change_batches(spark, mor_table):
+def test_read_changes_serves_exact_change_batches(spark, table):
     """CDF: changes between two versions come back exactly — upserts AND
     delete events with their op — without snapshot diffing; compaction
     commits add no phantom changes."""
-    t = mor_table
+    t = table
     c1 = t.merge(edf(spark, [ev("c1", 0, "a", 1), ev("c2", 0, "b", 1)]), "b1")
     c2 = t.merge(edf(spark, [ev("c1", 0, "a2", 2)]), "b2")
     c3 = t.merge(edf(spark, [ev("c2", 0, "", 3, op="delete")]), "b3")
@@ -708,9 +704,9 @@ def test_downstream_pipeline_tails_the_lake_via_cdf(spark, tmp_path):
     of batches, B's final state equals A's — the lake is itself a tailable
     CDC source for downstream consumers."""
     a = LakeTable.create(spark, str(tmp_path / "a"), keys=["conv_id", "turn_idx"],
-                         ts_col="ts", n_buckets=4, merge_mode="mor")
+                         ts_col="ts", n_buckets=4)
     b = LakeTable.create(spark, str(tmp_path / "b"), keys=["conv_id", "turn_idx"],
-                         ts_col="ts", n_buckets=4, merge_mode="mor")
+                         ts_col="ts", n_buckets=4)
     cursor = -1
     for i in range(3):
         batch = [ev(f"c{j}", 0, f"g{i}:{j}", i * 10 + j) for j in range(4)]
@@ -727,8 +723,8 @@ def test_downstream_pipeline_tails_the_lake_via_cdf(spark, tmp_path):
     assert state_a == state_b and ("c0", 0) not in state_a
 
 
-def test_read_range_both_bounds(spark, mor_table):
-    t = mor_table
+def test_read_range_both_bounds(spark, table):
+    t = table
     t.merge(edf(spark, [ev("c1", 0, "early", 10), ev("c2", 0, "mid", 500),
                         ev("c3", 0, "late", 2000)]), "b1")
     rows = {r.conv_id for r in t.read_range(ts_from=ts(100), ts_to=ts(1000)).collect()}
@@ -738,10 +734,10 @@ def test_read_range_both_bounds(spark, mor_table):
     assert rows2 == {"c2"}
 
 
-def test_files_in_range_incomparable_stats_never_prune(spark, mor_table):
+def test_files_in_range_incomparable_stats_never_prune(spark, table):
     """Numeric / mistyped bounds must degrade to reading the file (like
     read_key's _covers), never crash or silently prune."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("c1", 0, "a", 0), ev("c2", 0, "b", 86400)]), "b1")
     live, _, _ = t._state()
     # int-epoch bounds are incomparable with the stored isoformat strings:
@@ -750,10 +746,10 @@ def test_files_in_range_incomparable_stats_never_prune(spark, mor_table):
     assert t.files_in_range(ts_from=0) == sorted(live)
 
 
-def test_read_changes_commit_version_long_on_both_paths(spark, mor_table):
+def test_read_changes_commit_version_long_on_both_paths(spark, table):
     """The empty and non-empty read_changes paths must agree on
     _commit_version's type (long) so unions across calls don't clash."""
-    t = mor_table
+    t = table
     c1 = t.merge(edf(spark, [ev("c1", 0, "a", 1)]), "b1")
     nonempty = t.read_changes(-1)
     empty = t.read_changes(c1.version)
@@ -771,7 +767,7 @@ def test_read_changes_empty_poll_mirrors_current_schema(spark, tmp_path):
     — otherwise a consumer unioning consecutive polls hits a clash."""
     t = LakeTable.create(
         spark, str(tmp_path / "cdf_evo"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=2, merge_mode="mor",
+        ts_col="ts", n_buckets=2,
     )
     t.merge(edf(spark, [ev("c1", 0, "a", 1)]), batch_id="b1")
     evolved = edf(spark, [ev("c2", 0, "b", 2)]).withColumn("extra", F.lit("x"))
@@ -787,7 +783,7 @@ def test_read_changes_empty_poll_mirrors_current_schema(spark, tmp_path):
 
 
 def test_concurrent_commit_stale_snapshot_raises_not_overwrites(spark, tmp_path):
-    """CoW optimistic concurrency: a writer merging against a STALE state
+    """Optimistic concurrency: a writer merging against a STALE state
     snapshot must surface ConcurrentCommitError (put-if-absent on the
     version derived from ITS snapshot), never silently overwrite the
     interleaved commit."""
@@ -829,6 +825,7 @@ def test_read_key_int_typed_first_key(spark, tmp_path):
 def test_vacuum_min_age_guards_in_flight_writers(spark, table):
     table.merge(edf(spark, [ev("c1", 0, "a", 1)]), "b1")
     table.merge(edf(spark, [ev("c1", 0, "b", 2)]), "b2")
+    table.compact()  # the folded deltas become dead files
     # default age guard: freshly-written unreferenced files (an in-flight
     # writer's pre-commit output looks exactly like this) survive
     assert table.vacuum() == 0
@@ -853,9 +850,10 @@ def test_partial_checkpoint_falls_back_to_replay(spark, tmp_path):
 
 
 def test_cow_schema_union_keeps_unaffected_bucket_columns(spark, tmp_path):
-    """A CoW merge touching only bucket B must not drop from the tracked
-    schema a column that lives solely in bucket A's files."""
-    t = LakeTable.create(spark, str(tmp_path / "cowschema"),
+    """A merge touching only bucket B must not drop from the tracked
+    schema a column that lives solely in bucket A's files, nor may the
+    compaction that follows."""
+    t = LakeTable.create(spark, str(tmp_path / "schema_union"),
                          keys=["conv_id", "turn_idx"], ts_col="ts", n_buckets=8)
     with_extra = edf(spark, [ev("c1", 0, "a", 1)]).withColumn("extra", F.lit("x"))
     t.merge(with_extra, "b1")
@@ -867,6 +865,7 @@ def test_cow_schema_union_keeps_unaffected_bucket_columns(spark, tmp_path):
         b = other.select(t._bucket_expr("conv_id")).first()[0]
         if a != b:
             t.merge(other, f"b{i}")
+            t.compact(min_files_per_bucket=1)
             break
     else:
         pytest.skip("no differing bucket found")
@@ -903,10 +902,15 @@ def test_promote_rejects_lossy_bigint_to_double(spark):
 
 
 def test_cow_write_salt_accepted(spark, tmp_path):
-    t = LakeTable.create(spark, str(tmp_path / "cowsalt"),
+    """A salted merge of a hot key keeps the latest versions, and so
+    does the compaction that folds it to one file per bucket."""
+    t = LakeTable.create(spark, str(tmp_path / "salt"),
                          keys=["conv_id", "turn_idx"], ts_col="ts", n_buckets=2)
     rows = [ev("hot", i % 3, f"v{i}", i) for i in range(60)]
     t.merge(edf(spark, rows), "b1", write_salt=4)
+    got = {(r.conv_id, r.turn_idx): r.text for r in t.read().collect()}
+    assert got == {("hot", k): f"v{57 + k}" for k in range(3)}
+    t.compact(min_files_per_bucket=1)
     got = {(r.conv_id, r.turn_idx): r.text for r in t.read().collect()}
     assert got == {("hot", k): f"v{57 + k}" for k in range(3)}
 
@@ -962,7 +966,7 @@ def test_read_key_property_random_keys_found(spark, tmp_path):
     keys = list({f"c{rng.randrange(10**9)}-{i}" for i in range(60)})
     t = LakeTable.create(
         spark, str(tmp_path / "pk"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=8, merge_mode="mor",
+        ts_col="ts", n_buckets=8,
     )
     df = spark.createDataFrame(
         [(k, i % 3, f"txt-{k}", float(i)) for i, k in enumerate(keys)],
@@ -982,7 +986,7 @@ def test_mor_merge_retries_through_concurrent_commit(spark, tmp_path):
     independent), not fail the batch."""
     root = str(tmp_path / "race_mor")
     t = LakeTable.create(spark, root, keys=["conv_id", "turn_idx"],
-                         ts_col="ts", n_buckets=4, merge_mode="mor")
+                         ts_col="ts", n_buckets=4)
     df_a = spark.createDataFrame(
         [(f"c{i}", 0, f"a{i}", 1.0) for i in range(8)],
         "conv_id string, turn_idx int, text string, ts double")
@@ -1006,20 +1010,18 @@ def test_mor_merge_retries_through_concurrent_commit(spark, tmp_path):
 
 
 def test_cow_merge_restarts_when_inputs_compacted_away(spark, tmp_path):
-    """CoW race where the concurrent commit was a COMPACTION of the same
-    buckets: the rewrite's inputs are no longer live, so the merge must
-    recompute from a fresh snapshot (not resurrect replaced files)."""
-    root = str(tmp_path / "race_cow")
+    """A merge racing a COMPACTION of the buckets it writes into: the
+    merge retries at the new head (its delta only adds files), reaches the
+    right final state, and no compacted-away file is live again."""
+    root = str(tmp_path / "race_compact")
     t = LakeTable.create(spark, root, keys=["conv_id", "turn_idx"],
-                         ts_col="ts", n_buckets=4, merge_mode="mor")
+                         ts_col="ts", n_buckets=4)
     seed = spark.createDataFrame(
         [(f"c{i}", 0, f"old{i}", 1.0) for i in range(12)],
         "conv_id string, turn_idx int, text string, ts double")
     t.merge(seed, batch_id="seed1")
     t.merge(seed.withColumn("ts", F.lit(2.0)), batch_id="seed2")
 
-    cow = LakeTable(spark, root)
-    cow.merge_mode = "cow"
     other = LakeTable(spark, root)
     fired = []
 
@@ -1030,14 +1032,14 @@ def test_cow_merge_restarts_when_inputs_compacted_away(spark, tmp_path):
 
     upd = spark.createDataFrame(
         [(f"c{i}", 0, f"new{i}", 9.0) for i in range(12)], seed.schema)
-    c = cow.merge(upd, batch_id="cow1", precommit_check=compact_under_us)
-    assert c is not None
+    c = t.merge(upd, batch_id="upd1", precommit_check=compact_under_us)
+    assert c.metrics["commit_retries"] == 1
     got = {r.conv_id: r.text for r in t.read().collect()}
     assert got == {f"c{i}": f"new{i}" for i in range(12)}
     # the replaced (compacted-away) files must not have been resurrected
     live, _, _ = t._state()
     removed = {p for h in t.history() for p in h["removed"]}
-    assert not (set(live) & removed)
+    assert removed and not (set(live) & removed)
 
 
 # ------------------------------------------------------ bucket-spec evolution
@@ -1058,7 +1060,7 @@ def test_set_n_buckets_is_metadata_only_and_reads_stay_exact(spark, tmp_path):
     lookups remain exact across both eras."""
     t = LakeTable.create(
         spark, str(tmp_path / "ev"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     t.merge(edf(spark, [ev(f"c{i}", 0, f"old{i}", i) for i in range(8)]), "b0")
     c = t.set_n_buckets(9)
@@ -1087,7 +1089,7 @@ def test_set_n_buckets_is_metadata_only_and_reads_stay_exact(spark, tmp_path):
 def test_compact_migrates_old_scheme_files(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "mig"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     t.merge(edf(spark, [ev(f"c{i}", 0, f"v{i}", i) for i in range(10)]), "b0")
     t.set_n_buckets(7)
@@ -1105,17 +1107,21 @@ def test_compact_migrates_old_scheme_files(spark, tmp_path):
 
 
 def test_cow_merge_rewrites_old_scheme_files_of_affected_keys(spark, tmp_path):
-    """CoW reads are resolve-free, so a merge after set_n_buckets must
-    find and rewrite the OLD-scheme file holding the key's prior version
-    (bucketed differently under the old scheme) — otherwise the stale
-    version would stay visible."""
+    """A key updated after set_n_buckets has versions in files of both
+    schemes (bucketed differently under each): reads and point lookups
+    must show only the latest, before and after compaction migrates the
+    old-scheme file."""
     t = LakeTable.create(
-        spark, str(tmp_path / "cowev"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="cow",
+        spark, str(tmp_path / "schemes"), keys=["conv_id", "turn_idx"],
+        ts_col="ts", n_buckets=4,
     )
     t.merge(edf(spark, [ev("k1", 0, "v1", 1), ev("k2", 0, "x", 1)]), "b0")
     t.set_n_buckets(8)
     t.merge(edf(spark, [ev("k1", 0, "v2", 2)]), "b1")
+    rows = t.read().collect()
+    assert len(rows) == 2
+    t.compact(min_files_per_bucket=2)
+    assert _schemes(t) == {8}
     rows = t.read().collect()
     assert {(r.conv_id, r.turn_idx): r.text for r in rows} == {
         ("k1", 0): "v2", ("k2", 0): "x",
@@ -1128,7 +1134,7 @@ def test_cow_merge_rewrites_old_scheme_files_of_affected_keys(spark, tmp_path):
 def test_set_n_buckets_survives_checkpoint_and_reopen(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "ck"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     t._ckpt_every = 2
     t.merge(edf(spark, [ev("a", 0, "1", 1)]), "b0")
@@ -1144,7 +1150,7 @@ def test_set_n_buckets_survives_checkpoint_and_reopen(spark, tmp_path):
 def test_expire_tombstones_across_schemes(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "exp"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     t.merge(
         edf(
@@ -1179,7 +1185,7 @@ def test_expire_tombstones_cross_scheme_versions_of_one_key(spark, tmp_path):
     assert h % 8 != h % 13  # the scenario requires differing bucket ids
     t = LakeTable.create(
         spark, str(tmp_path / "xs"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=8, merge_mode="mor",
+        ts_col="ts", n_buckets=8,
     )
     t.merge(edf(spark, [ev("gone", 0, "v1", 1)]), "b0")
     t.merge(edf(spark, [ev("gone", 0, None, 20, op="delete")]), "b1")
@@ -1208,13 +1214,13 @@ def test_set_n_buckets_validates(spark, tmp_path):
         t.set_n_buckets(-3)
 
 
-def test_read_columns_prunes_scan_below_lww_resolve(spark, mor_table):
+def test_read_columns_prunes_scan_below_lww_resolve(spark, table):
     """read(columns=["text"]) must push column pruning into the parquet
     ReadSchema even though the MoR LWW aggregate packs rows into a
     struct: `role` and `tool` (unrequested payload) may not be scanned,
     while keys/ts/lineage stay internal to keep the resolve
     deterministic — and the result equals the unpruned read."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("a", 0, "v1", 1), ev("a", 0, "v2", 2),
                         ev("b", 1, "x", 3)]), "b1")
     t.merge(edf(spark, [ev("b", 1, "y", 4)]), "b2")
@@ -1236,11 +1242,11 @@ def test_read_columns_prunes_scan_below_lww_resolve(spark, mor_table):
         t.read(columns=["nope"])
 
 
-def test_delete_where_tombstones_matching_current_rows(spark, mor_table):
+def test_delete_where_tombstones_matching_current_rows(spark, table):
     """Predicate delete erases exactly the keys whose CURRENT winning row
     matches — including rows whose older versions didn't match — and a
     genuinely later upsert still supersedes the tombstone."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [
         ev("a", 0, "keep", 1),
         ev("b", 0, "purge-me", 2),
@@ -1265,18 +1271,18 @@ def test_delete_where_tombstones_matching_current_rows(spark, mor_table):
     assert got[("b", 0)] == "reborn"
 
 
-def test_delete_where_sql_string_and_column_hint(spark, mor_table):
+def test_delete_where_sql_string_and_column_hint(spark, table):
     """SQL-string predicates work, and needed_columns prunes the matching
     scan's ReadSchema to predicate + key/ts columns."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("a", 0, "x", 1), ev("b", 0, "yy", 2)]), "b1")
     t.delete_where("length(text) > 1", needed_columns=["text"])
     assert {r.conv_id for r in t.read().collect()} == {"a"}
 
 
-def test_read_range_columns_pruned(spark, mor_table):
+def test_read_range_columns_pruned(spark, table):
     """read_range(columns=...) prunes the scan like read(columns=...)."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("a", 0, "early", 1), ev("b", 0, "late", 50)]), "b1")
     df = t.read_range(ts_from=ts(10), columns=["text"])
     assert df.columns == ["text"]
@@ -1292,17 +1298,17 @@ def test_read_columns_and_delete_where_on_never_written_table(spark, tmp_path):
     retention cron against a new table must not crash."""
     t = LakeTable.create(
         spark, str(tmp_path / "fresh"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     df = t.read(columns=["conv_id"])
     assert df.columns == ["conv_id"] and df.count() == 0
     assert t.delete_where("conv_id = 'x'", needed_columns=["conv_id"]) is None
 
 
-def test_read_range_empty_window_keeps_projection_contract(spark, mor_table):
+def test_read_range_empty_window_keeps_projection_contract(spark, table):
     """A window pruned to zero files must still return the projected
     schema (callers union per-window pages) and still validate columns."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("a", 0, "x", 1)]), "b1")
     empty = t.read_range(ts_from=ts(10**6), ts_to=ts(10**6 + 1),
                          columns=["conv_id", "text"])
@@ -1311,12 +1317,12 @@ def test_read_range_empty_window_keeps_projection_contract(spark, mor_table):
         t.read_range(ts_from=ts(10**6), ts_to=ts(10**6 + 1), columns=["nope"])
 
 
-def test_delete_where_derives_needed_columns(spark, mor_table):
+def test_delete_where_derives_needed_columns(spark, table):
     """Without needed_columns, the predicate's referenced columns are
     derived from the expression tree: the match scan's parquet ReadSchema
     must carry only role + keys + ts — never text/tool (the retention
     cron gets the pruned scan by default, VERDICT r5 item 7)."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("a", 0, "x", 1), ev("b", 0, "y", 2)]), "b1")
     assert sorted(t._referenced_columns(F.col("role") == "user")) == ["role"]
     tomb = t._delete_tombstones(F.col("role") == "user")
@@ -1339,7 +1345,7 @@ def test_delete_where_rejects_float_ts(spark, tmp_path):
     it must win — refuse loudly instead of silently failing deletes."""
     t = LakeTable.create(
         spark, str(tmp_path / "fl"), keys=["k"], ts_col="ts",
-        n_buckets=2, merge_mode="mor",
+        n_buckets=2,
     )
     t.merge(
         spark.createDataFrame([("a", 2.0, "v")],
@@ -1355,7 +1361,7 @@ def test_delete_where_rejects_string_ts(spark, tmp_path):
     ts that silently LOSES LWW) — delete_where must refuse loudly."""
     t = LakeTable.create(
         spark, str(tmp_path / "s"), keys=["k"], ts_col="ts",
-        n_buckets=2, merge_mode="mor",
+        n_buckets=2,
     )
     t.merge(
         spark.createDataFrame([("a", "2024-01-01T00:00:00", "v")],
@@ -1364,3 +1370,104 @@ def test_delete_where_rejects_string_ts(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="timestamp or numeric"):
         t.delete_where("text = 'v'")
+
+
+# ------------------------------------------------------------ legacy tables
+
+
+def _legacy_table(spark, root, meta):
+    """A table as an older build wrote it with copy-on-write merges: every
+    batch commit rewrote whole resolved buckets and removed the files it
+    replaced. ``meta`` is the extra ``_table.json`` content."""
+    import json as _json
+    import os as _os
+
+    from kafka_connect_fs_spark.plans.lake import Commit
+
+    _os.makedirs(_os.path.join(root, "_log"))
+    _os.makedirs(_os.path.join(root, "data"))
+    with open(_os.path.join(root, "_table.json"), "w") as f:
+        _json.dump({"keys": ["conv_id", "turn_idx"], "ts_col": "ts",
+                    "n_buckets": 2, **meta}, f)
+    t = LakeTable(spark, root)
+
+    def write(version, rows):
+        rel = f"c{version:020d}-legacy"
+        df = edf(spark, rows).withColumn("_bucket", t._bucket_expr("conv_id", 2))
+        df.withColumn("_pb", F.col("_bucket")).write.partitionBy("_pb").parquet(
+            _os.path.join(root, "data", rel)
+        )
+        return t._scan_written(_os.path.join(root, "data", rel), rel, 2)
+
+    schema = EVENT_SCHEMA.json()
+    v0 = write(0, [ev("c1", 0, "a", 1), ev("c2", 0, "b", 1)])
+    t._write_commit(Commit(0, "b1", v0, [], schema))
+    v1 = write(1, [ev("c1", 0, "a2", 2), ev("c2", 0, "b", 1)])
+    t._write_commit(Commit(1, "b2", v1, [a["path"] for a in v0], schema))
+    return LakeTable(spark, root)
+
+
+@pytest.mark.parametrize("meta", [{"merge_mode": "cow"}, {}], ids=["cow", "no_key"])
+def test_legacy_copy_on_write_table_opens_and_reads_exactly(spark, tmp_path, meta):
+    """A table an older build wrote copy-on-write (its _table.json says
+    "cow", or names no mode) reads exactly: resolving already-resolved
+    files changes nothing, and new merges append deltas over them. Its
+    rewrite commits are not change sets, so read_changes refuses them."""
+    t = _legacy_table(spark, str(tmp_path / "legacy"), meta)
+    assert _final(t) == {("c1", 0): "a2", ("c2", 0): "b"}
+    assert {r.text for r in t.read_key("c1").collect()} == {"a2"}
+    assert {r.text for r in t.read(at_version=0).collect()} == {"a", "b"}
+    with pytest.raises(ValueError, match="not a change set"):
+        t.read_changes(-1)
+    t.merge(edf(spark, [ev("c2", 0, "b2", 5), ev("c3", 0, "c", 5)]), "b3")
+    assert _final(t) == {("c1", 0): "a2", ("c2", 0): "b2", ("c3", 0): "c"}
+    assert {r.text for r in t.read_changes(1).collect()} == {"b2", "c"}
+    t.compact(min_files_per_bucket=1)
+    assert _final(t) == {("c1", 0): "a2", ("c2", 0): "b2", ("c3", 0): "c"}
+
+
+def test_create_writes_mor_mode_and_rejects_cow(spark, tmp_path):
+    """New tables record merge_mode "mor" (older builds treat a missing
+    key as copy-on-write and would skip the read-time resolve); asking
+    for copy-on-write points at merge() followed by compact()."""
+    import json as _json
+    import os as _os
+
+    t = LakeTable.create(spark, str(tmp_path / "new"), keys=["k"], ts_col="ts")
+    with open(_os.path.join(t.root, "_table.json")) as f:
+        assert _json.load(f)["merge_mode"] == "mor"
+    with pytest.raises(ValueError, match=r"compact\(\)"):
+        LakeTable.create(spark, str(tmp_path / "c"), keys=["k"], ts_col="ts",
+                         merge_mode="cow")
+    assert not LakeTable.exists(str(tmp_path / "c"))
+
+
+# ------------------------------------------------------------- job counts
+
+
+def test_merge_and_compact_job_counts(spark, tmp_path):
+    """One merge() is one delta write (2 jobs: the shuffle map stage and
+    the write); one compact() of two buckets is 4 (the footer-schema
+    merge, the LWW resolve, the placement shuffle and the sorted write).
+    A change that adds a pass to either fails here."""
+    from tests.test_engine import _jobs_in_group
+
+    t = LakeTable.create(spark, str(tmp_path / "jobs"), keys=["conv_id", "turn_idx"],
+                         ts_col="ts", n_buckets=2)
+    rows = [ev(f"c{i}", i % 3, f"t{i}", i) for i in range(40)]
+    t.merge(edf(spark, rows[:20]), "b0")
+    batch = edf(spark, rows[20:] + rows[:5])
+    sc = spark.sparkContext
+
+    def in_group(group, fn):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    in_group("pin-merge", lambda: t.merge(batch, "b1"))
+    c = in_group("pin-compact", lambda: t.compact(min_files_per_bucket=2))
+    assert c is not None and {a["bucket"] for a in c.added} == {0, 1}
+    assert _jobs_in_group(spark, "pin-merge") == 2
+    assert _jobs_in_group(spark, "pin-compact") == 4

@@ -27,7 +27,7 @@ AGGS = lambda: {  # noqa: E731 - fresh Columns per test
 def base(spark, tmp_path):
     return LakeTable.create(
         spark, str(tmp_path / "base"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
 
 
@@ -253,7 +253,7 @@ def test_property_any_change_sequence_matches_full_recompute(
         tmp = tmp_path_factory.mktemp("mvprop")
         base_t = LakeTable.create(
             spark, str(tmp / "base"), keys=["conv_id", "turn_idx"],
-            ts_col="ts", n_buckets=2, merge_mode="mor",
+            ts_col="ts", n_buckets=2,
         )
         mv = IncrementalRollup(
             base_t, str(tmp / "mv"), group_cols=["conv_id"], aggs=AGGS(),
@@ -281,13 +281,27 @@ def test_property_any_change_sequence_matches_full_recompute(
     prop()
 
 
-def test_requires_mor_base(spark, tmp_path):
-    cow = LakeTable.create(
-        spark, str(tmp_path / "cow"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="cow",
-    )
-    with pytest.raises(ValueError, match="MoR"):
-        IncrementalRollup(cow, str(tmp_path / "mv"), ["conv_id"], AGGS())
+def test_failed_partial_refresh_releases_cached_frames(spark, base, tmp_path):
+    """A partial refresh persists its touched keys, recomputed groups and
+    gone groups; when the MV merge fails they must be released too, or
+    every failed refresh of a long-running tailer leaks cached blocks."""
+    base.merge(edf(spark, [ev("c1", 0, "a", 1), ev("c2", 0, "b", 1)]), "b1")
+    mv = mv_of(base, tmp_path)
+    mv.refresh()
+    base.merge(edf(spark, [ev("c1", 1, "x", 2), ev("c2", 0, "", 3, op="delete")]), "b2")
+
+    def failing_merge(*a, **kw):
+        raise RuntimeError("injected MV merge failure")
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    mv.table.merge = failing_merge
+    with pytest.raises(RuntimeError, match="injected"):
+        mv.refresh()
+    assert jsc.getPersistentRDDs().size() == before
+    del mv.table.merge
+    mv.refresh()
+    assert_mv_equals_full(mv, base)
 
 
 def test_payload_group_column_tracks_rows_moving_between_groups(
@@ -341,7 +355,7 @@ def test_reopen_with_mismatched_group_cols_rejected(spark, tmp_path):
     --mv root must fail loudly, not merge differently-keyed rows."""
     base_t = LakeTable.create(
         spark, str(tmp_path / "b2"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     IncrementalRollup(
         base_t, str(tmp_path / "mv"), group_cols=["conv_id", "turn_idx"],

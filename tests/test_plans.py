@@ -76,7 +76,7 @@ def test_mor_read_resolves_with_partial_aggregation(spark, tmp_path):
 
     t = LakeTable.create(
         spark, str(tmp_path / "t"), keys=["conv_id", "turn_idx"], ts_col="ts",
-        n_buckets=4, merge_mode="mor",
+        n_buckets=4,
     )
     S = "conv_id string, turn_idx int, text string, ts timestamp"
     t.merge(spark.createDataFrame([("c1", 0, "a", dt.datetime(2024, 1, 1))], S), "b1")

@@ -36,7 +36,9 @@ event_st = st.fixed_dictionaries(
 )
 
 
-@pytest.mark.parametrize("merge_mode", ["mor", "cow"])
+# compact_every=1 folds every bucket to one resolved file after every batch
+# but the first (batch sequence 0)
+@pytest.mark.parametrize("compact_every", [0, 1])
 @settings(
     max_examples=8,
     deadline=None,
@@ -47,7 +49,7 @@ event_st = st.fixed_dictionaries(
     split=st.integers(0, 29),
 )
 def test_any_replay_matches_sequential_oracle(
-    spark, tmp_path_factory, merge_mode, rows, split
+    spark, tmp_path_factory, compact_every, rows, split
 ):
     tmp = tmp_path_factory.mktemp("prop")
     os.makedirs(tmp / "src")
@@ -62,7 +64,8 @@ def test_any_replay_matches_sequential_oracle(
             fmt="jsonl",
             schema=CHANGE_EVENT_SCHEMA,
             n_buckets=2,
-            merge_mode=merge_mode,
+            compact_every=compact_every,
+            compact_min_files_per_bucket=1,
         ),
     )
     if a:
@@ -77,6 +80,11 @@ def test_any_replay_matches_sequential_oracle(
     }
     exp = {k: v["text"] for k, v in expected_final_state(rows).items()}
     assert got == exp
+    if compact_every and a and b:
+        # the second batch compacted: one resolved file per bucket
+        live, _, _ = engine.lake._state()
+        buckets = [f["bucket"] for f in live.values()]
+        assert len(buckets) == len(set(buckets))
 
 
 # ----------------------------------------------------- line-scanner property
