@@ -478,6 +478,22 @@ def _primitive_name(t) -> str | None:
     return None
 
 
+def _logical_value(t) -> str | None:
+    """What a decimal/date/timestamp logical type decodes to (millis and
+    micros alike), or None when the value is the primitive's own."""
+    lt = t.get("logicalType", "") if isinstance(t, dict) else ""
+    if lt in ("decimal", "date") or "timestamp-" in lt:
+        return lt.removesuffix("-millis").removesuffix("-micros")
+    return None
+
+
+def _decimal_fits(wt: dict, rt: dict) -> bool:
+    """A reader decimal with at least the writer's scale and integer
+    digits holds every writer value exactly."""
+    ws, rs = wt.get("scale", 0), rt.get("scale", 0)
+    return rs >= ws and rt.get("precision", 10) - rs >= wt.get("precision", 10) - ws
+
+
 def reader_defaults(writer_schema: dict, reader_schema: dict) -> dict:
     """Defaults for reader fields absent from the writer (by name AND
     alias); a missing field without a default is a resolution error.
@@ -500,8 +516,10 @@ def resolve_fields(
     - primitive writer→reader type changes must follow the promotion
       lattice (int→long/float/double, long→float/double, float→double,
       string↔bytes) — anything else is a resolution error; string↔bytes
-      get a value converter (the numeric promotions need none: values
-      widen losslessly downstream);
+      and int/long → float/double get a value converter;
+    - a date/timestamp/decimal logical type reads only as the same kind
+      (millis ↔ micros; a decimal only as one at least as wide) — its
+      decoded value is not the underlying primitive's;
     - writer-only fields are dropped.
 
     Returns (plan, defaults, converters): plan is
@@ -581,10 +599,17 @@ def _value_resolver(wt, rt, path: str):
         return None  # multi-branch unions: structural downstream
     wp, rp = _primitive_name(wt), _primitive_name(rt)
     if wp is not None and rp is not None:
-        if rp not in _PROMOTIONS[wp]:
+        wl, rl = _logical_value(wt), _logical_value(rt)
+        if (
+            rp not in _PROMOTIONS[wp]
+            or wl != rl
+            or (wl == "decimal" and not _decimal_fits(wt, rt))
+        ):
+            # a decoded date/timestamp/decimal is not the reader's value
+            # (a datetime is no long), and a narrower decimal loses digits
             raise ValueError(
-                f"cannot resolve writer type {wp!r} as reader type "
-                f"{rp!r} for field {path!r} (Avro schema-resolution error)"
+                f"cannot resolve writer type {wt!r} as reader type "
+                f"{rt!r} for field {path!r} (Avro schema-resolution error)"
             )
         if wp == "bytes" and rp == "string":
             return (
@@ -594,6 +619,10 @@ def _value_resolver(wt, rt, path: str):
             )
         if wp == "string" and rp == "bytes":
             return lambda v: v.encode("utf-8") if isinstance(v, str) else v
+        if wp in ("int", "long") and rp in ("float", "double"):
+            # the reader's value is a float; an int past 2**53 would fail
+            # Arrow's safe int64 → double conversion
+            return lambda v: float(v) if isinstance(v, int) else v
         return None
     wk, rk = _kind(wt), _kind(rt)
     if wk is not None and rk is not None and wk != rk:
@@ -661,7 +690,25 @@ def _apply_plan(r: dict, plan: list, defaults: dict, converters: dict) -> dict:
 def resolve_records(records: list, writer_schema: dict, reader_schema: dict) -> list:
     """Apply record-level resolution: match by name/alias (recursively
     through nested records/arrays/maps), inject reader defaults for
-    fields the writer lacks, convert string↔bytes promotions, drop
-    writer-only fields."""
+    fields the writer lacks, convert string↔bytes and int→float
+    promotions, drop writer-only fields."""
     plan, defaults, converters = resolve_fields(writer_schema, reader_schema)
     return [_apply_plan(r, plan, defaults, converters) for r in records]
+
+
+def with_null_defaults(schema):
+    """``schema`` with every record field, nested ones included, defaulting
+    to null: a writer schema made the reader schema of a read typed by one
+    file, so a field another file lacks null-fills (as a projection does)
+    instead of failing resolution."""
+    if isinstance(schema, list):
+        return [with_null_defaults(b) for b in schema]
+    if not isinstance(schema, dict):
+        return schema
+    out = {k: with_null_defaults(v) for k, v in schema.items() if k in ("items", "values")}
+    if schema.get("type") == "record":
+        out["fields"] = [
+            {**f, "type": with_null_defaults(f["type"]), "default": None}
+            for f in schema["fields"]
+        ]
+    return {**schema, **out}

@@ -10,11 +10,12 @@ Spark-first design, not a port of the reference's record-at-a-time
 iterator: file byte-ranges are planned on the driver (fixed-length files
 split at record boundaries like a block-aligned InputFormat, so one
 100 GB dump fans out across the cluster; RDW files parallelize per file
-since the framing is sequential), decoded in executors with
-numpy-vectorized ``mapInPandas`` into FLAT Arrow columns, and the nested
-COBOL group structure (structs + OCCURS arrays) is reassembled JVM-side
-with ``F.struct``/``F.array`` — so the Python boundary moves plain typed
-columns, never Python objects per record.
+since the framing is sequential), packed into host-sized Python tasks
+(``readers._scan_bins``) that decode them numpy-vectorized into FLAT
+Arrow columns, and the nested COBOL group structure (structs + OCCURS
+arrays) is reassembled JVM-side with ``F.struct``/``F.array`` — so the
+Python boundary moves plain typed columns, never Python objects per
+record.
 """
 
 from __future__ import annotations
@@ -35,12 +36,13 @@ from .copybook import (
     Leaf,
     decode_records,
     decode_records_odo,
+    ebcdic_to_ascii_table,
     find_odos,
     flatten,
     parse_copybook,
     spark_type_for,
 )
-from .readers import WorkItem, _open_raw, register_reader
+from .readers import WorkItem, _open_raw, _scan_bins, register_reader
 
 log = logging.getLogger("kafka_connect_fs_spark")
 
@@ -146,14 +148,6 @@ def read_cobol(
     )
 
     tasks = _plan_tasks(items, lrecl, opts, sequential=opts.is_record_sequence or odo_variable)
-    if not tasks:
-        flat_df = spark.createDataFrame([], flat_schema)
-        return _assemble(flat_df, root, opts)
-
-    task_schema = "path string, start long, end long, emit_from long"
-    tasks_df = spark.createDataFrame(tasks, task_schema).repartition(
-        min(len(tasks), spark.sparkContext.defaultParallelism)
-    )
 
     # bind plain values (not self) into the executor closure
     ebcdic, code_page, trim = opts.is_ebcdic, opts.code_page, opts.trim
@@ -167,79 +161,66 @@ def read_cobol(
         next(l for l in leaves if l.f is counter) for _, counter in odos
     ]
     odo_base_size = max(c.offset + c.extent for c in root.children)
+    e2a = ebcdic_to_ascii_table(code_page)
+    odo_meta = (
+        [
+            {
+                "reader": _counter_reader(cleaf, ebcdic, e2a),
+                "counter_end": cleaf.offset + cleaf.f.size,
+                "item_size": odo.size,
+                "max_occurs": odo.occurs,
+                "min_occurs": odo.occurs_min,
+                # earlier arrays laid out before this counter shift it
+                "affect": [i for i in range(j) if odos[i][0].offset < cleaf.offset],
+            }
+            for j, ((odo, _), cleaf) in enumerate(zip(odos, odo_counter_leaves))
+        ]
+        if odo_variable
+        else []
+    )
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from kafka_connect_fs_spark.sources.copybook import ebcdic_to_ascii_table
+    def decode(task: tuple) -> Iterator[pd.DataFrame]:
+        path, start, end, emit_from = task
+        with _open_raw(path) as f:
+            if hasattr(f, "seek"):
+                f.seek(start)
+            raw = f.read(end - start)
+        if rdw:
+            recs, offsets = _frame_rdw(
+                raw, lrecl, rdw_be, rdw_adj, base=start, emit_from=emit_from,
+            )
+        elif odo_variable:
+            recs, offsets = _frame_odo(
+                raw, lrecl, odo_meta, odo_base_size, base=start,
+                emit_from=emit_from, src=path, on_desync=opts.on_desync,
+            )
+        else:
+            n = len(raw) // lrecl
+            recs = raw[: n * lrecl]
+            offsets = [start + i * lrecl for i in range(n)]
+        if not offsets:
+            return
+        m = np.frombuffer(recs, dtype=np.uint8).reshape(len(offsets), lrecl)
+        if odo_compact:
+            out = decode_records_odo(
+                m, root, ebcdic=ebcdic, trim=trim,
+                floating_point_format=float_format, debug=debug,
+                e2a=e2a,
+            )
+        else:
+            out = decode_records(
+                m, leaves, ebcdic=ebcdic, trim=trim,
+                floating_point_format=float_format, debug=debug,
+                e2a=e2a,
+            )
+        out["_src_file"] = path
+        out["_src_offset"] = pd.Series(offsets, dtype="int64")
+        yield out[col_order]
 
-        e2a = ebcdic_to_ascii_table(code_page)
-        odo_meta = (
-            [
-                {
-                    "reader": _counter_reader(cleaf, ebcdic, e2a),
-                    "counter_end": cleaf.offset + cleaf.f.size,
-                    "item_size": odo.size,
-                    "max_occurs": odo.occurs,
-                    "min_occurs": odo.occurs_min,
-                    # earlier arrays laid out before this counter shift it
-                    "affect": [
-                        i
-                        for i in range(j)
-                        if odos[i][0].offset < cleaf.offset
-                    ],
-                }
-                for j, ((odo, _), cleaf) in enumerate(
-                    zip(odos, odo_counter_leaves)
-                )
-            ]
-            if odo_variable
-            else []
-        )
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                path, start, end = row.path, int(row.start), int(row.end)
-                with _open_raw(path) as f:
-                    if hasattr(f, "seek"):
-                        f.seek(start)
-                    raw = f.read(end - start)
-                if rdw:
-                    recs, offsets = _frame_rdw(
-                        raw, lrecl, rdw_be, rdw_adj, base=start,
-                        emit_from=int(row.emit_from),
-                    )
-                elif odo_variable:
-                    recs, offsets = _frame_odo(
-                        raw, lrecl, odo_meta, odo_base_size, base=start,
-                        emit_from=int(row.emit_from), src=path,
-                        on_desync=opts.on_desync,
-                    )
-                else:
-                    n = len(raw) // lrecl
-                    recs = raw[: n * lrecl]
-                    offsets = [start + i * lrecl for i in range(n)]
-                if not offsets:
-                    continue
-                m = np.frombuffer(recs, dtype=np.uint8).reshape(len(offsets), lrecl)
-                if odo_compact:
-                    out = decode_records_odo(
-                        m, root, ebcdic=ebcdic, trim=trim,
-                        floating_point_format=float_format, debug=debug,
-                        e2a=e2a,
-                    )
-                else:
-                    out = decode_records(
-                        m,
-                        leaves,
-                        ebcdic=ebcdic,
-                        trim=trim,
-                        floating_point_format=float_format,
-                        debug=debug,
-                        e2a=e2a,
-                    )
-                out["_src_file"] = path
-                out["_src_offset"] = pd.Series(offsets, dtype="int64")
-                yield out[col_order]
-
-    flat_df = tasks_df.mapInPandas(decode, schema=flat_schema)
+    # packed by byte length with _scan_bins' default split size:
+    # input_split_size_mb stays the planning (and retry) granularity, while
+    # small runs share a task instead of each paying a Python task's cost
+    flat_df = _scan_bins(spark, tasks, [t[2] - t[1] for t in tasks], decode, flat_schema)
     return _assemble(flat_df, root, opts)
 
 

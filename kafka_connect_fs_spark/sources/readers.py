@@ -3,32 +3,36 @@
 Reference design (file/reader/*.java): one row-at-a-time Java iterator per
 file, offset = records or bytes consumed, ``seek(offset)`` to resume. Here:
 
+Every Python-side reader runs on one primitive, ``_scan_bins``: the Spark
+driver plans work items (byte ranges, whole files, COBOL record runs) and
+packs them into byte-balanced bins — ``defaultParallelism`` of them, or
+one per split of the batch if that is more — and one Arrow-batched Python
+task opens and scans one bin's files itself. A batch of many small files pays
+the Python worker's fixed cost once per core, not once per file, and no
+work list is shuffled.
+
 - **Tailable line formats** (text / JSON-lines / CSV / TSV / fixed-width):
-  a ``mapInPandas`` byte-range reader turns ``(path, start, end)`` work
-  items into Arrow batches of raw lines with exact byte offsets; *parsing*
-  then happens JVM-side with ``from_csv`` / ``from_json`` (whole-stage
-  codegen, no per-row Python). Large files are split Hadoop-style at
-  arbitrary byte boundaries with newline re-alignment, so one hot file
-  parallelizes across the cluster — something the reference's one-iterator-
-  per-file model cannot do. Planning and packing stay on the driver: the
-  ranges are packed into byte-balanced bins — ``defaultParallelism`` of
-  them, or one per ``max_split_bytes`` of the batch if that is more — and
-  one Python task scans one bin, so a batch of many small tails pays the
-  Python worker's fixed cost once per core, not once per file. Each
-  range reports its outcome (consumed end, OK / PARTIAL / FAILED, record
-  count) into a caller-supplied accumulator from inside the task, so the
-  caller learns its resume offsets from the same Spark job that consumes
-  the lines.
+  the byte-range reader turns ``(path, start, end)`` work items into Arrow
+  batches of raw lines with exact byte offsets; *parsing* then happens
+  JVM-side with ``from_csv`` / ``from_json`` (whole-stage codegen, no
+  per-row Python). Large files are split Hadoop-style at arbitrary byte
+  boundaries with newline re-alignment, so one hot file parallelizes
+  across the cluster — something the reference's one-iterator-per-file
+  model cannot do. Each range reports its outcome (consumed end, OK /
+  PARTIAL / FAILED, record count) into a caller-supplied accumulator from
+  inside the task, so the caller learns its resume offsets from the same
+  Spark job that consumes the lines.
 - **Self-describing columnar formats** (Parquet / Avro / ORC): native
   ``spark.read`` (vectorized scans, predicate pushdown, column pruning
   — the reference's hand-built Parquet ``projection``,
   ParquetFileReader.java:47-49, is Catalyst column pruning here). These are
   rotate-based: a file is ingested whole on first sight (the reference's
   "seek" for Parquet is also re-init+skip, ParquetFileReader.java:87-96).
+  Without the spark-avro jar, Avro containers decode in one Python stage.
 - **Whole-file-record formats** (YAML / XML / whole-file JSON / text with
-  record_per_line=false): an Arrow ``mapInPandas`` reads file bytes (files
-  packed into host-sized bins the same way) and converts to a JSON string
-  per record in vectorized Python; typing is again JVM-side ``from_json``.
+  record_per_line=false): one Python stage reads each file and converts
+  it to a JSON string per record, so only record text crosses the Arrow
+  boundary; typing is again JVM-side ``from_json``.
 
 Offsets are byte positions in the (decompressed) stream; gzip/bz2 files
 (CompressionType.java:3-23) cannot be random-accessed, so their tail resume
@@ -38,6 +42,7 @@ decompresses and skips — same asymptotics as the reference's
 
 from __future__ import annotations
 
+import base64
 import bz2
 import datetime
 import decimal
@@ -98,26 +103,6 @@ LINE_SCHEMA = T.StructType(
         T.StructField("value", T.StringType(), True),
     ]
 )
-
-FILE_SCHEMA = T.StructType(
-    [
-        T.StructField("_src_file", T.StringType(), False),
-        T.StructField("_src_offset", T.LongType(), False),
-        T.StructField("_src_end", T.LongType(), False),
-        T.StructField("content", T.BinaryType(), True),
-    ]
-)
-
-WORK_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("start_offset", T.LongType(), False),
-        T.StructField("snap_length", T.LongType(), False),
-        T.StructField("range_start", T.LongType(), False),
-        T.StructField("range_end", T.LongType(), False),
-    ]
-)
-
 
 @dataclass(frozen=True)
 class WorkItem:
@@ -215,7 +200,10 @@ def _scan_bins(
     fixed worker cost far above a small tail's scan time, so many small
     items collapse into one task per core; a large scan keeps about one
     task per ``split_bytes``, so one hot file still spreads over the
-    cluster and a retried task re-scans one split's worth."""
+    cluster and a retried task re-scans one split's worth. Empty ``work``
+    plans no task at all."""
+    if not work:
+        return spark.createDataFrame([], schema)
     k = max(spark.sparkContext.defaultParallelism, -(-sum(sizes) // split_bytes))
     bins = [[work[i] for i in b] for b in _pack(sizes, k)]
 
@@ -269,8 +257,6 @@ def read_lines(
     # already bounds per-task work, so losing intra-file splits costs
     # nothing.
     rows = plan_line_splits(items, 1 << 60 if max_records_per_file else max_split_bytes)
-    if not rows:
-        return spark.createDataFrame([], LINE_SCHEMA)
 
     def scan_range(r: tuple) -> Iterator[pd.DataFrame]:
         path, start_offset, snap_length, range_start, range_end = r
@@ -522,7 +508,7 @@ def read_line_format_native(
     no byte-offset tracking: the whole file is consumed, so the watermark
     commits snap_length directly. That lets the scan use Spark's native
     text/json/csv datasources — vectorized, whole-stage-codegen, no
-    Python/Arrow round-trip — instead of the mapInPandas byte-range scanner
+    Python/Arrow round-trip — instead of the Python byte-range scanner
     (which remains the *tail* path, where byte offsets are the resume unit).
 
     Lineage: ``_src_offset`` is ``monotonically_increasing_id`` — a
@@ -786,7 +772,14 @@ def parse_xml_lines(
             pdf["value"] = vals
             yield pdf
 
-    jsonl = lines.mapInPandas(to_json, LINE_SCHEMA)
+    return _parse_xml_json(lines.mapInPandas(to_json, LINE_SCHEMA), schema)
+
+
+def _parse_xml_json(jsonl: DataFrame, schema: T.StructType) -> DataFrame:
+    """Type xmltodict's JSON records: xmltodict emits every scalar as a
+    string (the reference's Jackson XML reader sees text too and infers —
+    JacksonFileReaderTest), so parse all fields as strings, then cast to
+    the declared schema."""
     parsed = jsonl.withColumn("_rec", F.from_json("value", _stringify_schema(schema)))
     casts = [
         F.col(f"_rec.{f.name}").cast(f.dataType).alias(f.name) for f in schema.fields
@@ -797,30 +790,18 @@ def parse_xml_lines(
 # ------------------------------------------------------- whole-file readers
 
 
-def read_whole_files(spark: SparkSession, items: list[WorkItem]) -> DataFrame:
-    """One record per file: (path, content bytes). Used by YAML/XML/whole-
-    file JSON/whole-file text (TextFileReader.java:54,87-92 record_per_line
-    =false; YamlFileReader.java:34-36 forces one doc per file)."""
-    if not items:
-        return spark.createDataFrame([], FILE_SCHEMA)
-
-    def scan_file(w: WorkItem) -> Iterator[pd.DataFrame]:
-        limit = None if _compression_of(w.path) else w.snap_length
-        try:
-            data = _read_decompressed(w.path, limit_compressed=limit)
-        except FileNotFoundError:
-            # vanished between listing and read (rotation/cleanup): skip —
-            # it will not appear in the next listing. Other I/O errors
-            # still fail the batch: committing the full snapshot length
-            # over a transient read failure would be silent loss.
-            log.warning("whole-file source vanished, skipping: %s", w.path)
-            return
-        yield pd.DataFrame(
-            {"_src_file": [w.path], "_src_offset": [0], "_src_end": [len(data)],
-             "content": [data]}
-        )
-
-    return _scan_bins(spark, items, [w.snap_length for w in items], scan_file, FILE_SCHEMA)
+def _read_whole(w: WorkItem) -> bytes | None:
+    """A whole file's bytes up to its listing snapshot, decompressed by
+    extension; None when it vanished between listing and read
+    (rotation/cleanup: it will not appear in the next listing). Other I/O
+    errors still fail the batch: committing the full snapshot length over
+    a transient read failure would be silent loss."""
+    limit = None if _compression_of(w.path) else w.snap_length
+    try:
+        return _read_decompressed(w.path, limit_compressed=limit)
+    except FileNotFoundError:
+        log.warning("whole-file source vanished, skipping: %s", w.path)
+        return None
 
 
 def _records_to_json_lines(content: bytes, fmt: str, options: dict) -> list[str]:
@@ -845,68 +826,62 @@ def _records_to_json_lines(content: bytes, fmt: str, options: dict) -> list[str]
         doc = json.loads(content.decode(options.get("encoding", "utf-8")))
         docs = doc if isinstance(doc, list) else [doc]
         return [json.dumps(d, default=str) for d in docs]
-    raise ValueError(f"unknown whole-file format: {fmt}")
+    raise ValueError(f"not a whole-file record format: {fmt}")
 
 
-def parse_whole_file_records(
-    files_df: DataFrame,
+def read_whole_file_records(
+    spark: SparkSession,
+    items: list[WorkItem],
     fmt: str,
-    schema: T.StructType,
+    schema: T.StructType | None = None,
     options: dict | None = None,
 ) -> DataFrame:
-    """YamlFileReader / XmlFileReader / whole-file JsonFileReader semantics.
+    """One record per document, in one Python stage: YamlFileReader /
+    XmlFileReader / whole-file JsonFileReader semantics (``fmt`` yaml / xml
+    / json, typed by ``schema``), and TextFileReader record_per_line=false
+    (``fmt="text"``: the decoded file as one string column named
+    ``options["field_name"]``, default ``value``; TextFileReader.java:54,
+    87-92). YamlFileReader.java:34-36 forces one doc per file.
 
-    Python only converts bytes → JSON text (Arrow-batched); the typed parse
-    is JVM-side ``from_json`` with the pinned schema.
-    """
+    Each task reads its files and converts them to JSON text per record,
+    so only record text crosses the Arrow boundary; the typed parse is
+    JVM-side ``from_json`` with the pinned schema."""
+    if fmt not in ("yaml", "xml", "json", "text"):
+        raise ValueError(f"unknown whole-file format: {fmt}")
     opts = options or {}
-    out_schema = T.StructType(
-        [
-            T.StructField("_src_file", T.StringType(), False),
-            T.StructField("_src_offset", T.LongType(), False),
-            T.StructField("_src_end", T.LongType(), False),
-            T.StructField("_line_no", T.LongType(), False),
-            T.StructField("value", T.StringType(), True),
-        ]
-    )
 
-    def to_json(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            # NB: not itertuples — pandas renames _-prefixed columns there
-            for src, off, end, content in zip(
-                pdf["_src_file"], pdf["_src_offset"], pdf["_src_end"], pdf["content"]
-            ):
-                try:
-                    recs = _records_to_json_lines(bytes(content), fmt, opts)
-                except Exception as e:  # malformed yaml/xml/json document
-                    # poison-file policy: warn + zero records. Unlike line
-                    # formats (retried from the committed offset), a corrupt
-                    # whole-file document can never become parseable, so it
-                    # is marked consumed rather than blocking the pipeline
-                    # forever (divergence from the reference's infinite
-                    # re-offer, documented).
-                    log.warning("unparseable %s file %s: %s", fmt, src, e)
-                    continue
-                for i, js in enumerate(recs):
-                    rows.append((src, int(off), int(end), i, js))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["_src_file", "_src_offset", "_src_end", "_line_no", "value"]
-                )
+    def scan_file(w: WorkItem) -> Iterator[pd.DataFrame]:
+        content = _read_whole(w)
+        if content is None:
+            return
+        if fmt == "text":
+            # outside the poison-file policy: a wrong ``encoding`` is a
+            # configuration error, so it fails the batch (retried)
+            recs = [content.decode(opts.get("encoding", "utf-8"))]
+        else:
+            try:
+                recs = _records_to_json_lines(content, fmt, opts)
+            except Exception as e:  # malformed yaml/xml/json document
+                # poison-file policy: warn + zero records. Unlike line
+                # formats (retried from the committed offset), a corrupt
+                # whole-file document can never become parseable, so it
+                # is marked consumed rather than blocking the pipeline
+                # forever (divergence from the reference's infinite
+                # re-offer, documented).
+                log.warning("unparseable %s file %s: %s", fmt, w.path, e)
+                return
+        if recs:
+            yield pd.DataFrame(
+                {"_src_file": w.path, "_src_offset": 0, "_src_end": len(content),
+                 "_line_no": range(len(recs)), "value": recs}
+            )
 
-    jsonl = files_df.mapInPandas(to_json, out_schema)
+    jsonl = _scan_bins(spark, items, [w.snap_length for w in items], scan_file, LINE_SCHEMA)
+    if fmt == "text":
+        return parse_text(jsonl, opts.get("field_name", "value"))
     if fmt == "xml":
-        # xmltodict emits every scalar as a string (the reference's Jackson
-        # XML reader sees text too and infers — JacksonFileReaderTest); parse
-        # as all-strings, then cast to the declared schema
-        parsed = jsonl.withColumn("_rec", F.from_json("value", _stringify_schema(schema)))
-        casts = [
-            F.col(f"_rec.{f.name}").cast(f.dataType).alias(f.name) for f in schema.fields
-        ]
-        return parsed.select("_src_file", "_src_offset", "_src_end", "_line_no", *casts)
-    parsed = jsonl.withColumn("_rec", F.from_json("value", schema))
-    return parsed.select("_src_file", "_src_offset", "_src_end", "_line_no", "_rec.*")
+        return _parse_xml_json(jsonl, schema)
+    return parse_jsonl(jsonl, schema)
 
 
 def _stringify_schema(schema: T.DataType) -> T.DataType:
@@ -974,81 +949,44 @@ def read_avro_python(
     cannot stall the pipeline. A SCHEMA-RESOLUTION error (illegal
     narrowing, missing default) is a configuration problem — it fails
     the read loudly, like GenericDatumReader, so a wrong reader schema
-    is fixed instead of silently dropping files."""
-    from kafka_connect_fs_spark.sources.avro_io import (
-        avro_to_spark_schema,
-        parse_container,
-        parse_header,
-        resolve_records,
-    )
+    is fixed instead of silently dropping files. Without ``schema`` or
+    ``reader_schema`` the schema is inferred from the first file's
+    header, and every other file resolves against it (Avro's promotions,
+    e.g. int → long, read; a missing field null-fills); a file that does
+    not resolve — a shared field narrowed or retyped — is skipped with a
+    warning, like a corrupt container."""
+    from kafka_connect_fs_spark.sources.avro_io import avro_to_spark_schema, parse_header
 
     if isinstance(reader_schema, str):
         reader_schema = json.loads(reader_schema)
-    if not items:
-        base = schema or (
-            avro_to_spark_schema(reader_schema) if reader_schema else T.StructType([])
-        )
-        return spark.createDataFrame([], _with_lineage(base))
     # a caller-supplied Spark schema is a CAST spec (from_json coerces e.g.
     # a string ts column into TimestampType); a schema derived from the
     # avro writer/reader schema types the decoded values exactly, so those
     # reads can skip the JSON round-trip (typed Arrow fast path below)
     declared_cast = schema is not None
-    if schema is None:
-        if reader_schema is not None:
-            schema = avro_to_spark_schema(reader_schema)
-        else:
-            # header-only read for inference: decoding the whole first
-            # container driver-side would stall (or OOM) on a multi-GB file
-            with _open_raw(items[0].path) as f:
-                schema = avro_to_spark_schema(parse_header(f.read(1 << 20)))
+    inferred = None  # the first file's writer schema, when the read is typed by it
+    if reader_schema is not None and schema is None:
+        schema = avro_to_spark_schema(reader_schema)
+    elif schema is None:
+        if not items:  # nothing to infer a schema from
+            return spark.createDataFrame([], "_src_file string, _src_offset long")
+        # header-only read for inference: decoding the whole first
+        # container driver-side would stall (or OOM) on a multi-GB file
+        with _open_raw(items[0].path) as f:
+            inferred = parse_header(f.read(1 << 20))
+        schema = avro_to_spark_schema(inferred)
 
-    # ONE fused python stage: the task opens its own file and decodes it
-    # (the cobol reader's shape). A read_whole_files + decode chain would
-    # be two MapInPandas stages with the container bytes crossing the
-    # Arrow boundary in between — measured ~0.7 s of pure stage latency
-    # per query on top of the decode.
-    meta = [(w.path, w.start_offset, w.snap_length, 0, 0) for w in items]
-    files_df = spark.createDataFrame(meta, WORK_SCHEMA).repartition(len(meta))
-
-    def _read_content(path, snap_length):
-        """Whole-file bytes with read_whole_files' exact semantics:
-        transparent decompression by extension, vanished-file skip."""
-        limit = None if _compression_of(path) else int(snap_length)
-        try:
-            return _read_decompressed(path, limit_compressed=limit)
-        except FileNotFoundError:
-            log.warning("whole-file source vanished, skipping: %s", path)
-            return None
-
-    def _decode(src, content):
-        """parse + per-file reader-schema resolution, poison-tolerant:
-        a corrupt container (bad magic, torn block, codec error) is
-        skipped with a warning — one poison file must not stall the
-        pipeline; a schema-RESOLUTION error still raises loudly (a wrong
-        reader schema is a configuration problem)."""
-        try:
-            writer_schema, records = parse_container(bytes(content))
-        except Exception as e:
-            log.warning("skipping corrupt avro container %s: %s", src, e)
-            return None
-        if reader_schema is not None:
-            # per-file resolution: defaults apply against THIS file's
-            # writer schema (mixed-generation directories resolve
-            # file-by-file, like the reference's reader)
-            records = resolve_records(records, writer_schema, reader_schema)
-        return records
-
+    # ONE python stage: each task opens its own files and decodes them, so
+    # the container bytes never cross the Arrow boundary
+    sizes = [w.snap_length for w in items]
     if not declared_cast:
         # typed Arrow fast path: the schema was derived from the avro
         # writer/reader schema, so the decoded Python values already have
-        # the declared types — emit them straight through the mapInPandas
-        # Arrow boundary. The former shape (records → json.dumps → JVM
-        # from_json) serialized every value twice and paid a from_json
-        # codegen per query (guide §4: one boundary crossing, no re-parse).
-        # ``_shape`` projects each record onto the declared schema exactly
-        # like from_json did: missing fields null-fill, extra writer
-        # fields drop, recursively.
+        # the declared types — emit them straight through the Arrow
+        # boundary (one boundary crossing, no JSON re-parse). Each record
+        # already has the declared shape: it was written by the first
+        # file's schema or resolved against it (or against the reader
+        # schema), which null-fills missing fields and drops extra ones.
         out_schema = T.StructType(
             [
                 T.StructField("_src_file", T.StringType(), False),
@@ -1057,94 +995,94 @@ def read_avro_python(
             ]
         )
 
-        def _shape(v, dtype):
-            if v is None:
-                return None
-            if isinstance(dtype, T.StructType):
-                if not isinstance(v, dict):
-                    return None
-                return {
-                    f.name: _shape(v.get(f.name), f.dataType) for f in dtype.fields
+        def to_rows(w: WorkItem) -> Iterator[pd.DataFrame]:
+            records = _avro_file_records(w, reader_schema, inferred)
+            if records:
+                data = {
+                    "_src_file": [w.path] * len(records),
+                    "_src_offset": [0] * len(records),
                 }
-            if isinstance(dtype, T.ArrayType):
-                if not isinstance(v, list):
-                    return None
-                return [_shape(x, dtype.elementType) for x in v]
-            if isinstance(dtype, T.MapType):
-                if not isinstance(v, dict):
-                    return None
-                return {k: _shape(x, dtype.valueType) for k, x in v.items()}
-            return v
+                for f in schema.fields:
+                    data[f.name] = [r[f.name] for r in records]
+                yield pd.DataFrame(data)
 
-        def to_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            fields = [(f.name, f.dataType) for f in schema.fields]
-            for pdf in batches:
-                for w in pdf.itertuples(index=False):
-                    src = w.path
-                    content = _read_content(src, w.snap_length)
-                    if content is None:
-                        continue
-                    records = _decode(src, content)
-                    if not records:
-                        continue
-                    data = {
-                        "_src_file": [src] * len(records),
-                        "_src_offset": [0] * len(records),
-                    }
-                    for name, dtype in fields:
-                        data[name] = [_shape(r.get(name), dtype) for r in records]
-                    yield pd.DataFrame(data)
-
-        out = files_df.mapInPandas(to_rows, out_schema)
-        if columns:
-            out = out.select("_src_file", "_src_offset", *columns)
-        return out
+        out = _scan_bins(spark, items, sizes, to_rows, out_schema)
+        return out.select("_src_file", "_src_offset", *columns) if columns else out
 
     # caller-declared Spark schema: from_json is the CAST spec (e.g. a
     # string ts column lands as TimestampType) — keep the JSON path so its
     # lenient coercion semantics stay exactly as documented
-    def to_json(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import base64
+    def jsonable(v):
+        if isinstance(v, bytes):
+            return base64.b64encode(v).decode("ascii")  # from_json binary
+        if isinstance(v, decimal.Decimal):
+            return str(v)  # quoted exact literal → DecimalType
+        if isinstance(v, datetime.datetime):
+            return v.isoformat(sep=" ")  # → TimestampType (micros kept)
+        if isinstance(v, datetime.date):
+            return v.isoformat()  # → DateType
+        if isinstance(v, dict):
+            return {k: jsonable(x) for k, x in v.items()}
+        if isinstance(v, list):
+            return [jsonable(x) for x in v]
+        return v
 
-        def jsonable(v):
-            if isinstance(v, bytes):
-                return base64.b64encode(v).decode("ascii")  # from_json binary
-            if isinstance(v, decimal.Decimal):
-                return str(v)  # quoted exact literal → DecimalType
-            if isinstance(v, datetime.datetime):
-                return v.isoformat(sep=" ")  # → TimestampType (micros kept)
-            if isinstance(v, datetime.date):
-                return v.isoformat()  # → DateType
-            if isinstance(v, dict):
-                return {k: jsonable(x) for k, x in v.items()}
-            if isinstance(v, list):
-                return [jsonable(x) for x in v]
-            return v
+    def to_json(w: WorkItem) -> Iterator[pd.DataFrame]:
+        records = _avro_file_records(w, reader_schema, inferred)
+        if records:
+            yield pd.DataFrame(
+                {"_src_file": w.path, "_src_offset": 0, "_src_end": w.snap_length,
+                 "_line_no": range(len(records)),
+                 "value": [json.dumps(jsonable(r)) for r in records]}
+            )
 
-        for pdf in batches:
-            rows = []
-            for w in pdf.itertuples(index=False):
-                src = w.path
-                content = _read_content(src, w.snap_length)
-                if content is None:
-                    continue
-                records = _decode(src, content)
-                if not records:
-                    continue
-                for i, rec in enumerate(records):
-                    rows.append((src, 0, len(content), i, json.dumps(jsonable(rec))))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["_src_file", "_src_offset", "_src_end", "_line_no", "value"],
-                )
-
-    jsonl = files_df.mapInPandas(to_json, LINE_SCHEMA)
+    jsonl = _scan_bins(spark, items, sizes, to_json, LINE_SCHEMA)
     parsed = jsonl.withColumn("_rec", F.from_json("value", schema))
     out = parsed.select("_src_file", "_src_offset", "_rec.*")
-    if columns:
-        out = out.select("_src_file", "_src_offset", *columns)
-    return out
+    return out.select("_src_file", "_src_offset", *columns) if columns else out
+
+
+def _avro_file_records(
+    w: WorkItem, reader_schema: dict | None, inferred: dict | None
+) -> list:
+    """One Avro file's records, poison-tolerant: a vanished file, a CORRUPT
+    container (bad magic, torn block, codec error) or — when the read is
+    typed by the ``inferred`` writer schema of another file — a writer
+    schema that does not resolve against it (a mixed-generation directory
+    that narrows or retypes a shared field: Arrow cannot convert its
+    values, and NULL-filling them would hide data) is skipped with a
+    warning, so one file cannot stall the pipeline. A schema-RESOLUTION
+    error against ``reader_schema`` still raises loudly (a wrong reader
+    schema is a configuration problem)."""
+    from kafka_connect_fs_spark.sources.avro_io import (
+        parse_container,
+        resolve_records,
+        with_null_defaults,
+    )
+
+    content = _read_whole(w)
+    if content is None:
+        return []
+    try:
+        writer_schema, records = parse_container(content)
+    except Exception as e:
+        log.warning("skipping corrupt avro container %s: %s", w.path, e)
+        return []
+    if reader_schema is not None:
+        # per-file resolution: defaults apply against THIS file's writer
+        # schema (mixed-generation directories resolve file-by-file, like
+        # the reference's reader)
+        return resolve_records(records, writer_schema, reader_schema)
+    if inferred is not None and writer_schema != inferred:
+        try:
+            return resolve_records(records, writer_schema, with_null_defaults(inferred))
+        except ValueError as e:
+            log.warning(
+                "skipping avro file %s: it does not resolve against the schema "
+                "inferred from the first file: %s", w.path, e,
+            )
+            return []
+    return records
 
 
 def read_columnar(
@@ -1392,7 +1330,8 @@ EXTENSION_FORMATS = {
 # file/reader/FileReader.java:10-17). Here a plugin is a callable
 #   (spark, items: list[WorkItem], options: dict) -> DataFrame
 # registered under a format name; the engine dispatches to it like any
-# built-in. Parsers should be vectorized (mapInPandas / built-in functions).
+# built-in. Parsers should be vectorized (Arrow-batched Python / built-in
+# functions).
 CUSTOM_READERS: dict[str, "Callable"] = {}
 
 from typing import Callable  # noqa: E402

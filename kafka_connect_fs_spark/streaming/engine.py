@@ -72,12 +72,11 @@ from kafka_connect_fs_spark.sources.readers import (
     parse_jsonl,
     parse_text,
     parse_xml_lines,
-    parse_whole_file_records,
     read_binary,
     read_columnar,
     read_line_format_native,
     read_lines,
-    read_whole_files,
+    read_whole_file_records,
 )
 from kafka_connect_fs_spark.sources.watermarks import WatermarkStore
 
@@ -462,23 +461,15 @@ class IngestEngine:
                 )
                 event_parts.append(self._parse_lines(fmt, lines))
             elif fmt in WHOLE_FILE_FORMATS:
-                files_df = read_whole_files(self.spark, items)
-                if fmt == "text_whole":
-                    ev = files_df.select(
-                        "_src_file",
-                        "_src_offset",
-                        "_src_end",
-                        F.lit(0).cast("long").alias("_line_no"),
-                        F.decode(F.col("content"), cfg.reader_options.get("encoding", "utf-8")).alias(
-                            cfg.reader_options.get("field_name", "value")
-                        ),
+                event_parts.append(
+                    read_whole_file_records(
+                        self.spark,
+                        items,
+                        fmt.removesuffix("_whole"),
+                        None if fmt == "text_whole" else self._require_schema(),
+                        cfg.reader_options,
                     )
-                else:
-                    wf_fmt = "json" if fmt == "json_whole" else fmt
-                    ev = parse_whole_file_records(
-                        files_df, wf_fmt, self._require_schema(), cfg.reader_options
-                    )
-                event_parts.append(ev)
+                )
             elif fmt in COLUMNAR_FORMATS:
                 event_parts.append(
                     read_columnar(

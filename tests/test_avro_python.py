@@ -80,6 +80,72 @@ def test_spark_read_typed(spark, tmp_path):
     assert avro_to_spark_schema(SCHEMA)["big"].dataType == T.LongType()
 
 
+def test_mixed_generation_drift_skips_the_retyped_file(spark, tmp_path, caplog):
+    """With no schema and no reader schema, the schema is inferred from the
+    first file and every other file resolves against it. A file that
+    retypes a shared field (x: long → string, a timestamp-millis long
+    under a plain long) or narrows it (x: double under an inferred long, a
+    narrower decimal) is skipped with a warning
+    naming it — not NULL-filled and not fatal to the read. A file that
+    adds or drops fields, or whose types Avro promotes to the inferred
+    ones (int/long/float → double, a wider decimal), reads."""
+    import decimal
+    import logging
+
+    def gen(name, fields, rows):
+        p = str(tmp_path / name)
+        write_container(p, {"type": "record", "name": "R", "fields": fields}, rows)
+        return WorkItem(p, 0, os.path.getsize(p))
+
+    def dec(precision, scale):
+        return {"type": "bytes", "logicalType": "decimal",
+                "precision": precision, "scale": scale}
+
+    a = gen("a.avro", [{"name": "x", "type": "long"}, {"name": "y", "type": "string"}],
+            [{"x": 1, "y": "p"}, {"x": 2, "y": "q"}])
+    b = gen("b.avro", [{"name": "x", "type": "string"}, {"name": "y", "type": "string"}],
+            [{"x": "three", "y": "r"}])
+    c = gen("c.avro", [{"name": "x", "type": "long"}, {"name": "z", "type": "int"}],
+            [{"x": 4, "z": 0}])
+    narrowed = gen("n.avro", [{"name": "x", "type": "double"}], [{"x": 0.5}])
+    millis = {"type": "long", "logicalType": "timestamp-millis"}
+    stamped = gen("t.avro", [{"name": "x", "type": millis}], [{"x": 5}])
+    got = read_avro_python(spark, [a, b, c, narrowed, stamped]).collect()
+    assert sorted((r._src_file, r.x, r.y) for r in got) == [
+        (a.path, 1, "p"), (a.path, 2, "q"), (c.path, 4, None)
+    ]
+
+    # widening: a double/decimal(12,4) first file types the read; int,
+    # long (past 2**53), float and a narrower-scale decimal promote to it
+    d = gen("d.avro", [{"name": "x", "type": "double"}, {"name": "m", "type": dec(12, 4)}],
+            [{"x": 0.5, "m": decimal.Decimal("1.2345")}])
+    e = gen("e.avro", [{"name": "x", "type": "int"}, {"name": "m", "type": dec(6, 2)}],
+            [{"x": 7, "m": decimal.Decimal("9.75")}])
+    f = gen("f.avro", [{"name": "x", "type": "float"}], [{"x": 1.5}])
+    g = gen("g.avro", [{"name": "x", "type": "long"}], [{"x": 2**60}])
+    h = gen("h.avro", [{"name": "x", "type": "int"}, {"name": "m", "type": dec(12, 6)}],
+            [{"x": 8, "m": decimal.Decimal("1.000001")}])
+    got = read_avro_python(spark, [d, e, f, g, h]).collect()
+    assert sorted((r._src_file, r.x, r.m) for r in got) == [
+        (d.path, 0.5, decimal.Decimal("1.2345")),
+        (e.path, 7.0, decimal.Decimal("9.7500")),
+        (f.path, 1.5, None),
+        (g.path, float(2**60), None),
+    ]
+
+    # the warning is logged inside the Python task; check it where the
+    # task's per-file decode runs
+    from kafka_connect_fs_spark.sources.readers import _avro_file_records
+
+    inferred = parse_container(open(a.path, "rb").read())[0]
+    with caplog.at_level(logging.WARNING, logger="kafka_connect_fs_spark"):
+        assert _avro_file_records(b, None, inferred) == []
+        assert _avro_file_records(narrowed, None, inferred) == []
+    assert b.path in caplog.text and "'string' as reader type 'long'" in caplog.text
+    assert narrowed.path in caplog.text
+    assert _avro_file_records(c, None, inferred) == [{"x": 4, "y": None}]
+
+
 def test_reader_schema_projection(spark, tmp_path):
     """AvroFileReader reader-schema parity (:24,43-47): a narrower declared
     schema projects; a field absent from the writer fills with null."""

@@ -431,6 +431,44 @@ def test_agnostic_mixed_format_directory(spark, tmp_path):
     assert wm == {"a.jsonl": True, "b.csv": True}
 
 
+def test_whole_file_formats_land_records_and_consume_poison_files(spark, tmp_path):
+    """The engine's whole-file branch: a good YAML file lands its records, a
+    poison (unparseable) YAML file is consumed with zero records instead of
+    stalling the pipeline, and a ``text_whole`` file lands as one record in
+    the ``field_name`` column. Every file's watermark commits eof, so the
+    next trigger reads nothing."""
+    from pyspark.sql import functions as F
+
+    def note_keys(df):  # key the text_whole record (it has only a body)
+        return (
+            df.withColumn("op", F.coalesce("op", F.lit("upsert")))
+            .withColumn("conv_id", F.coalesce("conv_id", F.lit("note")))
+            .withColumn("turn_idx", F.coalesce("turn_idx", F.lit(0)))
+            .withColumn("ts", F.coalesce("ts", F.lit("2024-01-01").cast("timestamp")))
+        )
+
+    engine = make_engine(
+        spark, tmp_path, fmt="agnostic", transform=note_keys,
+        reader_options={"explode_list": True, "field_name": "text",
+                        "format_overrides": {"txt": "text_whole"}},
+    )
+    src = tmp_path / "src"
+    (src / "good.yaml").write_text(
+        "- {op: upsert, conv_id: c1, turn_idx: 0, text: hi, ts: '2024-01-01 00:00:00'}\n"
+        "- {op: upsert, conv_id: c1, turn_idx: 1, text: yo, ts: '2024-01-01 00:00:01'}\n"
+    )
+    (src / "poison.yaml").write_text("key: [unclosed\n")
+    (src / "note.txt").write_text("free text\nsecond line\n")
+    res = engine.run_once()
+    assert res.n_files == 3 and res.quarantined == 0
+    assert table_state(engine) == {
+        ("c1", 0): "hi", ("c1", 1): "yo", ("note", 0): "free text\nsecond line\n"
+    }
+    wm = {os.path.basename(r.path): r.eof for r in engine.watermarks.load().collect()}
+    assert wm == {"good.yaml": True, "poison.yaml": True, "note.txt": True}
+    assert engine.run_once().n_files == 0
+
+
 # ------------------------------------------------- scheme-agnostic cleanup
 
 

@@ -27,13 +27,12 @@ from kafka_connect_fs_spark.sources.readers import (
     parse_xml_lines,
     parse_fixed_width,
     parse_jsonl,
-    parse_whole_file_records,
     plan_line_splits,
     read_binary,
     read_columnar,
     read_lines,
     read_sequence_file,
-    read_whole_files,
+    read_whole_file_records,
 )
 
 NUM_RECORDS = 100  # FileReaderTestBase.java:31
@@ -192,7 +191,6 @@ def test_jsonl_with_inferred_schema(spark, tmp_path):
 def test_yaml_whole_file(spark, tmp_path):
     p = tmp_path / "cfg.yaml"
     p.write_text("name: test\ncount: 42\nflag: true\n")
-    files = read_whole_files(spark, work(str(p)))
     schema = T.StructType(
         [
             T.StructField("name", T.StringType()),
@@ -200,7 +198,7 @@ def test_yaml_whole_file(spark, tmp_path):
             T.StructField("flag", T.BooleanType()),
         ]
     )
-    out = parse_whole_file_records(files, "yaml", schema).collect()
+    out = read_whole_file_records(spark, work(str(p)), "yaml", schema).collect()
     # NB: bracket access — Row.count is the tuple method
     assert len(out) == 1 and (out[0]["name"], out[0]["count"], out[0]["flag"]) == ("test", 42, True)
 
@@ -208,11 +206,12 @@ def test_yaml_whole_file(spark, tmp_path):
 def test_xml_whole_file(spark, tmp_path):
     p = tmp_path / "d.xml"
     p.write_text("<root><name>test</name><count>7</count></root>")
-    files = read_whole_files(spark, work(str(p)))
     schema = T.StructType(
         [T.StructField("name", T.StringType()), T.StructField("count", T.IntegerType())]
     )
-    out = parse_whole_file_records(files, "xml", schema, {"record_path": "root"}).collect()
+    out = read_whole_file_records(
+        spark, work(str(p)), "xml", schema, {"record_path": "root"}
+    ).collect()
     assert len(out) == 1 and (out[0]["name"], out[0]["count"]) == ("test", 7)
 
 
@@ -278,7 +277,7 @@ def test_agnostic_format_dispatch():
 
 def test_empty_work_returns_empty_frames(spark):
     assert read_lines(spark, []).count() == 0
-    assert read_whole_files(spark, []).count() == 0
+    assert read_whole_file_records(spark, [], "text").count() == 0
 
 
 def test_sequence_file_roundtrip(spark, tmp_path):
@@ -368,16 +367,23 @@ def test_sequence_file_double_and_bytes_writables(spark, tmp_path):
 def test_text_whole_file_record(spark, tmp_path):
     """record_per_line=false (TextFileReader.java:54,87-92): one record per
     file, configurable field name."""
-    from kafka_connect_fs_spark.streaming.engine import IngestConfig, IngestEngine
-
-    # exercised through read_whole_files + decode path in the engine's
-    # text_whole branch; direct reader-level check here:
-    from kafka_connect_fs_spark.sources.readers import read_whole_files
-
     p = tmp_path / "whole.txt"
     p.write_text("line1\nline2\nline3\n")
-    out = read_whole_files(spark, work(str(p))).collect()
-    assert len(out) == 1 and bytes(out[0].content).decode() == "line1\nline2\nline3\n"
+    out = read_whole_file_records(spark, work(str(p)), "text").collect()
+    assert len(out) == 1 and out[0].value == "line1\nline2\nline3\n"
+    named = read_whole_file_records(spark, work(str(p)), "text", None, {"field_name": "body"})
+    assert [r.body for r in named.collect()] == ["line1\nline2\nline3\n"]
+
+
+def test_text_whole_file_wrong_encoding_fails_the_read(spark, tmp_path):
+    """A wrong ``encoding`` is a configuration error, not a poison file: the
+    read fails (and is retried) instead of consuming the file with zero
+    records."""
+    p = tmp_path / "whole.txt"
+    p.write_bytes("café\n".encode("utf-8"))
+    out = read_whole_file_records(spark, work(str(p)), "text", None, {"encoding": "ascii"})
+    with pytest.raises(Exception, match="UnicodeDecodeError"):
+        out.collect()
 
 
 def test_rows_to_skip_preamble(spark, tmp_path):
@@ -733,9 +739,8 @@ def test_whole_file_vanished_is_skipped_not_fatal(spark, tmp_path):
         WorkItem(keep, 0, os.path.getsize(keep)),
         WorkItem(gone, 0, 10),  # listed, then vanished before read
     ]
-    from kafka_connect_fs_spark.sources.readers import read_whole_files
-
-    rows = read_whole_files(spark, items).collect()
+    schema = T.StructType.fromDDL("a long")
+    rows = read_whole_file_records(spark, items, "yaml", schema).collect()
     assert [r._src_file for r in rows] == [keep]
 
 
@@ -758,6 +763,43 @@ def test_scan_packs_ranges_into_host_sized_tasks(spark, tmp_path):
     assert by_path.pop(gone) == (gone, 3, 3, RANGE_FAILED, 0)
     assert all(o.kind == RANGE_OK for o in by_path.values())
     assert sum(o.records for o in by_path.values()) == sum(range(1, 13))
+
+
+def test_python_readers_run_one_python_stage_without_shuffle(spark, tmp_path):
+    """Avro, COBOL and whole-file YAML reads each plan exactly one Python
+    stage and no Exchange: each task opens its own files (no work-list
+    DataFrame to shuffle), and whole-file records parse in the stage that
+    reads them."""
+    from kafka_connect_fs_spark.sources.avro_io import write_container
+    from kafka_connect_fs_spark.sources.cobol import read_cobol
+    from kafka_connect_fs_spark.sources.readers import read_avro_python
+
+    avro_schema = {"type": "record", "name": "R", "fields": [{"name": "x", "type": "long"}]}
+    avro, cobol, yaml = [], [], []
+    for i in range(3):
+        p = str(tmp_path / f"a{i}.avro")
+        write_container(p, avro_schema, [{"x": i}])
+        avro.append(WorkItem(p, 0, os.path.getsize(p)))
+        p = tmp_path / f"c{i}.dt"
+        p.write_bytes(b"AAAABBBB")
+        cobol.append(WorkItem(str(p), 0, 8))
+        p = tmp_path / f"y{i}.yaml"
+        p.write_text(f"a: {i}\n")
+        yaml.append(WorkItem(str(p), 0, os.path.getsize(p)))
+    reads = {
+        "avro": (read_avro_python(spark, avro), 3),
+        "cobol": (
+            read_cobol(spark, cobol, {"copybook_content": "01 X PIC X(4).",
+                                      "is_ebcdic": False, "schema_policy": "collapse_root"}),
+            6,
+        ),
+        "yaml": (read_whole_file_records(spark, yaml, "yaml", T.StructType.fromDDL("a long")), 3),
+    }
+    for name, (df, n) in reads.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("MapInPandas") == 1, (name, plan)
+        assert "Exchange" not in plan, (name, plan)
+        assert df.count() == n, name
 
 
 def test_large_scan_keeps_one_task_per_split(spark, tmp_path):
