@@ -1471,3 +1471,56 @@ def test_merge_and_compact_job_counts(spark, tmp_path):
     assert c is not None and {a["bucket"] for a in c.added} == {0, 1}
     assert _jobs_in_group(spark, "pin-merge") == 2
     assert _jobs_in_group(spark, "pin-compact") == 4
+
+
+def test_read_path_job_counts(spark, tmp_path):
+    """Spark jobs per read-side call on a 4-bucket table after two merges:
+    the resolved scan (pruned or not), both lookups, the range read, the
+    change feed, tombstone expiry and an initial and a partial MV
+    refresh. Measured at the parent of the one-read-path change; a read
+    that plans an extra pass (or an empty selection that plans a resolve)
+    fails here."""
+    from kafka_connect_fs_spark.plans.materialized import IncrementalRollup
+    from tests.test_engine import _jobs_in_group
+
+    t = LakeTable.create(spark, str(tmp_path / "jobs"), keys=["conv_id", "turn_idx"],
+                         ts_col="ts", n_buckets=4)
+    t.merge(edf(spark, [ev(f"c{i % 10}", i // 10, f"t{i}", i) for i in range(40)]), "b0")
+    mv = IncrementalRollup(t, str(tmp_path / "mv"), group_cols=["conv_id"],
+                           aggs={"n": F.count(F.lit(1))}, n_buckets=4)
+    sc = spark.sparkContext
+
+    def in_group(group, fn):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    in_group("pin-refresh-initial", mv.refresh)
+    t.merge(edf(spark, [ev("c1", 0, "new", 50), ev("c2", 0, None, 50, op="delete")]), "b1")
+    in_group("pin-refresh-partial", mv.refresh)
+    calls = {
+        "pin-read": lambda: t.read().count(),
+        "pin-read-columns": lambda: t.read(columns=["conv_id", "text"]).count(),
+        "pin-read-key-hit": lambda: t.read_key("c1").collect(),
+        "pin-read-key-absent": lambda: t.read_key("absent").collect(),
+        "pin-read-range": lambda: t.read_range(ts(5), ts(30)).count(),
+        "pin-read-changes": lambda: t.read_changes(0).count(),
+        "pin-expire": lambda: t.expire_tombstones(ts(1000)),
+    }
+    for group, fn in calls.items():
+        in_group(group, fn)
+    got = {g: _jobs_in_group(spark, g)
+           for g in ["pin-refresh-initial", "pin-refresh-partial", *calls]}
+    assert got == {
+        "pin-refresh-initial": 5,
+        "pin-refresh-partial": 18,
+        "pin-read": 4,
+        "pin-read-columns": 4,
+        "pin-read-key-hit": 3,
+        "pin-read-key-absent": 1,
+        "pin-read-range": 4,
+        "pin-read-changes": 3,
+        "pin-expire": 7,
+    }
