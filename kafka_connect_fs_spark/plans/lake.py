@@ -29,6 +29,14 @@ Scale design (100 TB / 10^10 events):
   attempt lands in a unique data dir, so a losing concurrent writer can
   only leave vacuum-able orphans, never clobber committed files.
 
+Read path: read(), read_key(), read_range() and the MV refresh differ
+only in which files they select (all live files; a key's bucket under
+each file's scheme plus key stats; ts stats). Everything after the
+selection is one view (``_view``): prune columns, filter, LWW-resolve,
+drop tombstones (a NULL op is an upsert) and internal columns. Bucket
+selection (``_files_in_buckets``, ``_buckets_by_scheme``) and the commit
+window (``_change_commits``) each have one helper too.
+
 Reference parity notes: the reference emits records to Kafka at-least-once
 (docs/source/faq.rst:7-17); this table upgrades that to exactly-once lake
 state via idempotent MERGE + batch_id replay guard.
@@ -43,7 +51,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -110,6 +118,19 @@ def _iso(ts):
     if hasattr(ts, "isoformat"):
         return ts.isoformat()
     return ts
+
+
+def _may_hold(a: dict, col: str, test) -> bool:
+    """Whether a file may hold rows passing ``test(min, max)`` on its
+    ``{col}_min``/``{col}_max`` footer stats. Unknown stats, and stats
+    typed differently than the bound (incomparable), never prune."""
+    lo, hi = a.get(f"{col}_min"), a.get(f"{col}_max")
+    if lo is None or hi is None:
+        return True
+    try:
+        return test(lo, hi)
+    except TypeError:
+        return True
 
 
 @dataclass
@@ -438,24 +459,60 @@ class LakeTable:
                 df = df.withColumnRenamed(old, new)
         return df
 
+    def _scheme(self, a: dict) -> int:
+        # files written before bucket-spec evolution carry no scheme tag
+        return a.get("scheme", self._base_n_buckets)
+
+    def _files_in_buckets(self, live: dict, by_scheme: dict) -> list[str]:
+        """The live files holding the buckets of ``by_scheme`` ({scheme:
+        bucket ids}), each file matched under the scheme it was WRITTEN
+        with: after ``set_n_buckets`` a key's bucket id differs between
+        old- and new-scheme files."""
+        return [
+            p for p, a in live.items()
+            if a["bucket"] in by_scheme.get(self._scheme(a), ())
+        ]
+
+    def _buckets_by_scheme(self, keys: DataFrame, schemes) -> dict[int, set[int]]:
+        """{scheme: the buckets ``keys``' first-key values hash to under
+        it}, for every scheme in ``schemes``, in ONE small aggregate (≤
+        n_buckets ints per scheme reach the driver); no job when
+        ``schemes`` is empty."""
+        if not schemes:
+            return {}
+        row = keys.agg(
+            *[
+                F.collect_set(self._bucket_expr(self.keys[0], s)).alias(f"s{s}")
+                for s in schemes
+            ]
+        ).collect()[0]
+        return {s: set(row[f"s{s}"]) for s in schemes}
+
+    def _table_schema(self, st: _State) -> T.StructType | None:
+        """``st``'s committed schema with its renames applied, None if
+        never written."""
+        if not st.schema_json:
+            return None
+        schema = T.StructType.fromJson(json.loads(st.schema_json))
+        for old, new in st.renames.items():
+            if old in schema.fieldNames():
+                schema[old].name = new  # type: ignore[misc]
+        return schema
+
+    def _empty_frame(self, st: _State) -> DataFrame:
+        # a never-written table has no schema: just the key columns
+        schema = self._table_schema(st) or T.StructType(
+            [T.StructField(k, T.StringType()) for k in self.keys]
+        )
+        return self.spark.createDataFrame([], schema)
+
     def snapshot(self, at_version: int | None = None) -> DataFrame:
         """Full table including lineage + bucket columns; ``at_version``
         reads the table as of that commit (time travel — every commit's file
         set is reconstructable until vacuum() removes dead files)."""
-        live, schema_json, renames = self._state(at_version)
-        df = self._read_files(list(live), renames=renames)
-        if df is not None:
-            return df
-        if schema_json:
-            schema = T.StructType.fromJson(json.loads(schema_json))
-            for old, new in renames.items():
-                if old in schema.fieldNames():
-                    schema[old].name = new  # type: ignore[misc]
-            return self.spark.createDataFrame([], schema)
-        # never-written table: empty frame with just the key columns
-        return self.spark.createDataFrame(
-            [], T.StructType([T.StructField(k, T.StringType()) for k in self.keys])
-        )
+        st = self._state_full(at_version)
+        df = self._read_files(list(st.live), renames=st.renames)
+        return self._empty_frame(st) if df is None else df
 
     def _resolve(self, df: DataFrame) -> DataFrame:
         """Read-time LWW resolve: one row per key across base+delta files
@@ -464,28 +521,37 @@ class LakeTable:
         output, or a table an older build wrote copy-on-write) come out
         unchanged."""
         if not all(k in df.columns for k in self.keys) or self.ts_col not in df.columns:
-            return df  # never-written placeholder frame
+            return df  # no key/ts columns to resolve on
         return lww_dedup(df, self.keys, self.ts_col)
 
-    def read(
-        self, at_version: int | None = None, columns: Sequence[str] | None = None
+    def _view(
+        self,
+        st: _State,
+        files: Sequence[str],
+        where: Column | None = None,
+        columns: Sequence[str] | None = None,
     ) -> DataFrame:
-        """User-facing view: LWW-resolved, tombstones filtered,
-        lineage/bucket dropped.
+        """The user-facing view of ``files`` under ``st``'s renames:
+        LWW-resolved, tombstones filtered (null-safe: a NULL ``op`` is an
+        upsert), lineage/bucket/op dropped.
 
-        ``columns`` prunes the scan BELOW the LWW resolve: the MoR
-        aggregate packs the whole row into a struct (operators/lww.py),
-        which blocks Catalyst's column pruning — a ``read().select("x")``
-        still scans every payload column. Projecting before the resolve
-        pushes the pruning into the parquet ReadSchema (keys, ts and the
-        lineage tie-break are retained internally so LWW determinism is
-        unchanged, then dropped unless requested). At 10^10-row scale the
-        difference is reading one column family instead of the table."""
-        df = self.snapshot(at_version)
+        ``where`` filters rows BEFORE the resolve, so the LWW shuffle
+        carries only the matching rows. ``columns`` prunes the scan below
+        the resolve too: the MoR aggregate packs the whole row into a
+        struct (operators/lww.py), which blocks Catalyst's column pruning,
+        so only a projection before it reaches the parquet ReadSchema
+        (keys, ts and the lineage tie-break are kept for the resolve, then
+        dropped unless requested). An empty selection is ``st``'s empty
+        frame with the same columns (callers union per-window pages) and
+        plans no read or resolve."""
+        df = self._read_files(files, renames=st.renames)
+        selected = df is not None
+        if not selected:
+            df = self._empty_frame(st)
         if columns is not None:
             missing = [c for c in columns if c not in df.columns]
             if missing:
-                raise ValueError(f"read(columns=...): not in table: {missing}")
+                raise ValueError(f"columns=...: not in table: {missing}")
             # keep only internals the frame actually has: a never-written
             # table's placeholder frame is keys-only (no ts/lineage)
             need = [
@@ -496,12 +562,24 @@ class LakeTable:
                 if c in df.columns
             ]
             df = df.select(*need)
-        df = self._resolve(df)
-        if _OP_COL in df.columns:
-            df = df.filter(F.col(_OP_COL) != F.lit("delete"))
-        drop = [c for c in (*LINEAGE_COLS, _BUCKET_COL, _OP_COL) if c in df.columns]
-        df = df.drop(*drop)
+        if selected:
+            if where is not None:
+                df = df.filter(where)
+            df = self._resolve(df)
+            if _OP_COL in df.columns:
+                df = df.filter(~F.col(_OP_COL).eqNullSafe(F.lit("delete")))
+        df = df.drop(*LINEAGE_COLS, _BUCKET_COL, _OP_COL)
         return df.select(*columns) if columns is not None else df
+
+    def read(
+        self, at_version: int | None = None, columns: Sequence[str] | None = None
+    ) -> DataFrame:
+        """User-facing view: LWW-resolved, tombstones filtered,
+        lineage/bucket dropped; ``at_version`` reads the table as of that
+        commit. ``columns`` prunes the parquet scan below the resolve (see
+        ``_view``): at 10^10 rows, one column family instead of the table."""
+        st = self._state_full(at_version)
+        return self._view(st, list(st.live), columns=columns)
 
     def _key_int_width(self) -> int:
         """Byte width Spark's XxHash64 uses for the first key column: 4
@@ -531,37 +609,17 @@ class LakeTable:
         new-scheme files alike."""
         h = spark_xxhash64(key_value, self._key_int_width())
 
-        def _covers(a: dict) -> bool:
-            # second-level pruning: per-file [key_min, key_max] footer
-            # stats (tight after key-clustered compaction) skip the
-            # bucket's sibling files too; unknown or type-incomparable
-            # stats are never pruned
-            lo, hi = a.get("key_min"), a.get("key_max")
-            if lo is None or hi is None:
-                return True
-            try:
-                return lo <= key_value <= hi
-            except TypeError:
-                return True
-
-        live, _, _ = self._state()
+        st = self._state_full()
+        schemes = {self._scheme(a) for a in st.live.values()}
+        # second-level pruning: per-file [key_min, key_max] footer stats
+        # (tight after key-clustered compaction) skip the bucket's sibling
+        # files too
         files = [
             p
-            for p, a in live.items()
-            if a["bucket"] == h % a.get("scheme", self._base_n_buckets)
-            and _covers(a)
+            for p in self._files_in_buckets(st.live, {s: {h % s} for s in schemes})
+            if _may_hold(st.live[p], "key", lambda lo, hi: lo <= key_value <= hi)
         ]
-        df = self._read_files(files)
-        if df is None:
-            return self.read().limit(0)
-        # filter BEFORE the MoR resolve: the LWW shuffle then carries only
-        # this key's rows, not the whole bucket
-        df = df.filter(F.col(self.keys[0]) == F.lit(key_value))
-        df = self._resolve(df)
-        if _OP_COL in df.columns:
-            df = df.filter(F.col(_OP_COL) != F.lit("delete"))
-        drop = [c for c in (*LINEAGE_COLS, _BUCKET_COL, _OP_COL) if c in df.columns]
-        return df.drop(*drop)
+        return self._view(st, files, where=F.col(self.keys[0]) == F.lit(key_value))
 
     def delete_where(
         self,
@@ -682,43 +740,16 @@ class LakeTable:
         ``columns`` prunes the scan below the LWW resolve exactly like
         ``read(columns=...)`` — an incremental export of two columns
         should not read twenty."""
-        files = self.files_in_range(ts_from, ts_to)
-        df = self._read_files(files)
-        if df is None:
-            # empty window: still honor the projection contract (schema
-            # stability for callers unioning per-window pages) and the
-            # unknown-column validation
-            empty = self.read().limit(0)
-            if columns is not None:
-                missing = [c for c in columns if c not in empty.columns]
-                if missing:
-                    raise ValueError(
-                        f"read_range(columns=...): not in table: {missing}"
-                    )
-                empty = empty.select(*columns)
-            return empty
-        if columns is not None:
-            missing = [c for c in columns if c not in df.columns]
-            if missing:
-                raise ValueError(f"read_range(columns=...): not in table: {missing}")
-            need = [
-                c
-                for c in dict.fromkeys(
-                    [*columns, *self.keys, self.ts_col, *LINEAGE_COLS, _OP_COL]
-                )
-                if c in df.columns
-            ]
-            df = df.select(*need)
+        st = self._state_full()
+        ts = F.col(self.ts_col)
+        where = F.lit(True)
         if ts_from is not None:
-            df = df.filter(F.col(self.ts_col) >= F.lit(ts_from))
+            where &= ts >= F.lit(ts_from)
         if ts_to is not None:
-            df = df.filter(F.col(self.ts_col) < F.lit(ts_to))
-        df = self._resolve(df)
-        if _OP_COL in df.columns:
-            df = df.filter(F.col(_OP_COL) != F.lit("delete"))
-        drop = [c for c in (*LINEAGE_COLS, _BUCKET_COL, _OP_COL) if c in df.columns]
-        df = df.drop(*drop)
-        return df.select(*columns) if columns is not None else df
+            where &= ts < F.lit(ts_to)
+        return self._view(
+            st, self.files_in_range(ts_from, ts_to), where=where, columns=columns
+        )
 
     def read_changes(
         self, from_version: int, to_version: int | None = None
@@ -742,10 +773,16 @@ class LakeTable:
         older build: its files are whole resolved buckets, not changes, so
         it raises instead of serving them."""
         to_v = self.latest_version() if to_version is None else to_version
-        parts = []
+        return self._changes(self._change_commits(from_version, to_v))
+
+    def _change_commits(self, lo: int, hi: int) -> list[Commit]:
+        """The batch commits in versions (lo, hi]: the commit window
+        read_changes serves and an MV refresh absorbs. Versions are
+        filtered by FILENAME before anything is parsed, so a cold tailer
+        against a 10^5-commit log reads O(window) commit files."""
+        window = []
         for name in self._list_commit_names():
-            v = int(name[:20])
-            if v <= from_version or v > to_v:
+            if not lo < int(name[:20]) <= hi:
                 continue
             c = self._load_commit(name)
             if c.batch_id is None or not c.added:
@@ -756,13 +793,12 @@ class LakeTable:
                     "buckets (copy-on-write by an older build); its files "
                     "are not a change set"
                 )
-            df = self._read_files([a["path"] for a in c.added])
-            parts.append(
-                df.withColumn(
-                    "_commit_version", F.lit(c.version).cast("long")
-                ).withColumn("_batch_id", F.lit(c.batch_id))
-            )
-        if not parts:
+            window.append(c)
+        return window
+
+    def _changes(self, window: list[Commit]) -> DataFrame:
+        """The change events of ``window`` (see read_changes)."""
+        if not window:
             # mirror the NON-empty schema (raw change-file columns, incl.
             # `op` and lineage) so a consumer unioning polls across calls
             # never hits a schema clash on an empty poll
@@ -776,37 +812,30 @@ class LakeTable:
                 if raw is not None
                 else self.read().limit(0).withColumn(_OP_COL, F.lit(""))
             )
-            empty = empty.withColumn(
+            return empty.withColumn(
                 "_commit_version", F.lit(0).cast("long")
-            ).withColumn("_batch_id", F.lit(""))
-            drop = [c for c in (_BUCKET_COL,) if c in empty.columns]
-            return empty.drop(*drop)
+            ).withColumn("_batch_id", F.lit("")).drop(_BUCKET_COL)
+        parts = [
+            self._read_files([a["path"] for a in c.added])
+            .withColumn("_commit_version", F.lit(c.version).cast("long"))
+            .withColumn("_batch_id", F.lit(c.batch_id))
+            for c in window
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
-        drop = [c for c in (_BUCKET_COL,) if c in out.columns]
-        return out.drop(*drop)
+        return out.drop(_BUCKET_COL)
 
     def files_in_range(self, ts_from=None, ts_to=None) -> list[str]:
         """The live files read_range would open (exposed for tests/metrics)."""
         live, _, _ = self._state()
-        out = []
-        for p, a in live.items():
-            lo, hi = a.get("ts_min"), a.get("ts_max")
-            if lo is None or hi is None:
-                out.append(p)
-            else:
-                # like read_key's _covers: incomparable stats (stored stats
-                # typed differently than the bound) never prune
-                try:
-                    keep = (ts_to is None or lo < _iso(ts_to)) and (
-                        ts_from is None or hi >= _iso(ts_from)
-                    )
-                except TypeError:
-                    keep = True
-                if keep:
-                    out.append(p)
-        return sorted(out)
+
+        def overlaps(lo, hi) -> bool:
+            return (ts_to is None or lo < _iso(ts_to)) and (
+                ts_from is None or hi >= _iso(ts_from)
+            )
+
+        return sorted(p for p, a in live.items() if _may_hold(a, "ts", overlaps))
 
     # ---------------------------------------------------------------- merge
     def merge(
@@ -819,7 +848,8 @@ class LakeTable:
     ) -> Commit:
         """Idempotent MERGE: upsert rows of ``source`` keyed ``self.keys``
         with last-writer-wins on ``self.ts_col``; rows with ``op='delete'``
-        remove the key (as tombstones that keep winning LWW).
+        remove the key (as tombstones that keep winning LWW), and a NULL
+        or missing ``op`` is stored as ``'upsert'``.
 
         Merge-on-read: ONE bucket-partitioned delta write, no target read,
         no rewrite — write amplification is O(batch) however large the
@@ -850,9 +880,9 @@ class LakeTable:
             if existing is not None:
                 return existing
 
-        src = source
-        if _OP_COL not in src.columns:
-            src = src.withColumn(_OP_COL, F.lit("upsert"))
+        # a missing or NULL op is an upsert
+        op = F.col(_OP_COL) if _OP_COL in source.columns else F.lit(None)
+        src = source.withColumn(_OP_COL, F.coalesce(op, F.lit("upsert")))
         for c in LINEAGE_COLS:
             if c not in src.columns:
                 src = src.withColumn(
@@ -1110,14 +1140,7 @@ class LakeTable:
 
     def current_schema(self) -> T.StructType | None:
         """Latest committed schema (post-renames), None if never written."""
-        _, schema_json, renames = self._state()
-        if not schema_json:
-            return None
-        schema = T.StructType.fromJson(json.loads(schema_json))
-        for old, new in renames.items():
-            if old in schema.fieldNames():
-                schema[old].name = new  # type: ignore[misc]
-        return schema
+        return self._table_schema(self._state_full())
 
     # ----------------------------------------------------------- maintenance
     def compact(
@@ -1144,8 +1167,7 @@ class LakeTable:
         # under different schemes are different key partitions
         by_bucket: dict[tuple[int, int], list[str]] = {}
         for p, a in st.live.items():
-            s = a.get("scheme", self._base_n_buckets)
-            by_bucket.setdefault((s, a["bucket"]), []).append(p)
+            by_bucket.setdefault((self._scheme(a), a["bucket"]), []).append(p)
         targets = {
             sb: ps
             for sb, ps in by_bucket.items()
@@ -1183,10 +1205,7 @@ class LakeTable:
         df = self._resolve(self._read_files(old_files))
         if drop is not None:
             df = df.filter(~drop)
-        stored = {
-            (st.live[p].get("scheme", self._base_n_buckets), st.live[p]["bucket"])
-            for p in old_files
-        }
+        stored = {(self._scheme(st.live[p]), st.live[p]["bucket"]) for p in old_files}
         if {s for s, _ in stored} != {nb}:
             # bucket-spec transition: output files must be single-scheme —
             # re-stamp under the current scheme (a no-op value-wise for
@@ -1285,35 +1304,17 @@ class LakeTable:
             F.col(self.ts_col) < F.lit(older_than)
         )
         st = self._state_full()
-        default = self._base_n_buckets
-        schemes = sorted({a.get("scheme", default) for a in st.live.values()})
-        # the expired keys' bucket under EVERY live scheme, in one small
-        # aggregate (≤ n_buckets ints per scheme reach the driver): during
-        # a bucket-spec transition a tombstoned key's loser versions can
-        # sit in a file of another scheme whose bucket id differs from the
+        # the expired keys' bucket under EVERY live scheme: during a
+        # bucket-spec transition a tombstoned key's loser versions can sit
+        # in a file of another scheme whose bucket id differs from the
         # tombstone file's — skipping that file would let dropping the
         # tombstone resurrect them at read time
         kc = self.keys[0]
-        row = (
-            snap.filter(expired_rows)
-            .select(kc)
-            .distinct()
-            .agg(
-                *[
-                    F.collect_set(
-                        F.pmod(F.xxhash64(F.col(kc)), F.lit(s)).cast("int")
-                    ).alias(f"s{s}")
-                    for s in schemes
-                ]
-            )
-            .collect()[0]
+        by_scheme = self._buckets_by_scheme(
+            snap.filter(expired_rows).select(kc).distinct(),
+            sorted({self._scheme(a) for a in st.live.values()}),
         )
-        by_scheme = {s: set(row[f"s{s}"]) for s in schemes}
-        old_files = [
-            p
-            for p, a in st.live.items()
-            if a["bucket"] in by_scheme[a.get("scheme", default)]
-        ]
+        old_files = self._files_in_buckets(st.live, by_scheme)
         if not old_files:
             return None
         return self._rewrite_buckets(

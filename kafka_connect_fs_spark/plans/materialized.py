@@ -153,32 +153,16 @@ class IncrementalRollup:
         every window commit share one scheme — union the manifests'
         bucket tags, zero Spark jobs. Slow path (mid bucket-spec
         migration): hash the change feed's group keys under each live
-        scheme in ONE small aggregate (≤ n_buckets ints per scheme reach
-        the driver)."""
-        default = self.base._base_n_buckets
-        live_schemes = {a.get("scheme", default) for a in live.values()}
-        commit_schemes = {
-            a.get("scheme", default) for c in commits for a in c.added
-        }
+        scheme in one small aggregate."""
+        base = self.base
+        live_schemes = {base._scheme(a) for a in live.values()}
+        commit_schemes = {base._scheme(a) for c in commits for a in c.added}
         if len(live_schemes | commit_schemes) == 1:
             s = next(iter(live_schemes | commit_schemes))
             return {s: {a["bucket"] for c in commits for a in c.added}}
-        g = self.group_cols[0]
-        sorted_schemes = sorted(live_schemes)
-        row = (
-            changes.select(g)
-            .distinct()
-            .agg(
-                *[
-                    F.collect_set(
-                        F.pmod(F.xxhash64(F.col(g)), F.lit(s)).cast("int")
-                    ).alias(f"s{s}")
-                    for s in sorted_schemes
-                ]
-            )
-            .collect()[0]
+        return base._buckets_by_scheme(
+            changes.select(self.group_cols[0]).distinct(), sorted(live_schemes)
         )
-        return {s: set(row[f"s{s}"]) for s in sorted_schemes}
 
     def _read_prev_groups(
         self, touched_keys: DataFrame, known: dict[int, set[int]] | None = None
@@ -193,38 +177,16 @@ class IncrementalRollup:
         any MV scheme equal to a base scheme reuses the base's
         manifest-derived set with zero Spark jobs (the common case — MV
         and base share a bucket count). Only schemes not covered run one
-        tiny aggregate (≤ n_buckets ints per scheme to the driver)."""
+        tiny aggregate."""
         mv = self.table
-        live, _, renames = mv._state()
-        if not live:
-            return mv.read().select(*self.group_cols).limit(0)
-        bk = self.group_cols[0]
-        default = mv._base_n_buckets
-        schemes = sorted({a.get("scheme", default) for a in live.values()})
-        by_scheme = {s: set(known[s]) for s in schemes if known and s in known}
-        missing = [s for s in schemes if s not in by_scheme]
-        if missing:
-            row = touched_keys.agg(
-                *[
-                    F.collect_set(
-                        F.pmod(F.xxhash64(F.col(bk)), F.lit(s)).cast("int")
-                    ).alias(f"s{s}")
-                    for s in missing
-                ]
-            ).collect()[0]
-            by_scheme.update({s: set(row[f"s{s}"]) for s in missing})
-        files = [
-            p
-            for p, a in live.items()
-            if a["bucket"] in by_scheme[a.get("scheme", default)]
-        ]
-        df = mv._read_files(files, renames=renames)
-        if df is None:
-            return mv.read().select(*self.group_cols).limit(0)
-        df = mv._resolve(df)
-        if "op" in df.columns:
-            df = df.filter(F.col("op") != F.lit("delete"))
-        return df.select(*self.group_cols)
+        st = mv._state_full()
+        schemes = {mv._scheme(a) for a in st.live.values()}
+        by_scheme = {s: known[s] for s in schemes if known and s in known}
+        by_scheme.update(
+            mv._buckets_by_scheme(touched_keys, sorted(schemes - set(by_scheme)))
+        )
+        files = mv._files_in_buckets(st.live, by_scheme)
+        return mv._view(st, files).select(*self.group_cols)
 
     def refresh(self, to_version: int | None = None) -> RefreshStats:
         """Bring the MV up to ``to_version`` (default: the base head).
@@ -259,40 +221,23 @@ class IncrementalRollup:
         # MV claim a version it doesn't reflect (self-healing on the next
         # refresh, but snapshot-pinning makes it exact beside a live
         # writer — the deployment jobs/mv_job.py runs in)
-        live, _, renames = base._state(head)
-        if head <= last:
+        st = base._state_full(head)
+        live = st.live
+        initial = last < 0
+        window = None if initial else base._change_commits(last, head)
+        if head <= last or window == []:
+            # caught up, or only maintenance / metadata commits in the
+            # window: no logical changes, nothing to absorb (the MV stays
+            # pinned at `last`; read_changes would skip these anyway)
             return RefreshStats(last, last, 0, 0, 0, len(live), True)
 
-        initial = last < 0
         if initial:
             candidates = list(live)
             touched_keys = None
         else:
-            # filter by the version encoded in the FILENAME before parsing
-            # anything — a cold tailer against a 10^5-commit log must read
-            # O(window) commit files, not O(log)
-            window = [
-                c
-                for c in (
-                    base._load_commit(n)
-                    for n in base._list_commit_names()
-                    if last < int(n[:20]) <= head
-                )
-                if c.batch_id is not None and c.added
-            ]
-            if not window:
-                # only maintenance / metadata commits in the window: no
-                # logical changes, nothing to absorb (the MV stays pinned
-                # at `last`; read_changes would skip these anyway)
-                return RefreshStats(last, last, 0, 0, 0, len(live), True)
-            changes = base.read_changes(last, head)
+            changes = base._changes(window)
             by_scheme = self._touched_buckets_by_scheme(window, live, changes)
-            default = base._base_n_buckets
-            candidates = [
-                p
-                for p, a in live.items()
-                if a["bucket"] in by_scheme.get(a.get("scheme", default), ())
-            ]
+            candidates = base._files_in_buckets(live, by_scheme)
             # touched BUCKET KEYS, not touched group values: change rows
             # carry only their NEW column values (and delete tombstones
             # carry keys alone), so deriving groups from the change feed
@@ -303,24 +248,22 @@ class IncrementalRollup:
             # groups the MV previously held for them — is correct for
             # arbitrary group columns (role, time windows, ...).
             # persist: feeds the semi-join AND the gone-group anti-join
-            bk = self.group_cols[0]
-            touched_keys = persist(changes.select(bk).distinct())
+            touched_keys = persist(changes.select(self.group_cols[0]).distinct())
 
-        snap = base._read_files(candidates, renames=renames)
-        agg_exprs = [expr.alias(name) for name, expr in self.aggs.items()]
-        if snap is None:
-            recomputed = None
-        else:
-            snap = base._resolve(snap)
-            if "op" in snap.columns:
-                snap = snap.filter(F.col("op") != F.lit("delete"))
+        recomputed = None
+        if candidates:
+            # the same resolved view read() returns, so the MV aggregates
+            # exactly the rows a full recompute would
+            snap = base._view(st, candidates)
             if touched_keys is not None:
                 snap = snap.join(
                     touched_keys, on=[self.group_cols[0]], how="left_semi"
                 )
             for name, expr in self.derived.items():
                 snap = snap.withColumn(name, expr)
-            recomputed = snap.groupBy(*self.group_cols).agg(*agg_exprs)
+            recomputed = snap.groupBy(*self.group_cols).agg(
+                *[expr.alias(name) for name, expr in self.aggs.items()]
+            )
             if touched_keys is not None:
                 # the partial path consumes `recomputed` twice (the gone-
                 # group anti-join/count AND the MV merge write): persist so
@@ -344,13 +287,8 @@ class IncrementalRollup:
             # turn leaving a time window). The previous groups come from
             # the MV itself, not the change feed. Null agg columns must
             # match the upsert side's types or the union rejects the plan.
-            agg_types = {}
-            if recomputed is not None:
-                agg_types = {f.name: f.dataType for f in recomputed.schema.fields}
-            else:
-                agg_types = {
-                    f.name: f.dataType for f in self.table.read().schema.fields
-                }
+            typed = recomputed if recomputed is not None else self.table.read()
+            agg_types = {f.name: f.dataType for f in typed.schema.fields}
             # the MV shares the base's bucket key (group_cols[0]), so the
             # touched keys map straight to MV buckets: read only those MV
             # files (per-file manifest scheme, exactly like read_key) —

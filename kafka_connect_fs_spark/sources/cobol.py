@@ -21,7 +21,6 @@ record.
 from __future__ import annotations
 
 import logging
-import math
 from typing import Iterator
 
 import numpy as np

@@ -1003,15 +1003,20 @@ def _compressed(path: str) -> bool:
 
 
 def _still_exists(path: str) -> bool:
+    """False only when the file system says NotFound. Any other error
+    (a transient remote-FS failure) propagates: treating it as "vanished"
+    would purge the file's watermark row and ack its discovery message,
+    and its unread tail would never be offered again. The batch fails
+    instead, and the next trigger retries it."""
     if "://" in path and not path.startswith("file://"):
-        try:
-            import pyarrow.fs as pafs
+        import pyarrow.fs as pafs
 
-            # through the same indirection point cleanup uses, so tests
-            # substituting a fake remote FS exercise this fallback too
-            fs, p = _fs_for_uri(path)
+        # through the same indirection point cleanup uses, so tests
+        # substituting a fake remote FS exercise this fallback too
+        fs, p = _fs_for_uri(path)
+        try:
             return fs.get_file_info(p).type != pafs.FileType.NotFound
-        except Exception:
+        except FileNotFoundError:
             return False
     local = path[len("file://"):] if path.startswith("file://") else path
     return os.path.exists(local)

@@ -553,6 +553,38 @@ def test_cleanup_remote_delete_and_replay_idempotence(spark, tmp_path, monkeypat
     assert engine._cleanup(["s3://bucket/flaky.jsonl"]) == []
 
 
+def test_transient_remote_stat_error_keeps_watermark_and_ack(spark, tmp_path, monkeypatch):
+    """Only NotFound means a re-offered file vanished. A remote-FS error
+    while stat'ing it must fail the batch (the next trigger retries), not
+    purge its non-eof watermark row and ack its discovery message — that
+    would skip the file's unread tail for good."""
+    import kafka_connect_fs_spark.streaming.engine as eng_mod
+
+    fake = _FakeRemoteFS({"bucket/a.jsonl"}, [])
+
+    def flaky(sub):
+        raise OSError("503 slow down")
+
+    fake.get_file_info = flaky
+    monkeypatch.setattr(
+        eng_mod, "_fs_for_uri", lambda uri: (fake, uri.split("://", 1)[1])
+    )
+    acked: list = []
+    engine = make_engine(
+        spark, tmp_path, uris=[], discovery_fn=lambda: [],
+        discovery_ack_fn=lambda paths: acked.append(set(paths)),
+    )
+    uri = "s3://bucket/a.jsonl"
+    engine.watermarks.commit(
+        [{"path": uri, "committed_offset": 5, "file_size": 10, "eof": False}], 0
+    )
+    with pytest.raises(OSError, match="503"):
+        engine.run_once()
+    assert not engine.watermarks.load_dict()[uri]["eof"]
+    assert uri not in engine._vanished
+    assert all(uri not in a for a in acked)
+
+
 # ------------------------------------------------------- shrank / torn files
 
 
@@ -1338,3 +1370,35 @@ def test_outcome_channel_does_not_grow_with_batches(spark, tmp_path):
         assert res.ranges == {"ok": 1, "partial": 0, "failed": 0}
         assert len(engine._outcomes.value) == 1  # this batch's range only
     assert_matches_oracle(engine, rows)
+
+
+def test_record_without_op_reads_as_upsert(spark, tmp_path):
+    """A change event with no "op" is an upsert: merge stores it as one,
+    so every read path and an MV built on the table return it, as the
+    package oracle (expected_final_state) keeps it."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from kafka_connect_fs_spark.plans.materialized import IncrementalRollup
+
+    engine = make_engine(spark, tmp_path)
+    lines = [
+        {"op": "upsert", "conv_id": "c1", "turn_idx": 0, "role": "user",
+         "text": "with op", "tool": None, "ts": "2024-01-01T00:00:00.000Z"},
+        {"conv_id": "c2", "turn_idx": 0, "role": "user",
+         "text": "no op", "tool": None, "ts": "2024-01-01T00:00:01.000Z"},
+    ]
+    with open(tmp_path / "src" / "a.jsonl", "w") as f:
+        f.writelines(json.dumps(r) + "\n" for r in lines)
+    assert engine.run_once().n_events == 2
+    lake = engine.lake
+    assert {r.op for r in lake.read_changes(-1).collect()} == {"upsert"}
+    assert {r.text for r in lake.read().collect()} == {"with op", "no op"}
+    assert [r.text for r in lake.read_key("c2").collect()] == ["no op"]
+    ranged = lake.read_range("2024-01-01 00:00:01", "2024-01-01 00:00:02")
+    assert [r.text for r in ranged.collect()] == ["no op"]
+    mv = IncrementalRollup(lake, str(tmp_path / "mv"), group_cols=["conv_id"],
+                           aggs={"n": F.count(F.lit(1))}, n_buckets=4)
+    mv.refresh()
+    assert {(r.conv_id, r.n) for r in mv.read().collect()} == {("c1", 1), ("c2", 1)}

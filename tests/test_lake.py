@@ -1442,6 +1442,28 @@ def test_create_writes_mor_mode_and_rejects_cow(spark, tmp_path):
     assert not LakeTable.exists(str(tmp_path / "c"))
 
 
+def test_stored_null_op_row_reads_as_upsert(spark, table):
+    """A row a table already holds with a NULL op (merged by a build that
+    stored op as given) reads back as an upsert through every read."""
+    import os as _os
+
+    from kafka_connect_fs_spark.plans.lake import Commit
+
+    t = table
+    rel = "c00000000000000000000-nullop"
+    df = edf(spark, [ev("c1", 0, "kept", 1, op=None)]).withColumn(
+        "_bucket", t._bucket_expr("conv_id", 4)
+    )
+    df.withColumn("_pb", F.col("_bucket")).write.partitionBy("_pb").parquet(
+        _os.path.join(t.root, "data", rel)
+    )
+    added = t._scan_written(_os.path.join(t.root, "data", rel), rel, 4)
+    t._write_commit(Commit(0, "b0", added, [], EVENT_SCHEMA.json()))
+    assert [r.text for r in t.read().collect()] == ["kept"]
+    assert [r.text for r in t.read_key("c1").collect()] == ["kept"]
+    assert [r.text for r in t.read_range(ts(0), ts(2)).collect()] == ["kept"]
+
+
 # ------------------------------------------------------------- job counts
 
 
