@@ -35,7 +35,9 @@ each file's scheme plus key stats; ts stats). Everything after the
 selection is one view (``_view``): prune columns, filter, LWW-resolve,
 drop tombstones (a NULL op is an upsert) and internal columns. Bucket
 selection (``_files_in_buckets``, ``_buckets_by_scheme``) and the commit
-window (``_change_commits``) each have one helper too.
+window (``_change_commits``) each have one helper too. Every file read
+takes its schema from the commit log (``_read_files``), so planning one
+opens no footer.
 
 Reference parity notes: the reference emits records to Kafka at-least-once
 (docs/source/faq.rst:7-17); this table upgrades that to exactly-once lake
@@ -423,33 +425,27 @@ class LakeTable:
         ).cast("int")
 
     def _read_files(
-        self, relpaths: Sequence[str], renames: dict | None = None
+        self, relpaths: Sequence[str], st: _State | None = None
     ) -> DataFrame | None:
-        """``renames=None`` folds the LATEST state's renames (right for
-        every current-state caller: merges, compaction, read_changes);
-        time-travel callers must pass the renames of the version they
-        read, or columns renamed AFTER that version would anachronistically
-        apply to the historical frame."""
+        """The stored rows of ``relpaths`` (op, lineage and ``_bucket``
+        included), read with the schema ``st`` committed (default: the
+        latest state) and its renames folded. The log's schema is the
+        physical union of every file: pre-rename names, added columns and
+        widened types. Spark reads a file lacking a column as NULLs and
+        upcasts a narrow numeric type, so no footer is read to plan it.
+        Time travel passes the state of its version, so neither a column
+        added nor a rename made after it shows up."""
         if not relpaths:
             return None
+        st = st or self._state_full()
+        schema = T.StructType(
+            [T.StructField(f.name, f.dataType, True)
+             for f in T.StructType.fromJson(json.loads(st.schema_json)).fields]
+            + [T.StructField(_BUCKET_COL, T.IntegerType(), True)]
+        )
         paths = [os.path.join(self.root, _DATA_DIR, p) for p in relpaths]
-        try:
-            df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        except Exception as e:  # pragma: no cover - branch asserted via tests
-            if "CANNOT_MERGE_SCHEMAS" not in str(e):
-                raise
-            # type-widened evolution: files written before and after an
-            # int→long / float→double column change coexist; Spark's
-            # mergeSchema refuses, but an EXPLICIT promoted schema reads
-            # both (Spark 4 parquet read-side type widening upcasts the
-            # narrow files). Build it from the footers with Iceberg
-            # promotion rules.
-            df = self.spark.read.schema(self._promoted_footer_schema(paths)).parquet(
-                *paths
-            )
-        if renames is None:
-            _, _, renames = self._state()
-        for old, new in renames.items():
+        df = self.spark.read.schema(schema).parquet(*paths)
+        for old, new in st.renames.items():
             if old in df.columns and new in df.columns:
                 # files written before AND after the rename coexist (renames
                 # are metadata-only; compaction rewrites buckets lazily): fold
@@ -493,25 +489,30 @@ class LakeTable:
         never written."""
         if not st.schema_json:
             return None
-        schema = T.StructType.fromJson(json.loads(st.schema_json))
+        fields = T.StructType.fromJson(json.loads(st.schema_json)).fields
         for old, new in st.renames.items():
-            if old in schema.fieldNames():
-                schema[old].name = new  # type: ignore[misc]
-        return schema
+            names = [f.name for f in fields]
+            if old in names and new in names:  # folded into ``new``
+                fields = [f for f in fields if f.name != old]
+            elif old in names:
+                fields[names.index(old)].name = new
+        return T.StructType(fields)
 
     def _empty_frame(self, st: _State) -> DataFrame:
         # a never-written table has no schema: just the key columns
         schema = self._table_schema(st) or T.StructType(
             [T.StructField(k, T.StringType()) for k in self.keys]
         )
-        return self.spark.createDataFrame([], schema)
+        # limit(0) lets the optimizer fold the frame (and any projection or
+        # filter over it) to an empty LocalRelation: collecting it runs no job
+        return self.spark.createDataFrame([], schema).limit(0)
 
     def snapshot(self, at_version: int | None = None) -> DataFrame:
         """Full table including lineage + bucket columns; ``at_version``
         reads the table as of that commit (time travel — every commit's file
         set is reconstructable until vacuum() removes dead files)."""
         st = self._state_full(at_version)
-        df = self._read_files(list(st.live), renames=st.renames)
+        df = self._read_files(list(st.live), st)
         return self._empty_frame(st) if df is None else df
 
     def _resolve(self, df: DataFrame) -> DataFrame:
@@ -544,7 +545,7 @@ class LakeTable:
         dropped unless requested). An empty selection is ``st``'s empty
         frame with the same columns (callers union per-window pages) and
         plans no read or resolve."""
-        df = self._read_files(files, renames=st.renames)
+        df = self._read_files(files, st)
         selected = df is not None
         if not selected:
             df = self._empty_frame(st)
@@ -797,33 +798,28 @@ class LakeTable:
         return window
 
     def _changes(self, window: list[Commit]) -> DataFrame:
-        """The change events of ``window`` (see read_changes)."""
+        """The change events of ``window`` (see read_changes), every
+        commit's files read with the latest committed schema."""
+        st = self._state_full()
         if not window:
-            # mirror the NON-empty schema (raw change-file columns, incl.
-            # `op` and lineage) so a consumer unioning polls across calls
-            # never hits a schema clash on an empty poll
-            live, _, _ = self._state()
-            # NEWEST live file (paths embed the commit version, so the sort
-            # is commit order): after additive schema evolution the oldest
-            # file would lack the new columns and re-create the union clash
-            raw = self._read_files(sorted(live)[-1:])
-            empty = (
-                raw.limit(0)
-                if raw is not None
-                else self.read().limit(0).withColumn(_OP_COL, F.lit(""))
-            )
+            # the committed schema plus the change columns, the same as a
+            # non-empty poll's, so a consumer unioning polls never hits a
+            # schema clash; an idle poll opens no file and runs no job
+            empty = self._empty_frame(st)
+            if _OP_COL not in empty.columns:  # never written: keys only
+                empty = empty.withColumn(_OP_COL, F.lit(None).cast("string"))
             return empty.withColumn(
                 "_commit_version", F.lit(0).cast("long")
-            ).withColumn("_batch_id", F.lit("")).drop(_BUCKET_COL)
+            ).withColumn("_batch_id", F.lit(""))
         parts = [
-            self._read_files([a["path"] for a in c.added])
+            self._read_files([a["path"] for a in c.added], st)
             .withColumn("_commit_version", F.lit(c.version).cast("long"))
             .withColumn("_batch_id", F.lit(c.batch_id))
             for c in window
         ]
         out = parts[0]
         for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
+            out = out.unionByName(p)
         return out.drop(_BUCKET_COL)
 
     def files_in_range(self, ts_from=None, ts_to=None) -> list[str]:
@@ -838,6 +834,21 @@ class LakeTable:
         return sorted(p for p, a in live.items() if _may_hold(a, "ts", overlaps))
 
     # ---------------------------------------------------------------- merge
+    def _placement(
+        self, slot: Column, n_slots: int, spread: int = 1
+    ) -> tuple[int, Column]:
+        """(task count, repartition column) that place each of ``n_slots``
+        exact slots (``slot`` in [0, n_slots)) whole on one task: slot s
+        goes to task s mod n. n is the host's slot count
+        (``defaultParallelism``) or ``spread`` if larger, and never more
+        than ``n_slots``, so ``spread`` consecutive slots always land in
+        distinct tasks. Hashing k slot ids into k partitions would leave
+        only ~0.63k tasks non-empty (operators/partitioning.py); one task
+        per slot pays a task launch and deserialization per bucket (16
+        buckets on 4 cores wrote in 4 waves of tasks)."""
+        n = min(n_slots, max(self.spark.sparkContext.defaultParallelism, spread))
+        return n, exact_slot_rekey(F.pmod(slot, F.lit(n)), n)
+
     def merge(
         self,
         source: DataFrame,
@@ -914,14 +925,13 @@ class LakeTable:
         else:
             slot = F.col(_BUCKET_COL)
             n_slots = nb
+        # exact slot placement, whole slots per task, as many tasks as the
+        # host has slots (see _placement); a bucket's salt slots land in
+        # distinct tasks, so a salted write keeps one file per salt slot
+        n_tasks, place = self._placement(slot, n_slots, spread=salt)
         (
-            # exact slot placement: hashing k bucket ids into k partitions
-            # leaves only ~0.63k non-empty tasks (r4 profiling: the 32-bucket
-            # write stage quantized to ~18 tasks, a 1.7× parallelism loss on
-            # the ingest hot stage); the rekey makes the exchange a
-            # permutation — one bucket(/salt) per task, zero empties
             src.withColumn("_pb", F.col(_BUCKET_COL))
-            .repartition(n_slots, exact_slot_rekey(slot, n_slots))
+            .repartition(n_tasks, place)
             .write.partitionBy("_pb")
             .mode("overwrite")
             .parquet(cdir)
@@ -972,26 +982,6 @@ class LakeTable:
         raise ConcurrentCommitError(
             "merge commit lost the race 4 times in a row"
         )
-
-    def _promoted_footer_schema(self, paths: Sequence[str]) -> T.StructType:
-        """Merged read schema straight from the parquet footers, widening
-        same-name numeric fields per _promote (driver-side, O(files) footer
-        reads — only on the rare evolved-type read path)."""
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        fields: dict[str, T.StructField] = {}
-        for p in paths:
-            sch = from_arrow_schema(pq.read_schema(p))
-            for f in sch.fields:
-                cur = fields.get(f.name)
-                if cur is None:
-                    fields[f.name] = T.StructField(f.name, f.dataType, True)
-                elif cur.dataType != f.dataType:
-                    fields[f.name] = T.StructField(
-                        f.name, _promote(cur.dataType, f.dataType), True
-                    )
-        return T.StructType(list(fields.values()))
 
     @staticmethod
     def _union_schema_json(prev_json: str | None, new: T.StructType) -> str:
@@ -1198,41 +1188,48 @@ class LakeTable:
     ) -> Commit | None:
         """Replace ``old_files`` (whole buckets) with their LWW-resolved
         rewrite, one key-sorted file per bucket, minus rows matching
-        ``drop``. ``st`` is the snapshot the caller chose the files from:
-        it also fixes the commit version, so a concurrent commit after it
-        surfaces as ConcurrentCommitError instead of being overwritten."""
+        ``drop``; compaction, tombstone expiry and the bucket-spec
+        transition all run here, in two Spark jobs (one exchange, one
+        write). Rows are re-stamped under the current scheme first: the
+        bucket is a function of the key, so this changes only rows of a
+        transition. They are exchanged once, on a placement column that
+        folds the touched buckets onto the host's slots (``_placement``),
+        and LWW-grouped by (placement, *keys): the exchange's hash
+        partitioning on the placement column already clusters every key,
+        so the aggregate adds no second one. ``st`` is the snapshot the
+        caller chose the files from: it also fixes the commit version, so a
+        concurrent commit after it surfaces as ConcurrentCommitError
+        instead of being overwritten."""
         nb = self.n_buckets
-        df = self._resolve(self._read_files(old_files))
-        if drop is not None:
-            df = df.filter(~drop)
         stored = {(self._scheme(st.live[p]), st.live[p]["bucket"]) for p in old_files}
         if {s for s, _ in stored} != {nb}:
-            # bucket-spec transition: output files must be single-scheme —
-            # re-stamp under the current scheme (a no-op value-wise for
-            # rows already written under it). Re-stamped rows can land in
-            # ANY current-scheme bucket: exact placement over the full
-            # range (empty slots write nothing; transition-only cost)
-            df = df.withColumn(_BUCKET_COL, self._bucket_expr(self.keys[0], nb))
+            # bucket-spec transition: re-stamped rows can land in ANY
+            # current-scheme bucket (empty slots write nothing)
             slot_domain: list[int] = list(range(nb))
         else:
             slot_domain = sorted(b for _, b in stored)
+        n_tasks, place = self._placement(
+            dense_slot(F.col(_BUCKET_COL), slot_domain), len(slot_domain)
+        )
+        df = (
+            self._read_files(old_files, st)
+            .withColumn(_BUCKET_COL, self._bucket_expr(self.keys[0], nb))
+            .withColumn("_rk", place)
+            .repartition(n_tasks, "_rk")
+        )
+        df = lww_dedup(df, ["_rk", *self.keys], self.ts_col).drop("_rk")
+        if drop is not None:
+            df = df.filter(~drop)
         version = st.version + 1
         cdir_rel = f"c{version:020d}-{uuid.uuid4().hex[:8]}"  # unique per attempt
         cdir = os.path.join(self.root, _DATA_DIR, cdir_rel)
-        n_slots = len(slot_domain)
         (
             # cluster by key within each rewritten bucket: the footer key
             # stats become tight, so read_key skips sibling files, and
             # parquet row-group stats prune inside the file (the Iceberg
             # sort-order-on-rewrite pattern)
             df.withColumn("_pb", F.col(_BUCKET_COL))
-            .repartition(
-                n_slots,
-                exact_slot_rekey(
-                    dense_slot(F.col(_BUCKET_COL), slot_domain), n_slots
-                ),
-            )
-            .sortWithinPartitions(*self.keys)
+            .sortWithinPartitions("_pb", *self.keys)
             .write.partitionBy("_pb")
             .mode("overwrite")
             .parquet(cdir)

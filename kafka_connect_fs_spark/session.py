@@ -56,6 +56,10 @@ def get_spark(
         # separately and this knob only covers the driver.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
+        # Python workers skip re-reading pyspark.zip's directory on every
+        # task (kafka_connect_fs_spark/daemon.py); the package must be
+        # importable on the workers, as every reader closure already needs
+        .config("spark.python.daemon.module", "kafka_connect_fs_spark.daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -196,9 +196,12 @@ def _scan_bins(
     ``max(defaultParallelism, ceil(sum(sizes) / split_bytes))`` bins;
     ``scan_one(item)`` yields the pandas frames of one work item. The bins
     travel in the task closure and each task is one ``spark.range`` id, so
-    there is no work-list DataFrame to shuffle. Every Python task pays a
-    fixed worker cost far above a small tail's scan time, so many small
-    items collapse into one task per core; a large scan keeps about one
+    there is no work-list DataFrame to shuffle. A Python stage has a
+    fixed cost far above a small tail's scan time (on 4 cores an empty
+    4-task ``mapInPandas`` stage takes ~0.16 s against ~0.03 s for a
+    JVM-only one, with kafka_connect_fs_spark/daemon.py keeping workers
+    from re-reading pyspark.zip), so many small items collapse into one
+    task per core; a large scan keeps about one
     task per ``split_bytes``, so one hot file still spreads over the
     cluster and a retried task re-scans one split's worth. Empty ``work``
     plans no task at all."""

@@ -144,6 +144,21 @@ def test_schema_evolution_rename_column(spark, table):
     assert table.read().count() == 2
 
 
+def test_rename_then_merge_keeps_one_column_and_idle_poll_schema(spark, table):
+    """After a rename and a merge under the new name, the committed schema
+    names the column once (the log holds both physical names; they fold),
+    and an idle change poll has exactly the columns of a non-empty one."""
+    table.merge(edf(spark, [ev("c1", 0, "a", 1)]), "b1")
+    table.rename_column("tool", "tool_name")
+    src = edf(spark, [ev("c2", 0, "b", 2)]).withColumnRenamed("tool", "tool_name")
+    table.merge(src, "b2")
+    names = table.current_schema().fieldNames()
+    assert names.count("tool_name") == 1 and "tool" not in names
+    idle = table.read_changes(table.latest_version())
+    assert idle.collect() == []
+    assert idle.dtypes == table.read_changes(0).dtypes
+
+
 def test_vacuum_removes_dead_files(spark, table):
     table.merge(edf(spark, [ev("c1", 0, "a", 1)]), "b1")
     table.merge(edf(spark, [ev("c1", 0, "b", 2)]), "b2")
@@ -1469,9 +1484,10 @@ def test_stored_null_op_row_reads_as_upsert(spark, table):
 
 def test_merge_and_compact_job_counts(spark, tmp_path):
     """One merge() is one delta write (2 jobs: the shuffle map stage and
-    the write); one compact() of two buckets is 4 (the footer-schema
-    merge, the LWW resolve, the placement shuffle and the sorted write).
-    A change that adds a pass to either fails here."""
+    the write); one compact() of two buckets is 2 as well (the one
+    placement exchange the LWW resolve shares, and the sorted write; the
+    read schema comes from the log, not from a footer pass). A change that
+    adds a pass to either fails here."""
     from tests.test_engine import _jobs_in_group
 
     t = LakeTable.create(spark, str(tmp_path / "jobs"), keys=["conv_id", "turn_idx"],
@@ -1492,16 +1508,19 @@ def test_merge_and_compact_job_counts(spark, tmp_path):
     c = in_group("pin-compact", lambda: t.compact(min_files_per_bucket=2))
     assert c is not None and {a["bucket"] for a in c.added} == {0, 1}
     assert _jobs_in_group(spark, "pin-merge") == 2
-    assert _jobs_in_group(spark, "pin-compact") == 4
+    assert _jobs_in_group(spark, "pin-compact") == 2
 
 
 def test_read_path_job_counts(spark, tmp_path):
     """Spark jobs per read-side call on a 4-bucket table after two merges:
     the resolved scan (pruned or not), both lookups, the range read, the
     change feed, tombstone expiry and an initial and a partial MV
-    refresh. Measured at the parent of the one-read-path change; a read
-    that plans an extra pass (or an empty selection that plans a resolve)
-    fails here."""
+    refresh, plus an idle changes poll. Reads take their schema from the
+    log (no footer-merge job), and an empty selection or an idle poll is
+    an empty LocalRelation, so collecting it runs no job (a global
+    ``count()`` over it still runs its one aggregate job). A read that
+    plans an extra pass (or an empty selection that plans a resolve or
+    opens a file) fails here."""
     from kafka_connect_fs_spark.plans.materialized import IncrementalRollup
     from tests.test_engine import _jobs_in_group
 
@@ -1529,6 +1548,8 @@ def test_read_path_job_counts(spark, tmp_path):
         "pin-read-key-absent": lambda: t.read_key("absent").collect(),
         "pin-read-range": lambda: t.read_range(ts(5), ts(30)).count(),
         "pin-read-changes": lambda: t.read_changes(0).count(),
+        "pin-read-changes-idle": lambda: t.read_changes(t.latest_version()).collect(),
+        "pin-read-changes-idle-count": lambda: t.read_changes(t.latest_version()).count(),
         "pin-expire": lambda: t.expire_tombstones(ts(1000)),
     }
     for group, fn in calls.items():
@@ -1536,13 +1557,74 @@ def test_read_path_job_counts(spark, tmp_path):
     got = {g: _jobs_in_group(spark, g)
            for g in ["pin-refresh-initial", "pin-refresh-partial", *calls]}
     assert got == {
-        "pin-refresh-initial": 5,
-        "pin-refresh-partial": 18,
-        "pin-read": 4,
-        "pin-read-columns": 4,
-        "pin-read-key-hit": 3,
-        "pin-read-key-absent": 1,
-        "pin-read-range": 4,
-        "pin-read-changes": 3,
-        "pin-expire": 7,
+        "pin-refresh-initial": 4,
+        "pin-refresh-partial": 15,
+        "pin-read": 3,
+        "pin-read-columns": 3,
+        "pin-read-key-hit": 2,
+        "pin-read-key-absent": 0,
+        "pin-read-range": 3,
+        "pin-read-changes": 2,
+        "pin-read-changes-idle": 0,
+        "pin-read-changes-idle-count": 1,
+        "pin-expire": 4,
+    }
+
+
+def _write_stage_tasks(spark, group: str) -> int:
+    """Tasks of the last stage of ``group``'s last job: a write's stage."""
+    from tests.test_engine import _jobs_in_group
+
+    assert _jobs_in_group(spark, group) > 0  # waits for the listener
+    tracker = spark.sparkContext.statusTracker()
+    job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+    return tracker.getStageInfo(max(job.stageIds)).numTasks
+
+
+def test_merge_writes_whole_buckets_on_one_task_per_slot(spark, tmp_path):
+    """A 16-bucket merge on an 8-slot session runs 8 write tasks, each
+    holding whole buckets, and still writes one file per touched bucket."""
+    sc = spark.sparkContext
+    assert sc.defaultParallelism == 8
+    t = LakeTable.create(spark, str(tmp_path / "m"), keys=["conv_id", "turn_idx"],
+                         ts_col="ts", n_buckets=16)
+    rows = [ev(f"c{i}", i % 3, f"t{i}", i) for i in range(300)]
+    sc.setLocalProperty("spark.jobGroup.id", "merge-tasks")
+    try:
+        c = t.merge(edf(spark, rows), "b0")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _write_stage_tasks(spark, "merge-tasks") == 8
+    buckets = [a["bucket"] for a in c.added]
+    assert sorted(buckets) == list(range(16))  # one file per bucket
+    assert sorted((r.conv_id, r.turn_idx, r.text) for r in t.read().collect()) == sorted(
+        (r["conv_id"], r["turn_idx"], r["text"]) for r in rows
+    )
+
+
+def test_compact_of_more_buckets_than_slots_writes_sorted_file_per_bucket(
+    spark, tmp_path
+):
+    """compact() folds 16 buckets onto the session's 8 slots and still
+    writes one file per bucket, each sorted by key."""
+    import os as _os
+
+    import pyarrow.parquet as pq
+
+    t = LakeTable.create(spark, str(tmp_path / "c"), keys=["conv_id", "turn_idx"],
+                         ts_col="ts", n_buckets=16)
+    rows = [ev(f"c{i}", i % 4, f"t{i}", i) for i in range(300)]
+    t.merge(edf(spark, rows[::-1]), "b0")
+    t.merge(edf(spark, [ev(f"c{i}", i % 4, f"u{i}", 500 + i) for i in range(0, 300, 2)]), "b1")
+    c = t.compact(min_files_per_bucket=2)
+    assert c is not None
+    assert sorted(a["bucket"] for a in c.added) == list(range(16))
+    for a in c.added:
+        tbl = pq.read_table(_os.path.join(t.root, "data", a["path"]),
+                            columns=["conv_id", "turn_idx"])
+        keys = list(zip(tbl["conv_id"].to_pylist(), tbl["turn_idx"].to_pylist()))
+        assert keys == sorted(keys) and len(keys) == len(set(keys))
+    final = {(r.conv_id, r.turn_idx): r.text for r in t.read().collect()}
+    assert final == {
+        (f"c{i}", i % 4): (f"u{i}" if i % 2 == 0 else f"t{i}") for i in range(300)
     }

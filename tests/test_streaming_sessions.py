@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -65,6 +66,14 @@ def _event_files(spark, tmp_path, n_batches=3):
                 )
                 + "\n"
             )
+    # the file source delivers files in mtime order, breaking ties by
+    # directory listing order; consecutive writes can share an mtime (the
+    # file clock ticks in milliseconds), so pin the write order: the
+    # operator requires event-time-ordered delivery across micro-batches
+    names = sorted(os.listdir(src))
+    t0 = time.time() - len(names)
+    for i, name in enumerate(names):
+        os.utime(src / name, (t0 + i, t0 + i))
     return str(src)
 
 
