@@ -434,14 +434,27 @@ class LakeTable:
         widened types. Spark reads a file lacking a column as NULLs and
         upcasts a narrow numeric type, so no footer is read to plan it.
         Time travel passes the state of its version, so neither a column
-        added nor a rename made after it shows up."""
+        added nor a rename made after it shows up.
+
+        A rename's target can be physical before the log names it: a
+        maintenance rewrite after rename_column writes the column under
+        its new name but commits no schema. Each such target is read too,
+        typed like its source (next to it, so the folded column keeps the
+        source's place), so the fold below picks its values up."""
         if not relpaths:
             return None
         st = st or self._state_full()
+        fields = [
+            T.StructField(f.name, f.dataType, True)
+            for f in T.StructType.fromJson(json.loads(st.schema_json)).fields
+        ]
+        for old, new in st.renames.items():
+            names = [f.name for f in fields]
+            if new not in names and old in names:
+                i = names.index(old)
+                fields.insert(i + 1, T.StructField(new, fields[i].dataType, True))
         schema = T.StructType(
-            [T.StructField(f.name, f.dataType, True)
-             for f in T.StructType.fromJson(json.loads(st.schema_json)).fields]
-            + [T.StructField(_BUCKET_COL, T.IntegerType(), True)]
+            fields + [T.StructField(_BUCKET_COL, T.IntegerType(), True)]
         )
         paths = [os.path.join(self.root, _DATA_DIR, p) for p in relpaths]
         df = self.spark.read.schema(schema).parquet(*paths)
@@ -845,7 +858,11 @@ class LakeTable:
         distinct tasks. Hashing k slot ids into k partitions would leave
         only ~0.63k tasks non-empty (operators/partitioning.py); one task
         per slot pays a task launch and deserialization per bucket (16
-        buckets on 4 cores wrote in 4 waves of tasks)."""
+        buckets on 4 cores wrote in 4 waves of tasks). The cost: a hot
+        bucket shares its task with its n_slots/n - 1 neighbours instead
+        of the other cores picking them up (a 1M-row batch with a quarter
+        of its rows in one bucket wrote ~2% slower; a uniform one did not
+        slow down); ``write_salt`` spreads a hot bucket."""
         n = min(n_slots, max(self.spark.sparkContext.defaultParallelism, spread))
         return n, exact_slot_rekey(F.pmod(slot, F.lit(n)), n)
 

@@ -57,8 +57,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
         # Python workers skip re-reading pyspark.zip's directory on every
-        # task (kafka_connect_fs_spark/daemon.py); the package must be
-        # importable on the workers, as every reader closure already needs
+        # task (kafka_connect_fs_spark/daemon.py). The package must be
+        # importable when the daemon starts (current directory or
+        # PYTHONPATH): a --py-files archive joins sys.path only per task
         .config("spark.python.daemon.module", "kafka_connect_fs_spark.daemon")
     )
     for k, v in (extra_conf or {}).items():

@@ -159,6 +159,39 @@ def test_rename_then_merge_keeps_one_column_and_idle_poll_schema(spark, table):
     assert idle.dtypes == table.read_changes(0).dtypes
 
 
+def test_rename_then_rewrites_keep_the_renamed_values(spark, table):
+    """A rewrite after a rename writes the column under its new name and
+    commits no schema; compaction, a bucket-spec migration and tombstone
+    expiry must all still read that column's values, with no merge under
+    the new name in between."""
+    def tooled(rows):
+        return edf(spark, rows).withColumn("tool", F.concat(F.lit("t-"), "conv_id"))
+
+    table.merge(
+        tooled([ev(f"c{i}", 0, "v1", i) for i in range(8)]
+               + [ev("gone", 0, "x", 1, op="delete")]),
+        "b1",
+    )
+    table.merge(tooled([ev(f"c{i}", 0, "v2", 50 + i) for i in range(4)]), "b2")
+    table.rename_column("tool", "tool_name")
+    want = {f"c{i}": f"t-c{i}" for i in range(8)}
+
+    def check():
+        got = {r.conv_id: r.tool_name for r in table.read().collect()}
+        assert got == want
+        assert [r.tool_name for r in table.read_key("c2").collect()] == ["t-c2"]
+        assert table.current_schema().fieldNames().count("tool_name") == 1
+
+    assert table.compact(min_files_per_bucket=1) is not None
+    check()
+    table.set_n_buckets(3)
+    assert table.compact(min_files_per_bucket=99) is not None  # migration
+    check()
+    assert table.expire_tombstones(ts(100)) is not None
+    check()
+    assert table.snapshot().filter("tool_name IS NULL").count() == 0
+
+
 def test_vacuum_removes_dead_files(spark, table):
     table.merge(edf(spark, [ev("c1", 0, "a", 1)]), "b1")
     table.merge(edf(spark, [ev("c1", 0, "b", 2)]), "b2")

@@ -276,8 +276,19 @@ def test_agnostic_format_dispatch():
 
 
 def test_empty_work_returns_empty_frames(spark):
+    """An empty scan is an empty frame the optimizer folds to a
+    LocalRelation: collecting it runs no Spark job."""
+    from tests.test_engine import _jobs_in_group
+
     assert read_lines(spark, []).count() == 0
     assert read_whole_file_records(spark, [], "text").count() == 0
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "pin-read-lines-empty")
+    try:
+        assert read_lines(spark, []).collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _jobs_in_group(spark, "pin-read-lines-empty") == 0
 
 
 def test_sequence_file_roundtrip(spark, tmp_path):
