@@ -1,36 +1,13 @@
-"""Per-file offset watermark store — the engine's resumability state.
+"""Per-file offsets of one ingest stream: a read view of the lake's log.
 
 Plays the role of Kafka Connect's offset storage in the reference
 (FsSourceTask.java:80-91 reads ``{offset, file-size, eof}`` keyed by
 ``{path}``; AbstractPolicy.java:233-248 seeks readers to the committed
-offset and skips finished files). Here it is an explicit versioned parquet
-log so that (a) resume state is queryable lineage (the base snapshot and
-every delta are plain parquet on disk), (b) commits are atomic (O_EXCL
-marker link — same primitive as the lake log), and (c) recovery after a
-crash between lake-MERGE and watermark-commit can replay the watermark
-delta recorded inside the lake commit (exactly-once).
-
-Storage layout (round 5 — delta log):
-  v{seq}.json              marker: {batch_seq, n_updates, base_seq,
-                                    delta_seqs, delta_rows}
-  v{seq}/snapshot.parquet  full base snapshot (written on compaction only)
-  d{seq}.parquet           per-commit delta: rows touched by that batch
-                           (+ a ``removed`` tombstone column)
-
-State = base snapshot + deltas applied in order (tombstones drop rows,
-updates upsert keep-last). A steady-state commit therefore writes
-O(files touched this batch), INDEPENDENT of the total tracked-file count —
-round 4 measured the previous full-rewrite design at 0.22 s/commit with
-200k tracked files (~1 s extrapolated at 10^6), a driver-side linear term
-this removes. Compaction (full snapshot rewrite) triggers when the delta
-chain exceeds ``_max_deltas`` commits or delta rows reach the live-row
-count, bounding both recovery replay length and amortized commit cost at
-O(live / _max_deltas).
-
-Everything is driver-side pyarrow — the table is O(live files) keyed
-metadata, not row data; going through Spark jobs for it added seconds of
-fixed latency to every micro-batch (the reference equally keeps offsets in
-the driver-side Connect framework).
+offset and skips finished files). There is no second store: each ingest
+commit carries its batch's offsets in ``app_metadata`` and the lake's
+state replay folds them per stream (``LakeTable._fold_offsets``), the way
+Delta Lake keeps a writer's progress in its own table log. So the commit
+that lands a batch's rows lands its offsets too.
 """
 
 from __future__ import annotations
@@ -38,319 +15,73 @@ from __future__ import annotations
 import json
 import os
 import re
-import uuid
+from pathlib import Path
 
-import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame
 
-WATERMARK_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType(), False),
-        T.StructField("committed_offset", T.LongType(), False),
-        T.StructField("file_size", T.LongType(), False),
-        T.StructField("eof", T.BooleanType(), False),
-        T.StructField("batch_seq", T.LongType(), False),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
-)
+from kafka_connect_fs_spark.plans.lake import LakeTable, offsets_metadata, stream_batch_id
 
-_ARROW_SCHEMA = pa.schema(
-    [
-        ("path", pa.string()),
-        ("committed_offset", pa.int64()),
-        ("file_size", pa.int64()),
-        ("eof", pa.bool_()),
-        ("batch_seq", pa.int64()),
-        ("updated_at", pa.timestamp("us")),
-    ]
-)
-
-# delta files carry one extra column: removed=True rows are tombstones
-_DELTA_SCHEMA = _ARROW_SCHEMA.append(pa.field("removed", pa.bool_()))
-
-def _fsync_path(path: str) -> None:
-    fd = os.open(path, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
+_FIELDS = ("path", "committed_offset", "file_size", "eof")
+WATERMARK_SCHEMA = "path string, committed_offset bigint, file_size bigint, eof boolean"
 
 
 class WatermarkStore:
-    _keep_versions = 2  # latest + crash fallback; older markers are dead
-    _max_deltas = 32  # compaction trigger: delta-chain length
+    """The offsets of the stream whose batch ids start with ``stream``."""
 
-    def __init__(self, spark: SparkSession, root: str):
-        self.spark = spark
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-        # (version, rows) — rows is the LIVE state dict, mutated in place by
-        # commit() (O(touched) per batch; a full-dict copy at 10^6 tracked
-        # files is itself a linear per-batch term)
-        self._cache: tuple[int, dict] | None = None
+    def __init__(self, lake: LakeTable, stream: str):
+        self.lake, self.stream = lake, stream
 
-    def _versions(self) -> list[int]:
-        out = []
-        for name in os.listdir(self.root):
-            m = re.fullmatch(r"v(\d{12})\.json", name)
-            if m:
-                out.append(int(m.group(1)))
-        return sorted(out)
+    def _state(self) -> dict:
+        return self.lake._state_full().streams.get(self.stream, {})
 
-    def _marker(self, seq: int) -> dict:
-        with open(os.path.join(self.root, f"v{seq:012d}.json")) as f:
-            return json.load(f)
+    def load_dict(self) -> dict[str, dict]:
+        """{path: {committed_offset, file_size, eof}}: the lake's own map,
+        updated in place as commits land. Copy it to keep a snapshot."""
+        return self._state().get("files", {})
+
+    def load(self) -> DataFrame:
+        """The same rows as a DataFrame, built on the driver: O(tracked)."""
+        rows = [(p, *(w[k] for k in _FIELDS[1:])) for p, w in sorted(self.load_dict().items())]
+        return self.lake.spark.createDataFrame(rows, WATERMARK_SCHEMA)
 
     def last_seq(self) -> int:
         """Highest committed batch sequence number (-1 if none)."""
-        vs = self._versions()
-        return self._marker(vs[-1])["batch_seq"] if vs else -1
+        return self._state().get("seq", -1)
 
-    def _base_file(self, seq: int) -> str:
-        return os.path.join(self.root, f"v{seq:012d}", "snapshot.parquet")
+    def pending_cleanup(self) -> list[str]:
+        """The cleanup list of the stream's last commit."""
+        return self._state().get("cleanup", [])
 
-    def _delta_file(self, seq: int) -> str:
-        return os.path.join(self.root, f"d{seq:012d}.parquet")
+    def commit(self, updates: list[dict], seq: int, removed_paths=None,
+               cleanup=(), imported: bool = False):
+        """A metadata-only commit: forget ``removed_paths``, then upsert."""
+        md = offsets_metadata(updates, removed_paths or (), cleanup, imported)
+        return self.lake._commit_meta(stream_batch_id(self.stream, seq), app_metadata=md)
 
-    def _read_base(self, seq: int) -> dict[str, dict]:
-        snap_dir = os.path.dirname(self._base_file(seq))
-        single = self._base_file(seq)
-        if os.path.exists(single):
-            table = pq.read_table(single)
-        else:
-            # layout written by an older Spark-based commit: a directory of
-            # part-*.parquet files
-            parts = sorted(
-                os.path.join(snap_dir, n)
-                for n in os.listdir(snap_dir)
-                if n.endswith(".parquet")
-            )
-            table = pa.concat_tables([pq.read_table(p) for p in parts])
-        return {r["path"]: r for r in table.to_pylist()}
-
-    def _load_rows(self) -> dict[str, dict]:
-        vs = self._versions()
-        if not vs:
-            return {}
-        meta = self._marker(vs[-1])
-        # pre-delta-log markers have no base_seq: the marker's own version
-        # dir IS the full snapshot (migration path)
-        base_seq = meta.get("base_seq", vs[-1])
-        rows = self._read_base(base_seq) if base_seq >= 0 else {}
-        for dseq in meta.get("delta_seqs", []):
-            for r in pq.read_table(self._delta_file(dseq)).to_pylist():
-                removed = r.pop("removed", False)
-                if removed:
-                    rows.pop(r["path"], None)
-                else:
-                    rows[r["path"]] = r
-        return rows
-
-    def load_dict(self) -> dict[str, dict]:
-        """Driver-side state: {path: {committed_offset, file_size, eof, …}}.
-        Cached in-process per version — a daemon pays one log replay at
-        startup, then zero reads per batch. The returned dict is the store's
-        live view: commit() updates it in place."""
-        vs = self._versions()
-        latest = vs[-1] if vs else -1
-        if self._cache is not None and self._cache[0] == latest:
-            return self._cache[1]
-        rows = self._load_rows()
-        self._cache = (latest, rows)
-        return rows
-
-    def load(self) -> DataFrame:
-        """Spark view of the current state (for lineage/monitoring queries).
-
-        Reads the base snapshot + delta parquet files relationally (lazy
-        scan + one keep-last window on ``path``) instead of shipping the
-        whole tracked-file set through createDataFrame — at the design
-        point (~10^6 tracked files) the driver-side materialization is
-        seconds of Py4J serialization per call."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        vs = self._versions()
-        if not vs:
-            return self.spark.createDataFrame([], WATERMARK_SCHEMA)
-        meta = self._marker(vs[-1])
-        base_seq = meta.get("base_seq", vs[-1])
-        cols = [f.name for f in WATERMARK_SCHEMA.fields]
-        parts: list[DataFrame] = []
-        if base_seq >= 0:
-            single = self._base_file(base_seq)
-            src = single if os.path.exists(single) else os.path.dirname(single)
-            parts.append(
-                self.spark.read.parquet(src)
-                .select(*cols)
-                .withColumn("removed", F.lit(False))
-                .withColumn("_ord", F.lit(-1))
-            )
-        for i, dseq in enumerate(meta.get("delta_seqs", [])):
-            parts.append(
-                self.spark.read.parquet(self._delta_file(dseq))
-                .select(*cols, "removed")
-                .withColumn("_ord", F.lit(i))
-            )
-        if not parts:
-            return self.spark.createDataFrame([], WATERMARK_SCHEMA)
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
-        w = Window.partitionBy("path").orderBy(F.desc("_ord"))
-        return (
-            union.withColumn("_rn", F.row_number().over(w))
-            .where((F.col("_rn") == 1) & ~F.col("removed"))
-            .select(*cols)
-        )
-
-    def commit(
-        self,
-        updates: list[dict],
-        batch_seq: int,
-        removed_paths: list[str] | None = None,
-    ) -> None:
-        """Merge per-file updates into the store; keep-latest per path.
-
-        Steady state appends ONE delta parquet of O(touched) rows; every
-        ``_max_deltas`` commits (or when delta rows reach the live count)
-        the chain is compacted into a full base snapshot. Atomic via O_EXCL
-        marker link; data + directories fsynced before the marker so a
-        durable marker never references a truncated file.
-        """
-        import datetime as dt
-
-        # live dict — READ-ONLY until the marker is durably linked below;
-        # mutating it earlier would leave the in-process view diverged from
-        # disk if the data write / fsync / link fails mid-commit
-        rows = self.load_dict()
-        vs = self._versions()
-        prev = self._marker(vs[-1]) if vs else {}
-        prev_deltas = list(prev.get("delta_seqs", []))
-        prev_delta_rows = int(prev.get("delta_rows", 0))
-        # pre-delta-log marker: treat its snapshot dir as the base
-        prev_base = prev.get("base_seq", vs[-1] if vs else -1)
-
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        # delta rows: tombstones first, then upserts (replay applies in
-        # order, so an update after a removal of the same path wins —
-        # matching the removals-then-updates merge order)
-        updated_paths = {u["path"] for u in updates}
-        removed = [p for p in (removed_paths or []) if p not in updated_paths]
-        upserts: dict[str, dict] = {}  # keep-last per path within the batch
-        for u in updates:
-            upserts[u["path"]] = {
-                "path": u["path"],
-                "committed_offset": int(u["committed_offset"]),
-                "file_size": int(u["file_size"]),
-                "eof": bool(u["eof"]),
-                "batch_seq": int(batch_seq),
-                "updated_at": now,
-            }
-        dropped = set(removed_paths or [])
-
-        n_delta = len(removed) + len(upserts)
-        compact = (
-            len(prev_deltas) >= self._max_deltas
-            or prev_delta_rows + n_delta >= max(1024, len(rows))
-        )
-        synced_dirs = [self.root]
-        if compact:
-            base_file = self._base_file(batch_seq)
-            os.makedirs(os.path.dirname(base_file), exist_ok=True)
-            # merged view without touching the live dict (compaction is
-            # O(live) by design, so the copy adds no asymptotic cost)
-            merged = {p: r for p, r in rows.items() if p not in dropped}
-            merged.update(upserts)
-            ordered = sorted(merged.values(), key=lambda r: r["path"])
-            pq.write_table(
-                pa.Table.from_pylist(list(ordered), schema=_ARROW_SCHEMA),
-                base_file,
-            )
-            _fsync_path(base_file)
-            synced_dirs.insert(0, os.path.dirname(base_file))
-            marker_meta = {"base_seq": batch_seq, "delta_seqs": [], "delta_rows": 0}
-        else:
-            delta_file = self._delta_file(batch_seq)
-            drows = [
-                {
-                    "path": p,
-                    "committed_offset": 0,
-                    "file_size": 0,
-                    "eof": False,
-                    "batch_seq": int(batch_seq),
-                    "updated_at": now,
-                    "removed": True,
-                }
-                for p in removed
-            ] + [dict(r, removed=False) for r in upserts.values()]
-            pq.write_table(
-                pa.Table.from_pylist(drows, schema=_DELTA_SCHEMA), delta_file
-            )
-            _fsync_path(delta_file)
-            marker_meta = {
-                "base_seq": prev_base,
-                "delta_seqs": prev_deltas + [batch_seq],
-                "delta_rows": prev_delta_rows + n_delta,
-            }
-        # fsync the DATA and its directory entries before the marker: the
-        # marker's fsync alone orders nothing — a power loss could leave a
-        # durable marker pointing at a truncated/absent file, making
-        # watermark state unrecoverable
-        for d in synced_dirs:
-            _fsync_path(d)
-        marker = os.path.join(self.root, f"v{batch_seq:012d}.json")
-        tmp = marker + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(
-                {"batch_seq": batch_seq, "n_updates": len(updates), **marker_meta},
-                f,
-            )
-            f.flush()
-            os.fsync(f.fileno())
-        # atomic create-with-content: link fails with EEXIST if another
-        # writer won; no window where the marker exists empty
-        os.link(tmp, marker)
-        os.unlink(tmp)
-        # commit is durable — NOW publish to the in-process live dict
-        # (O(touched) mutation, no full-dict copy per batch)
-        for p in dropped:
-            rows.pop(p, None)
-        rows.update(upserts)
-        self._cache = (batch_seq, rows)
-        self._gc()
-
-    def _gc(self) -> None:
-        """Retention: a long-running daemon writes one marker per batch —
-        keep the last _keep_versions markers (recovery reads the newest
-        complete one; the watermark delta of a crashed batch is recovered
-        from the lake commit's app_metadata) and every base/delta file any
-        kept marker references."""
-        import shutil as _shutil
-
-        vs = self._versions()
-        keep, drop = vs[-self._keep_versions :], vs[: -self._keep_versions]
-        referenced_bases: set[int] = set()
-        referenced_deltas: set[int] = set()
-        for v in keep:
-            meta = self._marker(v)
-            referenced_bases.add(meta.get("base_seq", v))
-            referenced_deltas.update(meta.get("delta_seqs", []))
-        for v in drop:
-            try:
-                os.unlink(os.path.join(self.root, f"v{v:012d}.json"))
-            except OSError:
-                pass
-        for name in os.listdir(self.root):
-            m = re.fullmatch(r"d(\d{12})\.parquet", name)
-            if m and int(m.group(1)) not in referenced_deltas:
-                try:
-                    os.unlink(os.path.join(self.root, name))
-                except OSError:
-                    pass
-                continue
-            m = re.fullmatch(r"v(\d{12})", name)
-            if m and int(m.group(1)) not in referenced_bases:
-                _shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+    def import_store(self, root: str) -> None:
+        """Once per stream, import the latest state of a store directory
+        that older builds kept beside the log (both of its layouts: a base
+        snapshot plus a delta chain, or a snapshot alone). A lake commit
+        past its last seq is that store's crash window: the merge landed
+        and the store commit did not, so its offsets go on top."""
+        if self._state().get("imported") or not os.path.isdir(root):
+            return
+        names = sorted(n for n in os.listdir(root) if re.fullmatch(r"v\d{12}\.json", n))
+        meta = json.loads(Path(root, names[-1]).read_text()) if names else {}
+        base = meta.get("base_seq", int(names[-1][1:13]) if names else -1)
+        rows = pq.read_table(os.path.join(root, f"v{base:012d}")).to_pylist() if base >= 0 else []
+        for d in meta.get("delta_seqs", []):
+            rows += pq.read_table(os.path.join(root, f"d{d:012d}.parquet")).to_pylist()
+        files = {}
+        for r in rows:  # a delta row with removed=True is a tombstone
+            if r.get("removed"):
+                files.pop(r["path"], None)
+            else:
+                files[r["path"]] = {k: r[k] for k in _FIELDS}
+        seq, cleanup = meta.get("batch_seq", -1) + 1, []
+        while c := self.lake.get_commit_by_batch_id(stream_batch_id(self.stream, seq)):
+            files.update((w["path"], w) for w in c.app_metadata.get("watermarks", []))
+            cleanup, seq = c.app_metadata.get("cleanup", []), seq + 1
+        self.commit(list(files.values()), max(seq, self.last_seq() + 1),
+                    cleanup=cleanup, imported=True)

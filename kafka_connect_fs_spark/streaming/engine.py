@@ -5,9 +5,10 @@ as a Spark plan):
 
 1. discover:   list URIs, regex-filter names, drop empty files
                (AbstractPolicy.listFiles + FsSourceTask.java:126)
-2. resume:     compare listing against the watermark table; new or grown
-               files become work items starting at their committed offset
-               (the reference's batched offsets() fetch + seek,
+2. resume:     compare listing against the committed per-file offsets
+               (sources/watermarks.py, a view of the lake's log); new or
+               grown files become work items starting at their committed
+               offset (the reference's batched offsets() fetch + seek,
                FsSourceTask.java:83-91, AbstractPolicy.java:233-248)
 3. read:       distributed vectorized parse (sources/readers.py) into the
                change-event DataFrame with per-record lineage
@@ -18,16 +19,17 @@ as a Spark plan):
                scanner, whose ranges report their outcomes into an
                accumulator, and the record counts ride the same action as
                observed metrics. After the write and before the commit,
-               the outcomes fold into the watermark updates the commit
-               carries in its app_metadata; then the watermark commit. A
-               crash between the two replays the batch, the MERGE no-ops,
-               and the watermark delta is recovered from the lake commit's
-               app_metadata — exactly-once end to end (upgrades the
-               reference's documented at-least-once,
-               docs/source/faq.rst:7-17)
+               the outcomes fold into the per-file offsets the commit
+               carries in its app_metadata. One batch is one commit: rows
+               and offsets land together or not at all, so a crash at any
+               point replays from the last commit's offsets —
+               exactly-once end to end (upgrades the reference's
+               documented at-least-once, docs/source/faq.rst:7-17)
 6. cleanup:    fully-consumed files get NONE/MOVE/DELETE side-effects
-               (AbstractPolicy.java:281-331), applied post-commit and
-               idempotent under replay
+               (AbstractPolicy.java:281-331) after a commit names them;
+               a restart finishes the last commit's list on the files
+               still unchanged, and the next commit forgets the cleaned
+               paths
 7. metrics:    per-batch lineage (files, events, quarantined records, range
                outcomes, per-bucket rows, duration) appended to
                <checkpoint>/metrics.jsonl
@@ -56,7 +58,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_fs_spark.operators.schema_evolution import diff_schemas
-from kafka_connect_fs_spark.plans.lake import LakeTable
+from kafka_connect_fs_spark.plans.lake import LakeTable, offsets_metadata, stream_batch_id
 from kafka_connect_fs_spark.sources.discovery import FileMeta, list_files
 from kafka_connect_fs_spark.sources.readers import (
     CUSTOM_READERS,
@@ -103,9 +105,9 @@ class IngestConfig:
     # business. The watermark anti-join downstream makes any
     # at-least-once discovery source safe.
     discovery_fn: Callable[[], list] | None = None
-    # called after each batch's watermark commit with the set of paths
-    # whose discovery is now durable (watermark committed, already
-    # finished, or vanished) — the exactly-once ack hook for deferred-ack
+    # called after each batch's commit with the set of paths whose
+    # discovery is now durable (offset committed, already finished, or
+    # vanished) — the exactly-once ack hook for deferred-ack
     # discovery sources (e.g.
     # S3EventNotificationsPolicy(ack_mode="after_commit").ack_pending):
     # a crash before the commit leaves the queue messages undeleted, so
@@ -248,15 +250,17 @@ class IngestEngine:
                     f"{k}: table={a!r} config={b!r}" for k, (a, b) in drift.items()
                 )
             )
-        self.watermarks = WatermarkStore(
-            spark, os.path.join(config.checkpoint_root, "watermarks")
-        )
+        # the offsets live in the lake's log, folded per batch_id_prefix
+        self.watermarks = WatermarkStore(self.lake, config.batch_id_prefix)
+        self.watermarks.import_store(os.path.join(config.checkpoint_root, "watermarks"))
+        # paths cleaned since the last commit: the next commit forgets them
+        self._cleaned: list[str] = self._resume_cleanup()
         os.makedirs(config.checkpoint_root, exist_ok=True)
         self._metrics_path = os.path.join(config.checkpoint_root, "metrics.jsonl")
         # event-based discovery never re-lists, so files the per-trigger
         # caps dropped from a batch are re-offered from here next trigger
-        # (crash-safe: their queue messages stay un-acked until the
-        # watermark commits, so redelivery covers a lost process)
+        # (crash-safe: their queue messages stay un-acked until their
+        # offsets commit, so redelivery covers a lost process)
         self._carryover: dict[str, FileMeta] = {}
         # paths whose files vanished after discovery: nothing will ever be
         # owed for them, so their messages are ack-able
@@ -264,12 +268,15 @@ class IngestEngine:
 
     # ------------------------------------------------------------- planning
     def _plan(
-        self, listing: list[FileMeta], wm_rows: dict[str, dict]
+        self, listing: list[FileMeta], wm_rows: dict[str, dict], forgotten=()
     ) -> tuple[list[WorkItem], list[str]]:
+        """Work items and finished files. A path in ``forgotten`` (cleaned,
+        its row not yet dropped by a commit) is a new file if listed: one
+        recreated under that name must not resume from the old offset."""
         work: list[WorkItem] = []
         finished: list[str] = []
         for f in listing:
-            w = wm_rows.get(f.path)
+            w = None if f.path in forgotten else wm_rows.get(f.path)
             if w is None:
                 work.append(WorkItem(f.path, 0, f.length))
                 continue
@@ -534,13 +541,7 @@ class IngestEngine:
         t0 = time.monotonic()
         cfg = self.config
         seq = self.watermarks.last_seq() + 1
-        batch_id = f"{cfg.batch_id_prefix}{seq:012d}"
-
-        # crash recovery: MERGE already committed for this seq → finish the
-        # watermark/cleanup half from the lake commit's metadata and move on
-        recovered = self.lake.get_commit_by_batch_id(batch_id)
-        if recovered is not None:
-            return self._finish_recovered(recovered, seq, t0)
+        batch_id = stream_batch_id(cfg.batch_id_prefix, seq)
 
         raw_listing = list(
             cfg.discovery_fn()
@@ -590,22 +591,27 @@ class IngestEngine:
                 if f.length <= 0 and f.path not in by_path
             )
         listing = [by_path[p] for p in sorted(by_path)]
-        work, finished = self._plan(listing, wm_rows)
+        forget = self._cleaned + wm_purge
+        work, finished = self._plan(listing, wm_rows, set(forget))
         if cfg.discovery_fn is not None:
             planned = {w.path for w in work} | set(finished)
             self._carryover = {
                 f.path: f for f in listing if f.path not in planned
             }
 
+        # every cleanup runs after a commit names it in ``cleanup`` (so a
+        # restart can finish it), and the paths it cleaned are forgotten by
+        # the next commit; a failed path keeps its row and is retried
+        to_clean = finished if cfg.cleanup != "none" else []
         if not work:
-            cleaned = self._cleanup(finished)
-            if cleaned or wm_purge:
-                self.watermarks.commit([], seq, removed_paths=cleaned + wm_purge)
-            if cfg.discovery_ack_fn is not None:
-                # redelivered events for already-finished files must still
-                # ack or they redeliver forever
-                cfg.discovery_ack_fn(set(finished) | self._vanished)
-                self._vanished = set()
+            # metadata-only commit, when there is something to record
+            if forget or not set(self.watermarks.pending_cleanup()).issuperset(to_clean):
+                c = self.watermarks.commit([], seq, removed_paths=forget, cleanup=to_clean)
+                if c.app_metadata.get("forget") == forget:  # not another run's
+                    self._cleaned = []
+            # redelivered events for already-finished files must still ack
+            # or they redeliver forever
+            cleaned = self._settle(to_clean, set(finished))
             res = BatchResult(batch_id, seq, 0, 0, 0, cleaned=cleaned,
                               duration_s=time.monotonic() - t0)
             self._log_metrics(res, {})
@@ -665,12 +671,10 @@ class IngestEngine:
             # runs after the merge's data write, before its commit: the
             # write ran the scan, so every scanned range has reported
             folded["ranges"] = fold_outcomes(self._outcomes.value)
-            folded["md"] = {
-                "watermarks": self._watermark_updates(
-                    work, native_paths, folded["ranges"]
-                ),
-                "cleanup": finished,
-            }
+            folded["md"] = offsets_metadata(
+                self._watermark_updates(work, native_paths, folded["ranges"]),
+                forget, to_clean,
+            )
             return folded["md"]
 
         with _keep_empty_stages(self.spark):
@@ -686,25 +690,13 @@ class IngestEngine:
             self._update_auto_salt(commit)
         if commit.app_metadata != folded.get("md"):
             # another run committed this batch_id first (merge's replay or
-            # split-brain guard returned its commit): finish THAT commit,
-            # as crash recovery would
+            # split-brain guard returned its commit): finish THAT commit
             return self._finish_recovered(commit, seq, t0)
-        wm_updates = folded["md"]["watermarks"]
         counts = obs.get
 
-        cleaned = self._cleanup(finished)
-        self.watermarks.commit(wm_updates, seq, removed_paths=cleaned + wm_purge)
-        if cfg.discovery_ack_fn is not None:
-            # safe point: these paths' offsets are durable, so
-            # acknowledging their queue messages can no longer lose a
-            # discovery; capped-out paths are excluded — their messages
-            # stay pending until their own watermark lands
-            cfg.discovery_ack_fn(
-                {u["path"] for u in wm_updates}
-                | set(finished)
-                | self._vanished
-            )
-            self._vanished = set()
+        self._cleaned = []  # this commit forgot them
+        durable = {u["path"] for u in folded["md"]["watermarks"]} | set(finished)
+        cleaned = self._settle(to_clean, durable)
 
         if cfg.compact_every and seq > 0 and seq % cfg.compact_every == 0:
             self.lake.compact(
@@ -724,20 +716,12 @@ class IngestEngine:
         return res
 
     def _finish_recovered(self, commit, seq: int, t0: float) -> BatchResult:
-        """Watermark/cleanup half of a batch whose MERGE is already in the
-        lake: its offsets and cleanup list come from the commit's
-        app_metadata, so the replay reads nothing."""
-        cfg = self.config
+        """Cleanup and ack of a batch another run committed first; nothing
+        is written. This run's paths to forget were not in that commit, so
+        the next commit forgets them with the ones cleaned here."""
         md = commit.app_metadata or {}
-        cleaned = self._cleanup(md.get("cleanup", []))
-        self.watermarks.commit(md.get("watermarks", []), seq, removed_paths=cleaned)
-        if cfg.discovery_ack_fn is not None:
-            cfg.discovery_ack_fn(
-                {w["path"] for w in md.get("watermarks", [])}
-                | set(md.get("cleanup", []))
-                | self._vanished
-            )
-            self._vanished = set()
+        cleanup = md.get("cleanup", [])
+        cleaned = self._settle(cleanup, {w["path"] for w in md.get("watermarks", [])} | set(cleanup))
         res = BatchResult(
             commit.batch_id, seq, len(md.get("watermarks", [])), 0,
             commit.metrics.get("rows_written", 0), recovered=True,
@@ -806,9 +790,9 @@ class IngestEngine:
         By default a failed batch is logged and the loop continues with the
         next trigger — the reference's poll loop warns and returns an empty
         batch on policy errors (FsSourceTask.java:127-133). Nothing is
-        half-committed: the exactly-once protocol replays the failed batch
-        on the next trigger (same batch_seq until the watermark commit
-        lands). ``stop_on_error=True`` propagates instead.
+        half-committed: a batch's rows and offsets are one commit, so the
+        next trigger re-plans from the last committed offsets.
+        ``stop_on_error=True`` propagates instead.
         """
         results: list[BatchResult] = []
         for _ in policy.triggers():
@@ -844,6 +828,33 @@ class IngestEngine:
         )
 
     # -------------------------------------------------------------- cleanup
+    def _settle(self, cleanup: list[str], durable: set[str]) -> list[str]:
+        """After a commit, clean the files it names (the next commit forgets
+        them) and ack the discovery messages of the ``durable`` paths: their
+        offsets are committed, or they are finished or vanished. Capped-out
+        paths stay pending until their own offsets land."""
+        cleaned = self._cleanup(cleanup)
+        self._cleaned = list(dict.fromkeys(self._cleaned + cleaned))
+        if self.config.discovery_ack_fn is not None:
+            self.config.discovery_ack_fn(durable | self._vanished)
+            self._vanished = set()
+        return cleaned
+
+    def _resume_cleanup(self) -> list[str]:
+        """Finish the last commit's cleanup, which a stop may have cut short,
+        on the files that are still the ones it finished: the planner calls
+        them finished and they predate the commit. The rest (gone, or
+        recreated after their cleanup) count as cleaned untouched: the next
+        commit forgets their offsets, so a recreated file is read from 0."""
+        pending = self.watermarks.pending_cleanup()
+        if not pending:
+            return []
+        last = stream_batch_id(self.config.batch_id_prefix, self.watermarks.last_seq())
+        written = os.path.getmtime(self.lake._log_path(self.lake._state_full().batch_ids[last]))
+        unchanged = [m for m in map(_stat, pending) if m and m.mtime < written]
+        _, finished = self._plan(unchanged, self.watermarks.load_dict())
+        return [p for p in pending if p not in finished] + self._cleanup(finished)
+
     def _cleanup(self, paths: list[str]) -> list[str]:
         """Apply NONE/MOVE/DELETE to fully-consumed files
         (AbstractPolicy.java:281-331, which routes through Hadoop FS for
@@ -1002,12 +1013,11 @@ def _compressed(path: str) -> bool:
     return _compression_of(path) is not None
 
 
-def _still_exists(path: str) -> bool:
-    """False only when the file system says NotFound. Any other error
-    (a transient remote-FS failure) propagates: treating it as "vanished"
-    would purge the file's watermark row and ack its discovery message,
-    and its unread tail would never be offered again. The batch fails
-    instead, and the next trigger retries it."""
+def _stat(path: str) -> FileMeta | None:
+    """Size and mtime; None when the file is gone. Any remote error but
+    NotFound propagates: reading a transient failure as "vanished" would
+    purge the file's offsets and ack its discovery message, so its unread
+    tail would never be offered again; the batch fails and is retried."""
     if "://" in path and not path.startswith("file://"):
         import pyarrow.fs as pafs
 
@@ -1015,8 +1025,18 @@ def _still_exists(path: str) -> bool:
         # substituting a fake remote FS exercise this fallback too
         fs, p = _fs_for_uri(path)
         try:
-            return fs.get_file_info(p).type != pafs.FileType.NotFound
+            info = fs.get_file_info(p)
         except FileNotFoundError:
-            return False
-    local = path[len("file://"):] if path.startswith("file://") else path
-    return os.path.exists(local)
+            return None
+        if info.type == pafs.FileType.NotFound:
+            return None
+        return FileMeta(path, info.size, info.mtime.timestamp() if info.mtime else 0.0)
+    try:
+        st = os.stat(path[len("file://"):] if path.startswith("file://") else path)
+    except OSError:
+        return None
+    return FileMeta(path, st.st_size, st.st_mtime)
+
+
+def _still_exists(path: str) -> bool:
+    return _stat(path) is not None

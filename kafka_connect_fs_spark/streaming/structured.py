@@ -5,8 +5,9 @@ the common object-store layout), Spark's own FileStreamSource is the
 idiomatic discovery mechanism: checkpointed file offsets, maxFilesPerTrigger
 batching. Each micro-batch lands in the same LakeTable through an
 idempotent MERGE keyed by the streaming batch_id — exactly-once without the
-custom watermark store (which exists for the *append-tail* case Spark's
-source cannot express; see streaming/engine.py).
+per-file byte offsets IngestEngine folds from the lake's log (they exist
+for the *append-tail* case Spark's source cannot express; see
+streaming/engine.py).
 
 Reference parity: SimplePolicy/SleepyPolicy + rotate-only readers
 (policy/SimplePolicy.java, AbstractFileReader batching) map to

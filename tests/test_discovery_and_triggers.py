@@ -63,8 +63,17 @@ def test_missing_uri_lists_empty(tmp_path):
 # --------------------------------------------------------------- watermarks
 
 
+def _store(spark, root, stream="s-"):
+    """The offsets view of ``stream`` over a (new or existing) lake table."""
+    from kafka_connect_fs_spark.plans.lake import LakeTable
+
+    lake = (LakeTable(spark, root) if LakeTable.exists(root) else
+            LakeTable.create(spark, root, keys=["k"], ts_col="ts"))
+    return WatermarkStore(lake, stream)
+
+
 def test_watermark_commit_and_reload(spark, tmp_path):
-    wm = WatermarkStore(spark, str(tmp_path / "wm"))
+    wm = _store(spark, str(tmp_path / "t"))
     assert wm.last_seq() == -1 and wm.load().count() == 0
     wm.commit(
         [{"path": "/f1", "committed_offset": 10, "file_size": 20, "eof": False}], 0
@@ -79,25 +88,26 @@ def test_watermark_commit_and_reload(spark, tmp_path):
     assert wm.last_seq() == 1
     rows = {r.path: (r.committed_offset, r.eof) for r in wm.load().collect()}
     assert rows == {"/f1": (20, True), "/f2": (5, True)}
+    # each stream folds only its own commits
+    other = _store(spark, str(tmp_path / "t"), stream="other-")
+    assert other.last_seq() == -1 and other.load_dict() == {}
 
 
 def test_watermark_remove_paths(spark, tmp_path):
-    wm = WatermarkStore(spark, str(tmp_path / "wm"))
+    wm = _store(spark, str(tmp_path / "t"))
     wm.commit([{"path": "/f1", "committed_offset": 1, "file_size": 1, "eof": True}], 0)
     wm.commit([], 1, removed_paths=["/f1"])
     assert wm.load().count() == 0
 
 
-def test_watermark_failed_commit_leaves_cache_matching_disk(spark, tmp_path):
-    """A commit that dies before its marker is durable must not leak its
-    updates/removals into the in-process live dict — the daemon keeps
-    running after a failed batch (engine.run catches and continues), and a
-    diverged cache would serve never-committed watermarks until restart."""
-    import pyarrow.parquet as pq_mod
+def test_watermark_failed_commit_leaves_cache_matching_disk(spark, tmp_path, monkeypatch):
+    """A commit that dies before its log entry is durable must not leak its
+    updates/removals into the in-process view — the daemon keeps running
+    after a failed batch (engine.run catches and continues), and a diverged
+    view would serve never-committed offsets until restart."""
+    import kafka_connect_fs_spark.plans.lake as lake_mod
 
-    import kafka_connect_fs_spark.sources.watermarks as wmod
-
-    wm = WatermarkStore(spark, str(tmp_path / "wm"))
+    wm = _store(spark, str(tmp_path / "t"))
     wm.commit(
         [
             {"path": "/f1", "committed_offset": 10, "file_size": 20, "eof": False},
@@ -107,27 +117,23 @@ def test_watermark_failed_commit_leaves_cache_matching_disk(spark, tmp_path):
     )
     before = {p: dict(r) for p, r in wm.load_dict().items()}
 
-    orig = pq_mod.write_table
-
     def boom(*a, **k):
         raise OSError("disk full")
 
-    wmod.pq.write_table = boom
-    try:
-        with pytest.raises(OSError):
-            wm.commit(
-                [{"path": "/f1", "committed_offset": 20, "file_size": 20, "eof": True}],
-                1,
-                removed_paths=["/f2"],
-            )
-    finally:
-        wmod.pq.write_table = orig
+    monkeypatch.setattr(lake_mod.os, "link", boom)
+    with pytest.raises(OSError):
+        wm.commit(
+            [{"path": "/f1", "committed_offset": 20, "file_size": 20, "eof": True}],
+            1,
+            removed_paths=["/f2"],
+        )
+    monkeypatch.undo()
 
     after = {p: dict(r) for p, r in wm.load_dict().items()}
     assert after == before  # in-process view still matches durable state
     assert wm.last_seq() == 0
-    # a fresh store (process restart) agrees
-    fresh = WatermarkStore(spark, str(tmp_path / "wm"))
+    # a fresh view (process restart) agrees
+    fresh = _store(spark, str(tmp_path / "t"))
     assert {p: dict(r) for p, r in fresh.load_dict().items()} == before
     # and the store still works after the failure
     wm.commit(

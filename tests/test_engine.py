@@ -4,8 +4,8 @@ Covers: full replay == oracle, no-op re-run, append tailing (resume from
 committed offset — FsSourceTaskTest.java:171-185), skip-finished files
 (:260-271), batching across triggers (:189-256), error tolerance (:285-316),
 cleanup MOVE/DELETE (PolicyTestBase.java:162-232), regex filtering
-(:141-157), crash recovery between MERGE and watermark commit (exactly-once,
-beyond the reference's at-least-once).
+(:141-157), crash recovery at every commit boundary (exactly-once, beyond
+the reference's at-least-once).
 """
 
 from __future__ import annotations
@@ -86,25 +86,25 @@ def test_append_tail_resumes_from_offset(spark, tmp_path):
 
 
 def test_mid_batch_crash_recovery_is_exactly_once(spark, tmp_path, monkeypatch):
+    """A crash right after the lake commit: the rows and their offsets
+    landed together, so a restarted engine reads nothing again."""
     engine = make_engine(spark, tmp_path)
     rows = transcript_change_events(8, 3)
     write_jsonl(rows, str(tmp_path / "src" / "a.jsonl"))
-
-    real_commit = engine.watermarks.commit
     calls = {"n": 0}
 
-    def exploding_commit(*a, **kw):
+    def crash_after_commit(paths):
         calls["n"] += 1
-        raise RuntimeError("simulated crash between MERGE and watermark commit")
+        raise RuntimeError("simulated crash after the lake commit")
 
-    monkeypatch.setattr(engine.watermarks, "commit", exploding_commit)
+    monkeypatch.setattr(engine, "_cleanup", crash_after_commit)
     with pytest.raises(RuntimeError):
         engine.run_once()
     assert calls["n"] == 1
-    monkeypatch.setattr(engine.watermarks, "commit", real_commit)
 
-    res = engine.run_once()  # replay of the same batch
-    assert res.recovered is True
+    engine = make_engine(spark, tmp_path)  # restart on the same roots
+    res = engine.run_once()
+    assert res.n_events == 0 and res.recovered is False
     assert_matches_oracle(engine, rows)
     # and the batch after that sees nothing new
     res3 = engine.run_once()
@@ -397,19 +397,21 @@ def test_run_loop_tolerates_batch_failures(spark, tmp_path, monkeypatch):
     rows = transcript_change_events(4, 2)
     write_jsonl(rows, str(tmp_path / "src" / "a.jsonl"))
 
-    real = engine.watermarks.commit
+    real = engine._cleanup
     state = {"failed_once": False}
 
-    def flaky_commit(*a, **kw):
+    def flaky_cleanup(paths):
+        # the first call follows the first batch's lake commit
         if not state["failed_once"]:
             state["failed_once"] = True
             raise RuntimeError("transient failure")
-        return real(*a, **kw)
+        return real(paths)
 
-    monkeypatch.setattr(engine.watermarks, "commit", flaky_commit)
+    monkeypatch.setattr(engine, "_cleanup", flaky_cleanup)
     results = engine.run(SleepyPolicy(sleep_s=0.01, max_execs=3))
     assert len(results) == 2  # first trigger failed, two succeeded
-    assert results[0].recovered is True  # the replayed batch
+    # the failed batch had committed: nothing is read twice
+    assert [r.n_events for r in results] == [0, 0]
     assert_matches_oracle(engine, rows)
 
 
@@ -817,26 +819,25 @@ def test_engine_type_widening_across_schema_versions(spark, tmp_path):
 
 
 def test_watermark_snapshot_retention_and_cache(spark, tmp_path):
-    """A daemon's watermark store stays O(1) on disk (old snapshot versions
-    pruned) and O(0) reads per batch (in-process cache per version)."""
-    import os as _os
-
+    """The offsets live in the lake's log: nothing is written under the
+    checkpoint's old store directory, the state checkpoints keep only the
+    newest two snapshots, the view answers from the lake's in-process
+    state (no re-read per call), and a cold open loads the same offsets."""
     engine = make_engine(spark, tmp_path)
+    engine.lake._ckpt_every = 2
     for i in range(5):
         write_jsonl(transcript_change_events(2, 2, seed=i),
                     str(tmp_path / "src" / f"f{i}.jsonl"))
         engine.run_once()
-    vs = engine.watermarks._versions()
-    assert len(vs) <= 2, vs  # retention
-    # cache: same version → identical object, no re-read
+    assert not (tmp_path / "ckpt" / "watermarks").exists()
+    ckpts = [n for n in os.listdir(tmp_path / "table" / "_log") if n.endswith(".ckpt.json")]
+    assert len(ckpts) == 2, ckpts  # retention
     d1 = engine.watermarks.load_dict()
     d2 = engine.watermarks.load_dict()
-    assert d1 is d2
-    # cold store still loads the latest snapshot correctly
-    from kafka_connect_fs_spark.sources.watermarks import WatermarkStore
-
-    fresh = WatermarkStore(spark, str(tmp_path / "ckpt" / "watermarks"))
-    assert fresh.load_dict() == d1 and fresh.last_seq() == engine.watermarks.last_seq()
+    assert d1 is d2 and len(d1) == 5
+    fresh = make_engine(spark, tmp_path)  # cold: newest checkpoint + suffix
+    assert fresh.watermarks.load_dict() == d1
+    assert fresh.watermarks.last_seq() == engine.watermarks.last_seq() == 4
 
 
 def test_no_driver_stats_on_happy_path(spark, tmp_path, monkeypatch):
@@ -1074,89 +1075,50 @@ def test_merge_precommit_check_aborts_before_commit(spark, tmp_path):
     assert {r.conv_id for r in t.read().collect()} == {"c1", "c2"}
 
 
-def _wm_row(path, off=10, seq=0):
+def _wm_row(path, off=10):
     return {"path": path, "committed_offset": off, "file_size": off, "eof": True}
 
 
+def _offsets_view(spark, root, stream="ingest-"):
+    from kafka_connect_fs_spark.plans.lake import LakeTable
+    from kafka_connect_fs_spark.sources.watermarks import WatermarkStore
+
+    lake = (LakeTable(spark, root) if LakeTable.exists(root) else
+            LakeTable.create(spark, root, keys=["conv_id", "turn_idx"], ts_col="ts"))
+    return WatermarkStore(lake, stream)
+
+
 def test_watermark_delta_log_commit_is_o_touched(spark, tmp_path):
-    """Steady-state watermark commit cost must be O(files touched this
-    batch), independent of the total tracked-file count: after seeding a
-    large base, a 500-file commit writes ONE small delta parquet and no new
-    base snapshot (round-4 verdict item #2: the previous design rewrote all
-    tracked rows every commit — 0.22 s/batch at 200k files)."""
-    from kafka_connect_fs_spark.sources.watermarks import WatermarkStore
+    """An offsets commit costs O(files touched this batch), independent of
+    the tracked-file count: with 20k tracked paths, a 500-file commit's log
+    entry holds only those 500 entries, byte for byte the size of the same
+    commit over 1k tracked paths (a full-state rewrite per commit cost
+    0.22 s/batch at 200k files), and the state refresh after a commit
+    updates the tracked map in place instead of copying it."""
+    import json as _json
 
-    root = str(tmp_path / "wm")
-    store = WatermarkStore(spark, root)
-    n_tracked = 20_000
-    store.commit([_wm_row(f"/data/f{i:06d}") for i in range(n_tracked)], 0)
-    # the seed commit compacts (delta rows >= live rows) → base snapshot
-    assert os.path.exists(store._base_file(0))
-    base_sizes = {0: os.path.getsize(store._base_file(0))}
-    for b in range(1, 6):
-        store.commit(
-            [_wm_row(f"/data/f{i:06d}", off=20 + b) for i in range(0, 500 * b, b)][:500],
-            b,
-        )
-        # steady state: a delta file exists, NO new base was written
-        assert os.path.exists(store._delta_file(b)), b
-        assert not os.path.exists(store._base_file(b)), b
-        import pyarrow.parquet as pq
-
-        assert pq.read_table(store._delta_file(b)).num_rows == 500
-        # and the delta is tiny relative to the base
-        assert os.path.getsize(store._delta_file(b)) < base_sizes[0] / 5
-    assert len(store.load_dict()) == n_tracked
-    # cold replay (base + delta chain) reproduces the live state exactly
-    fresh = WatermarkStore(spark, root)
-    assert fresh.load_dict() == store.load_dict()
-    assert fresh.last_seq() == 5
-
-
-def test_watermark_delta_log_compaction_bounds_chain(spark, tmp_path):
-    """The delta chain is bounded: after _max_deltas commits the store
-    compacts into a fresh base and GC drops unreferenced deltas."""
-    from kafka_connect_fs_spark.sources.watermarks import WatermarkStore
-
-    store = WatermarkStore(spark, str(tmp_path / "wm"))
-    store._max_deltas = 4
-    store.commit([_wm_row(f"/d/f{i}") for i in range(2000)], 0)  # base
-    for b in range(1, 8):
-        store.commit([_wm_row(f"/d/f{b}", off=100 + b)], b)
-    vs = store._versions()
-    meta = store._marker(vs[-1])
-    assert len(meta["delta_seqs"]) <= store._max_deltas
-    assert meta["base_seq"] > 0  # compaction produced a newer base
-    # GC: no orphan delta/base files beyond what kept markers reference
-    referenced = set()
-    for v in vs:
-        m = store._marker(v)
-        referenced.add(("b", m["base_seq"]))
-        referenced.update(("d", d) for d in m["delta_seqs"])
-    import re as _re
-
-    on_disk = set()
-    for name in os.listdir(str(tmp_path / "wm")):
-        if m := _re.fullmatch(r"d(\d{12})\.parquet", name):
-            on_disk.add(("d", int(m.group(1))))
-        elif m := _re.fullmatch(r"v(\d{12})", name):
-            on_disk.add(("b", int(m.group(1))))
-    assert on_disk <= referenced, on_disk - referenced
-    # state is still exact after compaction + GC
-    fresh = WatermarkStore(spark, str(tmp_path / "wm"))
-    d = fresh.load_dict()
-    assert len(d) == 2000
-    for b in range(1, 8):
-        assert d[f"/d/f{b}"]["committed_offset"] == 100 + b
+    sizes = {}
+    for n_tracked in (1_000, 20_000):
+        store = _offsets_view(spark, str(tmp_path / f"t{n_tracked}"))
+        store.commit([_wm_row(f"/data/f{i:06d}") for i in range(n_tracked)], 0)
+        c = store.commit([_wm_row(f"/data/f{i:06d}", off=21) for i in range(500)], 1)
+        entry = store.lake._log_path(c.version)
+        assert len(_json.load(open(entry))["app_metadata"]["watermarks"]) == 500
+        sizes[n_tracked] = os.path.getsize(entry)
+        assert len(store.load_dict()) == n_tracked
+        assert store.load_dict()["/data/f000499"]["committed_offset"] == 21
+        # the commit folds into the tracked map in place: no per-commit copy
+        files = store.load_dict()
+        store.commit([_wm_row("/data/f000000", off=22)], 2, removed_paths=["/data/f000001"])
+        assert store.load_dict() is files and len(files) == n_tracked - 1
+    assert sizes[1_000] == sizes[20_000]
 
 
 def test_watermark_delta_log_removals_replay(spark, tmp_path):
-    """Tombstoned removals survive a cold replay of the delta chain, and a
-    removal+re-add in later batches resolves to the re-add."""
-    from kafka_connect_fs_spark.sources.watermarks import WatermarkStore
-
-    root = str(tmp_path / "wm")
-    store = WatermarkStore(spark, root)
+    """Removals survive a cold replay of the log, and a removal+re-add in
+    later batches resolves to the re-add."""
+    root = str(tmp_path / "t")
+    store = _offsets_view(spark, root)
     store.commit([_wm_row("/x/a"), _wm_row("/x/b"), _wm_row("/x/c")], 0)
     store.commit([], 1, removed_paths=["/x/b"])
     store.commit([_wm_row("/x/b", off=99)], 2)
@@ -1164,49 +1126,136 @@ def test_watermark_delta_log_removals_replay(spark, tmp_path):
     expect = {"/x/a": 10, "/x/b": 99}
     live = {p: r["committed_offset"] for p, r in store.load_dict().items()}
     assert live == expect
-    fresh = WatermarkStore(spark, root)
+    fresh = _offsets_view(spark, root)
     assert {p: r["committed_offset"] for p, r in fresh.load_dict().items()} == expect
+    assert fresh.last_seq() == 3
     # Spark lineage view agrees
     assert {r.path: r.committed_offset for r in fresh.load().collect()} == expect
 
 
-def test_watermark_old_layout_migration(spark, tmp_path):
-    """A store written by the pre-delta-log layout (marker without
-    base_seq + v{seq}/snapshot.parquet) loads and upgrades in place."""
+def _write_old_store(root, seq, rows, deltas=()):
+    """A checkpoint's ``watermarks`` directory as older builds wrote it.
+    Without ``deltas``: one marker without base_seq plus its snapshot
+    directory (the first layout). With ``deltas`` ([(seq, rows, removed
+    paths)]): a base snapshot at ``seq`` plus a delta chain."""
     import json as _json
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from kafka_connect_fs_spark.sources.watermarks import (
-        _ARROW_SCHEMA,
-        WatermarkStore,
-    )
+    cols = [("path", pa.string()), ("committed_offset", pa.int64()),
+            ("file_size", pa.int64()), ("eof", pa.bool_()),
+            ("batch_seq", pa.int64()), ("updated_at", pa.timestamp("us"))]
 
-    root = tmp_path / "wm"
-    (root / "v000000000003").mkdir(parents=True)
-    rows = [
-        {"path": "/old/a", "committed_offset": 5, "file_size": 5, "eof": True,
-         "batch_seq": 3, "updated_at": None},
-        {"path": "/old/b", "committed_offset": 7, "file_size": 9, "eof": False,
-         "batch_seq": 3, "updated_at": None},
-    ]
-    pq.write_table(
-        pa.Table.from_pylist(rows, schema=_ARROW_SCHEMA),
-        str(root / "v000000000003" / "snapshot.parquet"),
+    def table(rs, removed=None):
+        rs = [dict(r, batch_seq=seq, updated_at=None) for r in rs]
+        if removed is None:
+            return pa.Table.from_pylist(rs, schema=pa.schema(cols))
+        rs = [dict(_wm_row(p, 0), batch_seq=seq, updated_at=None, removed=True)
+              for p in removed] + [dict(r, removed=False) for r in rs]
+        return pa.Table.from_pylist(rs, schema=pa.schema(cols + [("removed", pa.bool_())]))
+
+    os.makedirs(os.path.join(root, f"v{seq:012d}"))
+    pq.write_table(table(rows), os.path.join(root, f"v{seq:012d}", "snapshot.parquet"))
+    marker = {"batch_seq": seq, "n_updates": len(rows)}
+    if deltas:
+        marker = dict(marker, base_seq=seq, delta_seqs=[d for d, _, _ in deltas])
+        for d, rs, removed in deltas:
+            pq.write_table(table(rs, removed), os.path.join(root, f"d{d:012d}.parquet"))
+            marker["batch_seq"] = d
+    with open(os.path.join(root, f"v{marker['batch_seq']:012d}.json"), "w") as f:
+        _json.dump(marker, f)
+
+
+def _committed(path):
+    size = os.path.getsize(path)
+    return {"path": path, "committed_offset": size, "file_size": size, "eof": True}
+
+
+def test_watermark_old_layout_migration(spark, tmp_path):
+    """An engine opened on a checkpoint whose offsets sit in the first
+    store layout (a marker without base_seq plus a snapshot directory)
+    imports them in one commit and resumes without re-reading; the old
+    directory stays on disk and is imported only once."""
+    rows = transcript_change_events(6, 2, seed=21)
+    half = len(rows) // 2
+    p = str(tmp_path / "src" / "a.jsonl")
+    os.makedirs(tmp_path / "src")
+    write_jsonl(rows[:half], p)
+    old = str(tmp_path / "ckpt" / "watermarks")
+    _write_old_store(old, 3, [_committed(p)])
+    engine = make_engine(spark, tmp_path)
+    assert engine.lake.latest_version() == 0  # the import commit
+    assert engine.watermarks.last_seq() == 4 and os.path.isdir(old)
+    assert engine.watermarks.load_dict()[p]["committed_offset"] == os.path.getsize(p)
+    assert engine.run_once().n_events == 0  # already consumed: not re-read
+    append_jsonl(rows[half:], p)
+    assert engine.run_once().n_events == len(rows) - half  # only the tail
+    make_engine(spark, tmp_path)  # reopen: no second import
+    assert engine.lake.latest_version() == 1
+
+
+def test_watermark_delta_log_layout_import(spark, tmp_path):
+    """The delta-chain layout (base snapshot, deltas with tombstones)
+    imports to its replayed state: a removed path is gone, a re-added one
+    keeps its newest offset, and the engine resumes from there."""
+    os.makedirs(tmp_path / "src")
+    paths = [str(tmp_path / "src" / f"{n}.jsonl") for n in "abc"]
+    rows = transcript_change_events(9, 2, seed=22)
+    for i, p in enumerate(paths):
+        write_jsonl(rows[i::3], p)
+    a, b, c = (_committed(p) for p in paths)
+    gone = _wm_row(str(tmp_path / "src" / "gone.jsonl"))
+    _write_old_store(
+        str(tmp_path / "ckpt" / "watermarks"), 0, [a, dict(b, committed_offset=1), gone],
+        deltas=[(1, [], [a["path"]]), (2, [a, b], []), (3, [c], [c["path"]]),
+                (4, [], [gone["path"]])],
     )
-    (root / "v000000000003.json").write_text(
-        _json.dumps({"batch_seq": 3, "n_updates": 2})
-    )
-    store = WatermarkStore(spark, str(root))
-    assert store.last_seq() == 3
-    assert {p: r["committed_offset"] for p, r in store.load_dict().items()} == {
-        "/old/a": 5, "/old/b": 7,
+    engine = make_engine(spark, tmp_path)
+    assert engine.watermarks.load_dict() == {
+        w["path"]: {k: w[k] for k in ("committed_offset", "file_size", "eof")}
+        for w in (a, b, c)
     }
-    # a new commit appends a delta against the migrated base
-    store.commit([_wm_row("/old/c", off=1)], 4)
-    fresh = WatermarkStore(spark, str(root))
-    assert set(fresh.load_dict()) == {"/old/a", "/old/b", "/old/c"}
+    assert engine.watermarks.last_seq() == 5
+    assert engine.run_once().n_events == 0
+
+
+def test_lake_with_pre_offsets_checkpoint_opens_and_ingests(spark, tmp_path):
+    """A lake whose newest checkpoint predates offsets in the log (no
+    ``streams``) and whose old store missed the last merge's offsets (a
+    crash between the two commits): the import takes the store's state
+    and puts that merge's offsets on top, so nothing is read twice."""
+    import json as _json
+
+    rows = transcript_change_events(8, 2, seed=23)
+    q = len(rows) // 4
+    p = str(tmp_path / "src" / "a.jsonl")
+    engine = make_engine(spark, tmp_path)
+    engine.lake._ckpt_every = 2
+    write_jsonl(rows[:q], p)
+    engine.run_once()
+    sizes = []
+    for part in (rows[q:2 * q], rows[2 * q:3 * q]):
+        append_jsonl(part, p)
+        engine.run_once()
+        sizes.append(os.path.getsize(p))
+    log = tmp_path / "table" / "_log"
+    for n in os.listdir(log):
+        if n.endswith(".ckpt.json"):
+            raw = _json.loads((log / n).read_text())
+            del raw["streams"]
+            (log / n).write_text(_json.dumps(raw))
+    # the old store committed seqs 0 and 1; the merge of seq 2 landed
+    # without its store commit
+    _write_old_store(str(tmp_path / "ckpt" / "watermarks"), 1,
+                     [dict(_committed(p), committed_offset=sizes[0], file_size=sizes[0])])
+    fresh = make_engine(spark, tmp_path)
+    assert fresh.watermarks.load_dict()[p]["committed_offset"] == os.path.getsize(p)
+    assert fresh.watermarks.last_seq() == 3
+    assert fresh.run_once().n_events == 0
+    append_jsonl(rows[3 * q:], p)
+    assert fresh.run_once().n_events == len(rows) - 3 * q
+    assert_matches_oracle(fresh, rows)
 
 
 # ------------------------------------------- one Spark pass per tail batch
@@ -1402,3 +1451,185 @@ def test_record_without_op_reads_as_upsert(spark, tmp_path):
                            aggs={"n": F.count(F.lit(1))}, n_buckets=4)
     mv.refresh()
     assert {(r.conv_id, r.n) for r in mv.read().collect()} == {("c1", 1), ("c2", 1)}
+
+
+# ------------------------------------------- one durable log: crash boundaries
+
+
+def _crash(engine, boundary, monkeypatch):
+    """Make the engine's next batch raise at ``boundary``."""
+    def boom(*a, **kw):
+        raise RuntimeError(f"simulated crash: {boundary}")
+
+    if boundary == "precommit_check":  # data written, commit not visible
+        monkeypatch.setattr(engine, "_watermark_updates", boom)
+    elif boundary == "after_commit":  # before any cleanup
+        monkeypatch.setattr(engine, "_cleanup", boom)
+    elif boundary == "during_cleanup":  # the first file cleaned, not the second
+        real = engine._cleanup_one
+        done = []
+
+        def one_then_crash(p, mode):
+            if done:
+                boom()
+            done.append(p)
+            real(p, mode)
+
+        monkeypatch.setattr(engine, "_cleanup_one", one_then_crash)
+    else:  # after_cleanup: every file cleaned, the next commit not written
+        real_cleanup = engine._cleanup
+
+        def clean_then_crash(paths):
+            real_cleanup(paths)
+            boom()
+
+        monkeypatch.setattr(engine, "_cleanup", clean_then_crash)
+
+
+@pytest.mark.parametrize(
+    "boundary", ["precommit_check", "after_commit", "during_cleanup", "after_cleanup"]
+)
+def test_crash_at_commit_boundary_then_restart(spark, tmp_path, monkeypatch, boundary):
+    """A batch with work and two finished files to delete crashes at each
+    boundary of the one-commit protocol; a fresh engine on the same roots
+    then matches the LWW oracle, re-reads only bytes no commit holds, and
+    forgets the cleaned files' offsets within one more trigger."""
+    rows = transcript_change_events(9, 3, seed=31)
+    engine = make_engine(spark, tmp_path, cleanup="delete")
+    done = [str(tmp_path / "src" / f"{n}.jsonl") for n in "ab"]
+    for i, p in enumerate(done):
+        write_jsonl(rows[i::3], p)
+    engine.run_once()  # a, b consumed to eof
+    new = str(tmp_path / "src" / "c.jsonl")
+    write_jsonl(rows[2::3], new)
+    _crash(engine, boundary, monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        engine.run_once()  # work: c; cleanup: a, b
+    monkeypatch.undo()
+
+    engine = make_engine(spark, tmp_path, cleanup="delete")
+    committed = {p: w["committed_offset"] for p, w in engine.watermarks.load_dict().items()}
+    read = []
+    real_read = engine._read
+    monkeypatch.setattr(
+        engine, "_read", lambda work, acc: read.extend(work) or real_read(work, acc)
+    )
+    engine.run_once()
+    assert all(w.start_offset >= committed.get(w.path, 0) for w in read)
+    assert [w.path for w in read] == ([new] if boundary == "precommit_check" else [])
+    assert_matches_oracle(engine, rows)
+    engine.run_once()  # one more trigger
+    assert not any(os.path.exists(p) for p in done)
+    assert not set(done) & set(engine.watermarks.load_dict())
+    assert_matches_oracle(engine, rows)
+
+
+def _log_entries(engine) -> int:
+    return len(engine.lake._list_commit_names())
+
+
+@pytest.mark.parametrize("cleanup", ["none", "delete"])
+def test_batch_with_work_is_one_commit_and_idle_writes_nothing(spark, tmp_path, cleanup):
+    """A batch with work adds exactly one log entry, whose app_metadata
+    carries the batch's offsets, and nothing under the checkpoint's old
+    store directory. Once settled, idle triggers write nothing."""
+    engine = make_engine(spark, tmp_path, cleanup=cleanup)
+    rows = transcript_change_events(6, 2, seed=32)
+    a, b = (str(tmp_path / "src" / f"{n}.jsonl") for n in "ab")
+    write_jsonl(rows[::2], a)
+    engine.run_once()
+    write_jsonl(rows[1::2], b)  # work: b; finished: a
+    before = _log_entries(engine)
+    engine.run_once()
+    assert _log_entries(engine) == before + 1
+    md = engine.lake.commits()[-1].app_metadata
+    assert [w["path"] for w in md["watermarks"]] == [b]
+    # with cleanup="none" a finished file is never a cleanup candidate, so
+    # commits do not grow with the count of finished files
+    assert md["cleanup"] == ([] if cleanup == "none" else [a])
+    assert not (tmp_path / "ckpt" / "watermarks").exists()
+    for _ in range(2):  # settle: delete b, forget a then b (delete)
+        engine.run_once()
+    assert set(engine.watermarks.load_dict()) == ({a, b} if cleanup == "none" else set())
+    settled = engine.lake.latest_version()
+    for _ in range(3):
+        assert engine.run_once().n_files == 0
+    assert engine.lake.latest_version() == settled
+    assert_matches_oracle(engine, rows)
+
+
+def test_rename_retries_when_a_compaction_lands_first(spark, tmp_path):
+    """A maintenance compaction that commits between a rename's state read
+    and its write moves the rename to the next version; the engine batch
+    that triggered the rename succeeds."""
+    import json as _json
+
+    from pyspark.sql import types as T
+
+    from kafka_connect_fs_spark.plans.lake import LakeTable
+
+    engine = make_engine(spark, tmp_path, rename_hints={"tool": "tool_name"})
+    rows = transcript_change_events(4, 2, seed=33)
+    write_jsonl(rows, str(tmp_path / "src" / "a.jsonl"))
+    engine.run_once()
+    with open(tmp_path / "src" / "b.jsonl", "w") as f:
+        f.write(_json.dumps({"op": "upsert", "conv_id": "new", "turn_idx": 0,
+                             "role": "user", "text": "t", "tool_name": "x",
+                             "ts": "2031-01-01T00:00:00"}) + "\n")
+    engine.config.schema = T.StructType(
+        [f for f in CHANGE_EVENT_SCHEMA.fields if f.name != "tool"]
+    ).add("tool_name", T.StringType())
+
+    real_write = engine.lake._write_commit
+    raced = []
+
+    def compaction_lands_first(commit):
+        if commit.renames and not raced:
+            raced.append(LakeTable(spark, str(tmp_path / "table")).compact(1).version)
+        return real_write(commit)
+
+    engine.lake._write_commit = compaction_lands_first
+    res = engine.run_once()
+    rename = next(c for c in engine.lake.commits() if c.renames)
+    assert rename.version == raced[0] + 1 and rename.metrics["commit_retries"] == 1
+    assert res.n_events == 1
+    got = {r.conv_id: r.tool_name for r in engine.lake.read().collect()}
+    assert got["new"] == "x" and len(got) == len({r["conv_id"] for r in rows}) + 1
+
+
+@pytest.mark.parametrize(
+    "restart,same_size",
+    [(False, False), (True, False), (True, True)],
+    ids=["same_engine", "restart", "restart_same_size"],
+)
+def test_file_recreated_after_cleanup_is_read_from_zero(spark, tmp_path, restart, same_size):
+    """A deleted file's offsets are dropped by the commit after its
+    cleanup. A new file written under the same name before that commit is
+    a new file: it is read from byte 0, not tailed from the old offset.
+    After a restart, the fresh engine finishes the last commit's cleanup
+    only on files that are still the finished ones, so the recreated file
+    is left alone and read, even when it has the old size."""
+    engine = make_engine(spark, tmp_path, cleanup="delete")
+    rows = transcript_change_events(8, 2, seed=34)
+    p = str(tmp_path / "src" / "rot.jsonl")
+    write_jsonl(rows[:4], p)
+    old_size = os.path.getsize(p)
+    engine.run_once()  # read to eof
+    engine.run_once()  # finished: named in a commit's cleanup, then deleted
+    assert not os.path.exists(p) and p in engine.watermarks.load_dict()
+    assert engine.watermarks.pending_cleanup() == [p]
+    new = [dict(r) for r in (rows[4:8] if same_size else rows[4:])]
+    write_jsonl(new, p)  # recreated under the same name
+    if same_size:
+        d = old_size - os.path.getsize(p)
+        text = new[-1]["text"]
+        new[-1]["text"] = text[: len(text) + min(d, 0)] + "x" * max(d, 0)
+        write_jsonl(new, p)
+        assert os.path.getsize(p) == old_size
+    if restart:
+        engine = make_engine(spark, tmp_path, cleanup="delete")
+        assert os.path.exists(p)
+    assert engine.run_once().n_events == len(new)
+    assert_matches_oracle(engine, rows[:4] + new)
+    engine.run_once()  # now finished: cleaned by the regular path
+    assert not os.path.exists(p)

@@ -615,6 +615,49 @@ def test_torn_checkpoint_falls_back_to_replay(spark, tmp_path):
     assert st2.version == 119 and len(st2.live) == 120
 
 
+def test_offsets_fold_survives_checkpoint_and_torn_sidecar(spark, tmp_path):
+    """The per-stream offsets folded from commit app_metadata survive a
+    checkpoint and a cold open (their parquet sidecar), each stream folds
+    only its own batch ids, the fold forgets before it upserts, and a
+    checkpoint whose sidecar is torn falls back to the previous one."""
+    import glob
+
+    from kafka_connect_fs_spark.plans.lake import Commit, stream_batch_id
+
+    root = str(tmp_path / "of")
+    t = LakeTable.create(spark, root, keys=["k"], ts_col="ts", n_buckets=4)
+    t._ckpt_every = 3
+
+    def w(p, off):
+        return {"path": p, "committed_offset": off, "file_size": off, "eof": off > 5}
+
+    for v in range(8):
+        md = {"watermarks": [w(f"/f{v}", v), w("/hot", v)], "cleanup": [f"/f{v}"],
+              "forget": [f"/f{v - 2}"]}
+        t._write_commit(Commit(version=v, batch_id=stream_batch_id("a-", v), added=[],
+                               removed=[], schema_json=None, app_metadata=md))
+    # another stream, and a commit without offsets, fold nothing into "a-"
+    t._write_commit(Commit(version=8, batch_id=stream_batch_id("b-", 0), added=[],
+                           removed=[], schema_json=None,
+                           app_metadata={"watermarks": [w("/hot", 99)]}))
+    t._write_commit(Commit(version=9, batch_id="x", added=[], removed=[],
+                           schema_json=None, app_metadata={"watermarks": []}))
+    want = {"/f6": w("/f6", 6), "/f7": w("/f7", 7), "/hot": w("/hot", 7)}
+    want = {p: {k: r[k] for k in ("committed_offset", "file_size", "eof")}
+            for p, r in want.items()}
+    st = t._state_full()
+    assert st.streams["a-"]["files"] == want and st.streams["a-"]["seq"] == 7
+    assert st.streams["a-"]["cleanup"] == ["/f7"]
+    assert st.streams["b-"]["files"]["/hot"]["committed_offset"] == 99
+    assert len(glob.glob(f"{root}/_log/*.ckpt.offsets.parquet")) == 2  # retention
+    cold = LakeTable(spark, root)._state_full()
+    assert cold.streams == st.streams
+    newest = sorted(glob.glob(f"{root}/_log/*.ckpt.offsets.parquet"))[-1]
+    with open(newest, "wb") as f:
+        f.write(b"torn")
+    assert LakeTable(spark, root)._state_full().streams == st.streams
+
+
 def test_mor_write_salt_spreads_hot_bucket(spark, tmp_path):
     """write_salt > 1: a batch dominated by ONE key (one bucket) writes
     through several tasks/files instead of serializing into one; content
@@ -1661,3 +1704,33 @@ def test_compact_of_more_buckets_than_slots_writes_sorted_file_per_bucket(
     assert final == {
         (f"c{i}", i % 4): (f"u{i}" if i % 2 == 0 else f"t{i}") for i in range(300)
     }
+
+
+def test_offsets_fold_extends_the_head_in_place(spark, tmp_path):
+    """A replay to the head folds new commits' offsets into the stream's
+    map in place, so a commit costs O(files it touches), not a copy of
+    every tracked path. A replay to an older version starting from the
+    same cached state copies what it changes and leaves the head's map
+    alone."""
+    from kafka_connect_fs_spark.plans.lake import Commit, offsets_metadata, stream_batch_id
+
+    root = str(tmp_path / "ip")
+    t = LakeTable.create(spark, root, keys=["k"], ts_col="ts", n_buckets=4)
+
+    def commit(table, v, off):
+        w = {"path": "/f", "committed_offset": off, "file_size": off, "eof": False}
+        table._write_commit(Commit(
+            version=v, batch_id=stream_batch_id("a-", v), added=[], removed=[],
+            schema_json=None, app_metadata=offsets_metadata([w]),
+        ))
+
+    commit(t, 0, 1)
+    files = t._state_full().streams["a-"]["files"]
+    commit(LakeTable(spark, root), 1, 2)  # another process's commit
+    commit(LakeTable(spark, root), 2, 3)
+    old = t._state_full(at_version=1).streams["a-"]["files"]
+    assert old is not files and old["/f"]["committed_offset"] == 2
+    assert files["/f"]["committed_offset"] == 1
+    assert t._state_full().streams["a-"]["files"] is files
+    assert files["/f"]["committed_offset"] == 3
+    assert t._state_full(at_version=1).streams["a-"]["files"]["/f"]["committed_offset"] == 2
