@@ -22,10 +22,15 @@ upserts, deletes and late data):
    in one bucket because grouping starts with the bucket key), LWW-
    resolved, semi-joined to the window's touched BUCKET KEYS, and
    re-aggregated — cost scales with the batch, not the table.
-3. Groups the MV previously held for the touched keys that no longer
-   exist (fully-deleted conversations, rows that moved out of a
-   payload-column group) become op='delete' tombstones — the previous
-   groups come from the MV itself, never from the change rows' values.
+3. The groups the MV previously held for the same touched keys (read
+   from the MV itself, only in those keys' buckets, never from the change
+   rows' values) meet the recomputed groups in ONE full outer join. Both
+   the key match and the group match are null-safe, so a NULL bucket key
+   or a NULL payload group value is a group like any other. A previous
+   group with no recomputed row (a fully-deleted conversation, rows that
+   moved out of a payload-column group) becomes an op='delete' tombstone;
+   every other row is an upsert. Steps 2-3 are one lazy plan: nothing is
+   cached or counted before the merge writes it.
 4. The result MERGEs into the MV — itself a ``LakeTable`` keyed by the
    group columns with LWW on the refresh version, so the MV inherits the
    lake's exactly-once machinery: the refresh batch_id is derived from
@@ -41,7 +46,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from kafka_connect_fs_spark.plans.lake import LakeTable
@@ -188,30 +193,20 @@ class IncrementalRollup:
         files = mv._files_in_buckets(st.live, by_scheme)
         return mv._view(st, files).select(*self.group_cols)
 
+    def _touching(self, df: DataFrame, touched: DataFrame) -> DataFrame:
+        """``df``'s rows whose bucket key is one of ``touched``'s, matched
+        null-safely: a NULL bucket key is a key like any other."""
+        key = self.group_cols[0]
+        return df.join(touched, df[key].eqNullSafe(touched[key]), "left_semi")
+
     def refresh(self, to_version: int | None = None) -> RefreshStats:
         """Bring the MV up to ``to_version`` (default: the base head).
 
+        One plan into one MV merge: nothing is cached or counted first.
         Idempotent: the MV merge's batch_id encodes the (from, to)
         window, so a refresh that committed but whose caller crashed
-        before observing it replays as a no-op."""
-        cached: list[DataFrame] = []
-        try:
-            return self._refresh(to_version, cached)
-        finally:
-            # a failed refresh must not leave its shared subplans cached
-            for df in cached:
-                df.unpersist()
-
-    def _refresh(
-        self, to_version: int | None, cached: list[DataFrame]
-    ) -> RefreshStats:
-        """The refresh itself; every frame it persists goes into
-        ``cached`` for ``refresh`` to release."""
-
-        def persist(df: DataFrame) -> DataFrame:
-            cached.append(df.persist())
-            return df
-
+        before observing it replays as a no-op, and its delete count comes
+        back from that commit's ``mv_groups_deleted`` app-metadata."""
         base = self.base
         last = self.refreshed_version()
         head = base.latest_version() if to_version is None else int(to_version)
@@ -225,19 +220,22 @@ class IncrementalRollup:
         live = st.live
         initial = last < 0
         window = None if initial else base._change_commits(last, head)
-        if head <= last or window == []:
+        if head <= last or window == [] or not st.schema_json:
             # caught up, or only maintenance / metadata commits in the
             # window: no logical changes, nothing to absorb (the MV stays
-            # pinned at `last`; read_changes would skip these anyway)
+            # pinned at `last`; read_changes would skip these anyway). A
+            # base never written has no columns for the aggregates yet.
             return RefreshStats(last, last, 0, 0, 0, len(live), True)
 
         if initial:
-            candidates = list(live)
-            touched_keys = None
+            files = list(live)
+            # the same resolved view read() returns, so the MV aggregates
+            # exactly the rows a full recompute would
+            snap = base._view(st, files)
         else:
             changes = base._changes(window)
             by_scheme = self._touched_buckets_by_scheme(window, live, changes)
-            candidates = base._files_in_buckets(live, by_scheme)
+            files = base._files_in_buckets(live, by_scheme)
             # touched BUCKET KEYS, not touched group values: change rows
             # carry only their NEW column values (and delete tombstones
             # carry keys alone), so deriving groups from the change feed
@@ -247,106 +245,47 @@ class IncrementalRollup:
             # group the touched keys contribute to — and tombstoning the
             # groups the MV previously held for them — is correct for
             # arbitrary group columns (role, time windows, ...).
-            # persist: feeds the semi-join AND the gone-group anti-join
-            touched_keys = persist(changes.select(self.group_cols[0]).distinct())
-
-        recomputed = None
-        if candidates:
-            # the same resolved view read() returns, so the MV aggregates
-            # exactly the rows a full recompute would
-            snap = base._view(st, candidates)
-            if touched_keys is not None:
-                snap = snap.join(
-                    touched_keys, on=[self.group_cols[0]], how="left_semi"
-                )
-            for name, expr in self.derived.items():
-                snap = snap.withColumn(name, expr)
-            recomputed = snap.groupBy(*self.group_cols).agg(
-                *[expr.alias(name) for name, expr in self.aggs.items()]
+            touched = changes.select(self.group_cols[0]).distinct()
+            snap = self._touching(base._view(st, files), touched)
+        for name, expr in self.derived.items():
+            snap = snap.withColumn(name, expr)
+        rows = snap.groupBy(*self.group_cols).agg(
+            *[expr.alias(name) for name, expr in self.aggs.items()]
+        ).withColumn("op", F.lit("upsert"))
+        if not initial:
+            # null-safe on every group column: a NULL role or a to_date of
+            # a NULL ts is a group too. A previous group with no recomputed
+            # row is gone (a deleted conversation, rows that MOVED out of a
+            # payload-column group) and becomes a delete.
+            prev = self._touching(
+                self._read_prev_groups(touched, known=by_scheme), touched
             )
-            if touched_keys is not None:
-                # the partial path consumes `recomputed` twice (the gone-
-                # group anti-join/count AND the MV merge write): persist so
-                # the touched-bucket read + resolve + re-aggregation runs
-                # once per refresh, not once per consumer
-                recomputed = persist(recomputed)
-
-        mv_rows = None
-        if recomputed is not None:
-            mv_rows = recomputed.select(
-                F.lit("upsert").alias("op"),
-                *self.group_cols,
-                *self.aggs.keys(),
-                F.lit(head).cast("long").alias(_MV_TS),
+            prev = prev.select(*[F.col(c).alias(f"_prev_{c}") for c in self.group_cols])
+            rows = rows.join(
+                prev,
+                [F.col(c).eqNullSafe(F.col(f"_prev_{c}")) for c in self.group_cols],
+                "full_outer",
+            ).select(
+                F.coalesce("op", F.lit("delete")).alias("op"),
+                *[F.coalesce(c, f"_prev_{c}").alias(c) for c in self.group_cols],
+                *self.aggs,
             )
-        n_deleted = 0
-        if touched_keys is not None:
-            # groups the MV previously held for the touched keys but that
-            # no longer exist — a fully-deleted conversation, or rows that
-            # MOVED out of a payload-column group (e.g. a role rewrite, a
-            # turn leaving a time window). The previous groups come from
-            # the MV itself, not the change feed. Null agg columns must
-            # match the upsert side's types or the union rejects the plan.
-            typed = recomputed if recomputed is not None else self.table.read()
-            agg_types = {f.name: f.dataType for f in typed.schema.fields}
-            # the MV shares the base's bucket key (group_cols[0]), so the
-            # touched keys map straight to MV buckets: read only those MV
-            # files (per-file manifest scheme, exactly like read_key) —
-            # at 10^8 groups this turns a full-MV scan per refresh into
-            # O(touched buckets' files)
-            prev = self._read_prev_groups(touched_keys, known=by_scheme)
-            gone = prev.join(
-                touched_keys,
-                on=prev[self.group_cols[0]].eqNullSafe(
-                    touched_keys[self.group_cols[0]]
-                ),
-                how="left_semi",
-            ).select(*self.group_cols)
-            if recomputed is not None:
-                # null-safe equality: a group holding NULL in any group
-                # column (NULL role, to_date of NULL ts) must match its own
-                # recomputed row — plain equality would classify it gone
-                # and emit delete + upsert at the same mv_version (LWW
-                # winner arbitrary → nondeterministically dropped group)
-                rc = recomputed.select(*self.group_cols)
-                gone = gone.join(
-                    rc,
-                    on=[
-                        gone[c].eqNullSafe(rc[c]) for c in self.group_cols
-                    ],
-                    how="left_anti",
-                )
-            # bounded: ⊆ the touched keys' previous groups. Persisted: the
-            # count here and the MV merge below both consume it
-            gone = persist(gone)
-            n_deleted = gone.count()
-            if n_deleted:
-                gone_rows = gone.select(
-                    F.lit("delete").alias("op"),
-                    *self.group_cols,
-                    *[
-                        F.lit(None).cast(agg_types.get(name, "string")).alias(name)
-                        for name in self.aggs.keys()
-                    ],
-                    F.lit(head).cast("long").alias(_MV_TS),
-                )
-                mv_rows = (
-                    gone_rows
-                    if mv_rows is None
-                    else mv_rows.unionByName(gone_rows, allowMissingColumns=False)
-                )
-
-        n_groups = 0
-        if mv_rows is not None:
-            commit = self.table.merge(
-                mv_rows,
-                batch_id=f"mv-{last}-{head}",
-                app_metadata={"mv_base_version": head, "mv_from_version": last},
-            )
-            n_groups = int(commit.metrics.get("rows_written", 0)) - n_deleted
+        deleted = Observation()
+        rows = rows.withColumn(_MV_TS, F.lit(head).cast("long")).observe(
+            deleted, F.count_if(F.col("op") == "delete").alias("n")
+        )
+        meta = {"mv_base_version": head, "mv_from_version": last}
+        commit = self.table.merge(
+            rows,
+            batch_id=f"mv-{last}-{head}",
+            # read only once the write ran: a replayed window returns the
+            # first run's commit without writing, and its count is there
+            precommit_check=lambda: {**meta, "mv_groups_deleted": deleted.get["n"]},
+        )
+        n_deleted = int(commit.app_metadata.get("mv_groups_deleted", 0))
         return RefreshStats(
-            last, head, n_groups, n_deleted, len(candidates), len(live),
-            partial=not initial,
+            last, head, int(commit.metrics.get("rows_written", 0)) - n_deleted,
+            n_deleted, len(files), len(live), partial=not initial,
         )
 
     def lag(self) -> int:

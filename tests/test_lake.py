@@ -1596,7 +1596,15 @@ def test_read_path_job_counts(spark, tmp_path):
     an empty LocalRelation, so collecting it runs no job (a global
     ``count()`` over it still runs its one aggregate job). A read that
     plans an extra pass (or an empty selection that plans a resolve or
-    opens a file) fails here."""
+    opens a file) fails here.
+
+    A refresh is one plan into one MV merge; every job is a stage of
+    that write. Initial: the base's LWW resolve, the group aggregate, the
+    merge's bucket placement and the write itself. Partial: the touched
+    buckets' LWW resolve, the touched keys' distinct and their broadcast
+    (both reused by the two semi-joins), the group aggregate, the MV's
+    previous groups' LWW resolve, the two sides of the null-safe full
+    outer join, the merge's bucket placement and the write."""
     from kafka_connect_fs_spark.plans.materialized import IncrementalRollup
     from tests.test_engine import _jobs_in_group
 
@@ -1634,7 +1642,7 @@ def test_read_path_job_counts(spark, tmp_path):
            for g in ["pin-refresh-initial", "pin-refresh-partial", *calls]}
     assert got == {
         "pin-refresh-initial": 4,
-        "pin-refresh-partial": 15,
+        "pin-refresh-partial": 9,
         "pin-read": 3,
         "pin-read-columns": 3,
         "pin-read-key-hit": 2,

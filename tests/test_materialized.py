@@ -51,15 +51,18 @@ def full_recompute(base):
 
 
 def assert_mv_equals_full(mv, base):
+    # repr sorts a NULL conv_id next to strings
     got = sorted(
-        (r.conv_id, r.n_turns, r.total_chars, r.last_ts)
-        for r in mv.read().select(
-            "conv_id", "n_turns", "total_chars", "last_ts"
-        ).collect()
+        ((r.conv_id, r.n_turns, r.total_chars, r.last_ts)
+         for r in mv.read().select(
+             "conv_id", "n_turns", "total_chars", "last_ts"
+         ).collect()),
+        key=repr,
     )
     want = sorted(
-        (r.conv_id, r.n_turns, r.total_chars, r.last_ts)
-        for r in full_recompute(base).collect()
+        ((r.conv_id, r.n_turns, r.total_chars, r.last_ts)
+         for r in full_recompute(base).collect()),
+        key=repr,
     )
     assert got == want
 
@@ -220,7 +223,7 @@ def test_property_any_change_sequence_matches_full_recompute(
     and vanish across windows."""
     import datetime as dt
 
-    from hypothesis import HealthCheck, given, settings
+    from hypothesis import HealthCheck, example, given, settings
     from hypothesis import strategies as st
 
     BASE = dt.datetime(2024, 1, 1)
@@ -228,7 +231,8 @@ def test_property_any_change_sequence_matches_full_recompute(
     event_st = st.fixed_dictionaries(
         {
             "op": st.sampled_from(["upsert", "upsert", "upsert", "delete"]),
-            "conv": st.sampled_from(["c0", "c1", "c2"]),
+            # None: a NULL bucket key is a group like any other
+            "conv": st.sampled_from(["c0", "c1", "c2", None]),
             "turn": st.integers(0, 2),
             "text": st.text(alphabet="abcxyz ", min_size=0, max_size=10),
             # coarse ts pool → ties; determinism comes from the per-row
@@ -246,6 +250,15 @@ def test_property_any_change_sequence_matches_full_recompute(
         rows=st.lists(event_st, min_size=1, max_size=24),
         splits=st.tuples(st.integers(0, 24), st.integers(0, 24)),
         refresh_mid=st.booleans(),
+    )
+    # a live NULL-key group touched by a partial refresh
+    @example(
+        rows=[
+            {"op": "upsert", "conv": c, "turn": t, "text": "a", "sec": i}
+            for i, (c, t) in enumerate([("c0", 0), (None, 0), (None, 1), (None, 2)])
+        ],
+        splits=(3, 4),
+        refresh_mid=True,
     )
     def prop(rows, splits, refresh_mid):
         from pyspark.sql import Row
@@ -282,9 +295,9 @@ def test_property_any_change_sequence_matches_full_recompute(
 
 
 def test_failed_partial_refresh_releases_cached_frames(spark, base, tmp_path):
-    """A partial refresh persists its touched keys, recomputed groups and
-    gone groups; when the MV merge fails they must be released too, or
-    every failed refresh of a long-running tailer leaks cached blocks."""
+    """A failed partial refresh leaves no cached blocks behind, or every
+    failed refresh of a long-running tailer would leak them. The refresh
+    is one plan and caches nothing; this keeps it so."""
     base.merge(edf(spark, [ev("c1", 0, "a", 1), ev("c2", 0, "b", 1)]), "b1")
     mv = mv_of(base, tmp_path)
     mv.refresh()
@@ -463,3 +476,57 @@ def test_null_payload_group_survives_refresh(spark, base, tmp_path):
         assert st.n_groups_deleted == 0, f"round {i}: live NULL group deleted"
         got = {(r.conv_id, r.role): r.n for r in mv.read().collect()}
         assert got == {("c1", None): 1, ("c1", "user"): 1}
+
+
+def test_null_bucket_key_group_survives_partial_refresh(spark, base, tmp_path):
+    """A NULL bucket key must match itself on both sides of a partial
+    refresh: the recompute once dropped NULL keys (plain equality) while
+    the previous groups matched them null-safely, so a live NULL group was
+    tombstoned as gone."""
+    base.merge(edf(spark, [ev("c1", 0, "a", 1), ev(None, 0, "n0", 2),
+                           ev(None, 1, "n1", 3)]), "b1")
+    mv = mv_of(base, tmp_path)
+    mv.refresh()
+    base.merge(edf(spark, [ev(None, 2, "n2", 4)]), "b2")
+    st = mv.refresh()
+    assert st.partial and st.n_groups_deleted == 0
+    assert st.n_groups_refreshed == 1
+    assert {r.conv_id: r.n_turns for r in mv.read().collect()} == {"c1": 1, None: 3}
+    assert_mv_equals_full(mv, base)
+
+
+def test_replayed_refresh_reads_delete_count_from_the_log(
+    spark, base, tmp_path, monkeypatch
+):
+    """Two tailers on one window: the second still sees the pre-refresh
+    version, so its MV merge hits the batch_id replay guard. It writes
+    nothing and reports the first run's delete count from the commit's
+    app-metadata; it never reads the Observation of a write that did not
+    run (``get`` would wait for it)."""
+    from kafka_connect_fs_spark.plans import materialized
+
+    seed(spark, base, n_convs=4)
+    mv = mv_of(base, tmp_path)
+    mv.refresh()
+    before = mv.refreshed_version()
+    base.merge(edf(spark, [ev("c2", t, None, 9000 + t, op="delete")
+                           for t in range(3)]), "b2")
+    second = mv_of(base, tmp_path)
+    monkeypatch.setattr(second, "refreshed_version", lambda: before)
+    first = mv.refresh()
+    assert first.n_groups_deleted == 1
+    v = mv.table.latest_version()
+    assert mv.table.commits()[-1].app_metadata["mv_groups_deleted"] == 1
+
+    class Unread(materialized.Observation):
+        @property
+        def get(self):
+            raise AssertionError("a replayed refresh read an Observation")
+
+    monkeypatch.setattr(materialized, "Observation", Unread)
+    again = second.refresh()
+    assert (again.from_version, again.to_version) == (first.from_version, first.to_version)
+    assert again.n_groups_deleted == 1
+    assert again.n_groups_refreshed == first.n_groups_refreshed
+    assert mv.table.latest_version() == v
+    assert_mv_equals_full(mv, base)
