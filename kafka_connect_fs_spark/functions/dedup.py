@@ -24,25 +24,6 @@ def content_hash(text: Column) -> Column:
     return F.md5(text)
 
 
-def _file_size(uri: str) -> int | None:
-    import os
-
-    try:
-        if uri.startswith("file:"):
-            from urllib.parse import unquote, urlparse
-
-            return os.path.getsize(unquote(urlparse(uri).path))
-        if "://" in uri:
-            import pyarrow.fs as pafs
-
-            fs, sub = pafs.FileSystem.from_uri(uri)
-            info = fs.get_file_info(sub)
-            return info.size
-        return os.path.getsize(uri)
-    except Exception:
-        return None
-
-
 def _widen_degenerate_scan(df: DataFrame, cap: int = 16) -> DataFrame:
     """Repartition ONLY a degenerate few-SPLIT scan (a small 1-file table
     scans as ~one task and serializes the downstream explode).
@@ -59,6 +40,9 @@ def _widen_degenerate_scan(df: DataFrame, cap: int = 16) -> DataFrame:
     to a ``df.rdd.getNumPartitions()`` probe (planning-only) and are
     widened when fewer than ``threshold`` partitions."""
     import math
+    from urllib.parse import unquote
+
+    from kafka_connect_fs_spark.sources.discovery import stat
 
     try:
         files = df.inputFiles()
@@ -90,11 +74,15 @@ def _widen_degenerate_scan(df: DataFrame, cap: int = 16) -> DataFrame:
         max_pb = 128 * 1024 * 1024
     est_splits = 0
     for p in files:
-        size = _file_size(p)
-        if size is None or p.endswith((".gz", ".bz2")):
+        try:
+            # inputFiles() are percent-encoded URIs
+            meta = stat(unquote(p))
+        except Exception:  # only a sizing guess: an unknown size counts one
+            meta = None
+        if meta is None or p.endswith((".gz", ".bz2")):
             est_splits += 1
         else:
-            est_splits += max(1, math.ceil(size / max_pb))
+            est_splits += max(1, math.ceil(meta.length / max_pb))
         if est_splits >= threshold:
             return df
     return df.repartition(target)

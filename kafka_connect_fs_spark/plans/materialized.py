@@ -191,7 +191,7 @@ class IncrementalRollup:
             mv._buckets_by_scheme(touched_keys, sorted(schemes - set(by_scheme)))
         )
         files = mv._files_in_buckets(st.live, by_scheme)
-        return mv._view(st, files).select(*self.group_cols)
+        return mv._view(st, files, columns=self.group_cols)
 
     def _touching(self, df: DataFrame, touched: DataFrame) -> DataFrame:
         """``df``'s rows whose bucket key is one of ``touched``'s, matched

@@ -181,8 +181,7 @@ def read_cobol(
     def decode(task: tuple) -> Iterator[pd.DataFrame]:
         path, start, end, emit_from = task
         with _open_raw(path) as f:
-            if hasattr(f, "seek"):
-                f.seek(start)
+            f.seek(start)
             raw = f.read(end - start)
         if rdw:
             recs, offsets = _frame_rdw(

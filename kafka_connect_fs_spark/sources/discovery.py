@@ -24,6 +24,8 @@ import re
 import stat as statmod
 from dataclasses import dataclass
 
+import pyarrow.fs as pafs
+
 # Java DateTimeFormatter pattern → strftime (the subset the reference's docs
 # exercise: docs/source/policies.rst dynamic-URI examples).
 _JAVA_TO_STRFTIME = [
@@ -73,8 +75,57 @@ class FileMeta:
     mtime: float
 
 
-def _local_path(uri: str) -> str:
-    return uri[len("file://"):] if uri.startswith("file://") else uri
+# One FileSystem per scheme://authority, like the reference's one Hadoop
+# FileSystem per URI (AbstractPolicy.java:78-92): every per-file stat,
+# open, move and delete resolves its path through ``fs_of``, so local
+# paths run exactly the pyarrow code remote ones do.
+_LOCAL = pafs.LocalFileSystem()
+# scheme://authority -> (client, length of the URI prefix it strips)
+_REMOTE: dict[str, tuple[pafs.FileSystem, int]] = {}
+
+
+def fs_of(path: str, bare: pafs.FileSystem | None = None) -> tuple[pafs.FileSystem, str]:
+    """The pyarrow FileSystem holding ``path``, and the path inside it.
+
+    A path with no scheme lives on ``bare`` when given, else on the one
+    LocalFileSystem ``file://`` paths share too: a bare cleanup_move_dir
+    resolves against its source's filesystem, as a Hadoop Path with no
+    scheme does in the reference's ``fs.rename``. Any other scheme builds
+    its client once per scheme://authority: a fresh S3/HDFS client per call
+    would pay connection setup per file. Tests substitute a fake remote FS
+    here."""
+    scheme, sep, rest = path.partition("://")
+    if not sep:
+        return bare or _LOCAL, path
+    if scheme == "file":
+        return _LOCAL, rest
+    authority = f"{scheme}://{rest.split('/', 1)[0]}"
+    client = _REMOTE.get(authority)
+    if client is None:
+        # from_uri strips a fixed prefix per scheme://authority ("s3://"
+        # keeps the bucket in the path, "hdfs://nn:port" drops the
+        # authority): measure it once on a probe path
+        probe = authority + "/_"
+        fs, sub = pafs.FileSystem.from_uri(probe)
+        client = _REMOTE[authority] = (fs, len(probe) - len(sub))
+    fs, strip = client
+    return fs, path[strip:]
+
+
+def stat(path: str) -> FileMeta | None:
+    """Size and mtime of the file at ``path``; None only when it is missing
+    or not a regular file. Every other error propagates: reading a
+    transient failure as "vanished" would purge the file's offsets and ack
+    its discovery message, so its unread tail would never be offered
+    again."""
+    fs, sub = fs_of(path)
+    try:
+        info = fs.get_file_info(sub)
+    except FileNotFoundError:
+        return None
+    if info.type != pafs.FileType.File:
+        return None
+    return FileMeta(path, info.size, (info.mtime_ns or 0) / 1e9)
 
 
 def _hidden(name: str) -> bool:
@@ -93,9 +144,11 @@ def list_files(
 ) -> list[FileMeta]:
     """List files under each URI, filtering by regex on the file *name*.
 
-    Local paths use os.scandir; other schemes (hdfs://, s3://) go through
-    pyarrow.fs — the same Hadoop-FS-style abstraction the reference uses
-    (AbstractPolicy.java:78-92 builds one FileSystem per URI).
+    Local paths walk with os.scandir, other schemes (hdfs://, s3://) with
+    a pyarrow FileSelector. The local walk stays its own: on
+    LocalFileSystem a recursive FileSelector follows symlinked
+    directories (a ``..`` link lists one file under dozens of paths),
+    while ``_list_local`` never descends into one.
     """
     if isinstance(uris, str):
         uris = [uris]
@@ -103,10 +156,11 @@ def list_files(
     out: list[FileMeta] = []
     for uri in uris:
         uri = expand_dynamic_uri(uri, now)
-        if "://" in uri and not uri.startswith("file://"):
-            out.extend(_list_pyarrow(uri, pat, recursive, include_hidden))
+        fs, sub = fs_of(uri)
+        if fs is _LOCAL:
+            out.extend(_list_local(sub, pat, recursive, include_hidden))
         else:
-            out.extend(_list_local(_local_path(uri), pat, recursive, include_hidden))
+            out.extend(_list_pyarrow(fs, uri, sub, pat, recursive, include_hidden))
     # stable order: the reference iterates listing order; we pin path order
     # so batching (take-first-N files per trigger) is deterministic.
     return sorted(out, key=lambda f: f.path)
@@ -149,25 +203,20 @@ def _list_local(root: str, pat: re.Pattern, recursive: bool, include_hidden: boo
     return out
 
 
-def _list_pyarrow(uri: str, pat: re.Pattern, recursive: bool, include_hidden: bool = False) -> list[FileMeta]:
-    import pyarrow.fs as pafs
-
-    fs, path = pafs.FileSystem.from_uri(uri)
+def _list_pyarrow(
+    fs: pafs.FileSystem, uri: str, path: str, pat: re.Pattern, recursive: bool,
+    include_hidden: bool = False,
+) -> list[FileMeta]:
     sel = pafs.FileSelector(path, recursive=recursive, allow_not_found=True)
     base = path.rstrip("/")
-    # Rebuild URIs with the CALLER's original prefix, not fs.type_name:
-    # the type name rewrites gs://→gcs:// (a scheme Spark/Hadoop has no
-    # handler for) and drops the hdfs://namenode:port authority entirely
-    # (later opens would bind to fs.defaultFS — potentially a different
-    # cluster). FS-agnostic: from_uri turned `uri` into `path`, so the
-    # prefix is exactly what it stripped (for s3:// that is just
-    # "s3://" — the bucket lives inside info.path; for hdfs:// it is
-    # "hdfs://nn:port").
-    norm = uri.rstrip("/")
-    if norm.endswith(path.rstrip("/")):
-        prefix = norm[: len(norm) - len(path.rstrip("/"))]
-    else:  # defensive: fall back to the old reconstruction
-        prefix = f"{fs.type_name}://"
+    # Rebuild URIs with the CALLER's prefix, the part of ``uri`` fs_of
+    # stripped, not fs.type_name: the type name rewrites gs://→gcs:// (a
+    # scheme Spark/Hadoop has no handler for) and drops the
+    # hdfs://namenode:port authority (later opens would bind to
+    # fs.defaultFS, potentially a different cluster). For s3:// the prefix
+    # is just "s3://" (the bucket lives inside info.path); for hdfs:// it
+    # is "hdfs://nn:port".
+    prefix = uri[: len(uri) - len(path)]
     out = []
     for info in fs.get_file_info(sel):
         if info.type != pafs.FileType.File or not pat.search(info.base_name):
@@ -178,9 +227,8 @@ def _list_pyarrow(uri: str, pat: re.Pattern, recursive: bool, include_hidden: bo
             rel = info.path[len(base):].lstrip("/") if info.path.startswith(base) else info.path
             if any(_hidden(c) for c in rel.split("/")):
                 continue
-        mtime = info.mtime.timestamp() if info.mtime else 0.0
         p = info.path
         if not prefix.endswith("/") and not p.startswith("/"):
             p = "/" + p  # keep scheme://path well-formed either way
-        out.append(FileMeta(prefix + p, info.size, mtime))
+        out.append(FileMeta(prefix + p, info.size, (info.mtime_ns or 0) / 1e9))
     return out

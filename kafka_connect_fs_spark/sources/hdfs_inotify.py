@@ -37,8 +37,7 @@ import re
 from dataclasses import dataclass
 from typing import Callable
 
-from kafka_connect_fs_spark.sources.discovery import FileMeta
-from kafka_connect_fs_spark.sources.s3_events import _stat_uri
+from kafka_connect_fs_spark.sources.discovery import FileMeta, stat
 
 log = logging.getLogger("kafka_connect_fs_spark")
 
@@ -111,7 +110,7 @@ class HdfsInotifyPolicy:
             self._authority = ""
             self._subtree = self.uri or "/"
         self.regexp = re.compile(regexp)
-        self.stat_fn = stat_fn or _stat_uri
+        self.stat_fn = stat_fn or stat
         self.max_batches_per_poll = max_batches_per_poll
 
     def _in_subtree(self, path: str) -> bool:

@@ -48,6 +48,7 @@ import datetime
 import decimal
 import gzip
 import heapq
+import io
 import json
 import logging
 import os
@@ -59,6 +60,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark import AccumulatorParam
 from pyspark.sql import types as T
+
+from kafka_connect_fs_spark.sources import discovery
 
 log = logging.getLogger("kafka_connect_fs_spark")
 
@@ -125,13 +128,10 @@ def _compression_of(path: str) -> str | None:
 
 
 def _open_raw(path: str):
-    if "://" in path and not path.startswith("file://"):
-        import pyarrow.fs as pafs
-
-        fs, p = pafs.FileSystem.from_uri(path)
-        return fs.open_input_file(p)
-    local = path[len("file://"):] if path.startswith("file://") else path
-    return open(local, "rb")
+    fs, sub = discovery.fs_of(path)
+    # buffered: pyarrow's NativeFile has no readline(), which the range
+    # scanner needs to skip into a split and to finish a straddling line
+    return io.BufferedReader(fs.open_input_file(sub))
 
 
 def _read_decompressed(path: str, limit_compressed: int | None = None) -> bytes:

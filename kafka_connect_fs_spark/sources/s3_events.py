@@ -25,7 +25,7 @@ from dataclasses import dataclass
 from typing import Callable, Protocol
 from urllib.parse import unquote_plus
 
-from kafka_connect_fs_spark.sources.discovery import FileMeta
+from kafka_connect_fs_spark.sources.discovery import FileMeta, stat
 
 log = logging.getLogger("kafka_connect_fs_spark")
 
@@ -91,51 +91,6 @@ def parse_event_message(msg: QueueMessage) -> list[S3EventRecord]:
     return out
 
 
-_FS_CACHE: dict[str, object] = {}
-
-
-def _stat_uri(uri: str) -> FileMeta | None:
-    """Stat one object (the reference's fs.listFiles(path, false) probe).
-    The FileSystem client is cached per scheme://authority: building a
-    fresh S3/HDFS client per stat costs connection setup per EVENT — a
-    10k-event burst would pay it 10k times per trigger.
-
-    Bare (non-URI) paths — e.g. HdfsInotifyPolicy constructed with a
-    plain directory — stat via the local filesystem instead of raising
-    IndexError on the '://' split."""
-    if "://" not in uri:
-        import os
-
-        try:
-            st = os.stat(uri)
-        except OSError:
-            return None
-        import stat as stat_mod
-
-        if not stat_mod.S_ISREG(st.st_mode):
-            return None
-        return FileMeta(uri, st.st_size, st.st_mtime)
-    import pyarrow.fs as pafs
-
-    scheme_auth = uri.split("://", 1)[0] + "://" + uri.split("://", 1)[1].split("/", 1)[0]
-    cached = _FS_CACHE.get(scheme_auth)
-    if cached is None:
-        fs, sub = pafs.FileSystem.from_uri(uri)
-        # from_uri strips a FIXED prefix for a given scheme://authority
-        # ("s3://" keeps the bucket in the path; "hdfs://nn:port" strips
-        # the authority) — remember its length so later stats skip client
-        # construction entirely
-        _FS_CACHE[scheme_auth] = (fs, len(uri) - len(sub))
-    else:
-        fs, strip = cached
-        sub = uri[strip:]
-    info = fs.get_file_info(sub)
-    if info.type != pafs.FileType.File:
-        return None
-    mtime = (info.mtime_ns or 0) / 1e9
-    return FileMeta(uri, info.size or 0, mtime)
-
-
 class S3EventNotificationsPolicy:
     """Event-driven discovery: poll a queue of S3 notifications → FileMeta
     listing for the engine (wire via ``IngestConfig.discovery_fn``).
@@ -168,13 +123,13 @@ class S3EventNotificationsPolicy:
         stat_fn: Callable[[str], FileMeta | None] | None = None,
         ack_mode: str = "at_poll",
     ):
-        if "://" not in uri:
+        self.scheme, sep, _ = uri.partition("://")
+        if not sep:
             raise ValueError(f"S3 events need a URI-form location, got {uri!r}")
         if ack_mode not in ("at_poll", "after_commit"):
             raise ValueError(f"unknown ack_mode: {ack_mode!r}")
         self.queue = queue
         self.uri = uri.rstrip("/")
-        self.scheme = uri.split("://", 1)[0]
         self.event_regex = re.compile(event_regex)
         self.delete_messages = delete_messages
         self.ack_mode = ack_mode
@@ -187,7 +142,7 @@ class S3EventNotificationsPolicy:
         # handle on every redelivery (only the latest handle is valid
         # for delete); values keep insertion order for deterministic acks
         self._pending_acks: dict[str, tuple[str, frozenset[str]]] = {}
-        self.stat_fn = stat_fn or _stat_uri
+        self.stat_fn = stat_fn or stat
 
     def _in_bucket(self, record: S3EventRecord) -> bool:
         # ref :121 intent (fs.getWorkingDirectory().startsWith(uriPrefix +

@@ -44,21 +44,23 @@ bucket-pruned + partial-aggregated (see plans/lake.py).
 
 from __future__ import annotations
 
+import errno
 import json
 import logging
 import os
-import shutil
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_fs_spark.operators.schema_evolution import diff_schemas
 from kafka_connect_fs_spark.plans.lake import LakeTable, offsets_metadata, stream_batch_id
+from kafka_connect_fs_spark.sources import discovery
 from kafka_connect_fs_spark.sources.discovery import FileMeta, list_files
 from kafka_connect_fs_spark.sources.readers import (
     CUSTOM_READERS,
@@ -414,7 +416,7 @@ class IngestEngine:
                         except Exception as e:
                             if "PATH_NOT_FOUND" not in str(e):
                                 raise
-                            whole = [w for w in whole if _still_exists(w.path)]
+                            whole = [w for w in whole if discovery.stat(w.path)]
                             ev = (
                                 read_line_format_native(
                                     self.spark, whole, fmt, cfg.schema,
@@ -564,7 +566,7 @@ class IngestEngine:
                 if not w["eof"] and p not in reoffer:
                     reoffer[p] = FileMeta(p, w["file_size"], 0.0)
             for p, fm in reoffer.items():
-                if _still_exists(p):
+                if discovery.stat(p):
                     raw_listing.append(fm)
                 else:
                     # vanished after discovery: nothing owed — ack its
@@ -851,14 +853,14 @@ class IngestEngine:
             return []
         last = stream_batch_id(self.config.batch_id_prefix, self.watermarks.last_seq())
         written = os.path.getmtime(self.lake._log_path(self.lake._state_full().batch_ids[last]))
-        unchanged = [m for m in map(_stat, pending) if m and m.mtime < written]
+        unchanged = [m for m in map(discovery.stat, pending) if m and m.mtime < written]
         _, finished = self._plan(unchanged, self.watermarks.load_dict())
         return [p for p in pending if p not in finished] + self._cleanup(finished)
 
     def _cleanup(self, paths: list[str]) -> list[str]:
         """Apply NONE/MOVE/DELETE to fully-consumed files
         (AbstractPolicy.java:281-331, which routes through Hadoop FS for
-        ANY scheme — here pyarrow.fs plays that role for URI paths).
+        ANY scheme — here the pyarrow FileSystem ``fs_of`` resolves).
 
         Returns only the paths whose side-effect actually applied (or was
         verifiably already applied — NotFound under replay). A failed path
@@ -880,50 +882,30 @@ class IngestEngine:
         return done
 
     def _cleanup_one(self, p: str, mode: str) -> None:
-        if "://" in p:
-            # pyarrow.fs for every URI scheme (file:// exercises the same
-            # code path the remote schemes take)
-            import pyarrow.fs as pafs
-
-            fs, sub = _fs_for_uri(p)
-            if fs.get_file_info(sub).type == pafs.FileType.NotFound:
-                return  # already cleaned (replay) — the ONLY idempotent case
-            if mode == "delete":
-                fs.delete_file(sub)
-            elif mode == "move":
-                dest_dir = self._require_move_dir()
-                if "://" in dest_dir:
-                    dfs, dsub = _fs_for_uri(dest_dir)
-                    if type(dfs) is not type(fs):
-                        raise ValueError(
-                            f"cleanup_move_dir {dest_dir!r} is on a different "
-                            f"filesystem than {p!r}"
-                        )
-                else:
-                    dfs, dsub = fs, dest_dir
-                dfs.create_dir(dsub, recursive=True)
-                name = self.config.cleanup_move_prefix + os.path.basename(sub)
-                fs.move(sub, f"{dsub.rstrip('/')}/{name}")
-            else:
-                raise ValueError(f"unknown cleanup mode: {mode}")
-            return
-        if not os.path.exists(p):
-            return  # already cleaned (replay)
+        fs, sub = discovery.fs_of(p)
+        if fs.get_file_info(sub).type == pafs.FileType.NotFound:
+            return  # already cleaned (replay) — the ONLY idempotent case
         if mode == "delete":
-            os.unlink(p)
-        elif mode == "move":
-            dest_dir = self._require_move_dir()
-            os.makedirs(dest_dir, exist_ok=True)
-            name = self.config.cleanup_move_prefix + os.path.basename(p)
-            shutil.move(p, os.path.join(dest_dir, name))
-        else:
-            raise ValueError(f"unknown cleanup mode: {mode}")
-
-    def _require_move_dir(self) -> str:
-        dest = self.config.cleanup_move_dir
-        if not dest:
-            raise ValueError("cleanup=move requires cleanup_move_dir")
-        return dest
+            fs.delete_file(sub)
+            return
+        dest_dir = self.config.cleanup_move_dir
+        dfs, dsub = discovery.fs_of(dest_dir, bare=fs)
+        if type(dfs) is not type(fs):
+            raise ValueError(
+                f"cleanup_move_dir {dest_dir!r} is on a different filesystem than {p!r}"
+            )
+        fs.create_dir(dsub, recursive=True)
+        dest = f"{dsub.rstrip('/')}/{self.config.cleanup_move_prefix}{os.path.basename(sub)}"
+        try:
+            fs.move(sub, dest)
+        except OSError as e:
+            if e.errno != errno.EXDEV:
+                raise
+            # a local rename cannot cross devices: copy, then delete. Unlike
+            # a rename, the copy carries the copy time as its mtime and the
+            # umask's mode, not the source's
+            pafs.copy_files(sub, dest, source_filesystem=fs, destination_filesystem=fs)
+            fs.delete_file(sub)
 
     # -------------------------------------------------------------- metrics
     def _log_metrics(
@@ -997,46 +979,9 @@ def _range_counts(ranges: dict) -> dict[str, int]:
     return {k: kinds.count(k) for k in (RANGE_OK, RANGE_PARTIAL, RANGE_FAILED)}
 
 
-def _fs_for_uri(uri: str):
-    """pyarrow FileSystem + in-FS path for a URI (indirection point: tests
-    substitute a fake remote FS here, since the pyarrow class is immutable)."""
-    import pyarrow.fs as pafs
-
-    return pafs.FileSystem.from_uri(uri)
-
-
 def _compressed(path: str) -> bool:
     # single source of truth with the scanner: a new codec extension added
     # there (e.g. .zst) must change planning semantics here too
     from kafka_connect_fs_spark.sources.readers import _compression_of
 
     return _compression_of(path) is not None
-
-
-def _stat(path: str) -> FileMeta | None:
-    """Size and mtime; None when the file is gone. Any remote error but
-    NotFound propagates: reading a transient failure as "vanished" would
-    purge the file's offsets and ack its discovery message, so its unread
-    tail would never be offered again; the batch fails and is retried."""
-    if "://" in path and not path.startswith("file://"):
-        import pyarrow.fs as pafs
-
-        # through the same indirection point cleanup uses, so tests
-        # substituting a fake remote FS exercise this fallback too
-        fs, p = _fs_for_uri(path)
-        try:
-            info = fs.get_file_info(p)
-        except FileNotFoundError:
-            return None
-        if info.type == pafs.FileType.NotFound:
-            return None
-        return FileMeta(path, info.size, info.mtime.timestamp() if info.mtime else 0.0)
-    try:
-        st = os.stat(path[len("file://"):] if path.startswith("file://") else path)
-    except OSError:
-        return None
-    return FileMeta(path, st.st_size, st.st_mtime)
-
-
-def _still_exists(path: str) -> bool:
-    return _stat(path) is not None

@@ -11,6 +11,8 @@ the reference's at-least-once).
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 
 import pytest
 
@@ -505,6 +507,25 @@ def test_cleanup_through_file_uri_uses_pyarrow_path(spark, tmp_path):
     ]
 
 
+def test_cleanup_move_across_devices(spark, tmp_path):
+    """MOVE into a directory on another device: a rename cannot cross
+    devices, so the file is copied and its source deleted."""
+    shm = "/dev/shm"
+    if not os.path.isdir(shm) or os.stat(shm).st_dev == os.stat(tmp_path).st_dev:
+        pytest.skip("needs /dev/shm on a different device than tmp_path")
+    dest = tempfile.mkdtemp(dir=shm)
+    try:
+        engine = make_engine(spark, tmp_path, cleanup="move", cleanup_move_dir=dest)
+        src = tmp_path / "src" / "a.jsonl"
+        src.write_text('{"k": 1}\n')
+        assert engine._cleanup([str(src)]) == [str(src)]
+        assert not src.exists()
+        with open(os.path.join(dest, "a.jsonl")) as f:
+            assert f.read() == '{"k": 1}\n'
+    finally:
+        shutil.rmtree(dest, ignore_errors=True)
+
+
 class _FakeRemoteFS:
     """Minimal pyarrow.fs.FileSystem stand-in recording side-effects."""
 
@@ -523,18 +544,26 @@ class _FakeRemoteFS:
         self.calls.append(("delete", sub))
         self.existing.discard(sub)
 
+    def create_dir(self, sub, recursive=False):
+        self.calls.append(("create_dir", sub))
+
+    def move(self, src, dest):
+        self.calls.append(("move", src, dest))
+        self.existing.discard(src)
+        self.existing.add(dest)
+
 
 def test_cleanup_remote_delete_and_replay_idempotence(spark, tmp_path, monkeypatch):
     """Remote URIs: DELETE goes through the FS client; only NotFound counts
     as already-cleaned replay; an FS error keeps the path OUT of `done`
     (so its watermark row survives and the cleanup is retried) instead of
     silently claiming success."""
-    import kafka_connect_fs_spark.streaming.engine as eng_mod
+    from kafka_connect_fs_spark.sources import discovery
 
     calls: list = []
     fake = _FakeRemoteFS({"bucket/seen.jsonl"}, calls)
     monkeypatch.setattr(
-        eng_mod, "_fs_for_uri", lambda uri: (fake, uri.split("://", 1)[1])
+        discovery, "fs_of", lambda uri: (fake, uri.split("://", 1)[1])
     )
     engine = make_engine(spark, tmp_path, cleanup="delete")
 
@@ -555,12 +584,41 @@ def test_cleanup_remote_delete_and_replay_idempotence(spark, tmp_path, monkeypat
     assert engine._cleanup(["s3://bucket/flaky.jsonl"]) == []
 
 
+@pytest.mark.parametrize(
+    "uri,prefix,move_dir",
+    # the client strips what pyarrow's from_uri strips: s3 keeps the
+    # bucket in the path, hdfs drops the namenode authority
+    [("s3://bucket/seen.jsonl", "s3://", "bucket/archive"),
+     ("hdfs://nn:8020/in/seen.jsonl", "hdfs://nn:8020", "/archive")],
+)
+def test_cleanup_remote_move_to_bare_dir(spark, tmp_path, monkeypatch, uri, prefix, move_dir):
+    """A cleanup_move_dir with no scheme lives on the source's own
+    filesystem, as a scheme-less Hadoop Path does under the reference's
+    fs.rename: a remote source moves within its client, never onto the
+    local disk and never as a cross-filesystem error."""
+    from kafka_connect_fs_spark.sources import discovery
+
+    calls: list = []
+    sub = uri[len(prefix):]
+    fake = _FakeRemoteFS({sub}, calls)
+    authority = uri[: uri.index("/", uri.index("://") + 3)]
+    monkeypatch.setitem(discovery._REMOTE, authority, (fake, len(prefix)))
+    engine = make_engine(spark, tmp_path, cleanup="move", cleanup_move_dir=move_dir)
+
+    assert engine._cleanup([uri]) == [uri]
+    assert calls == [
+        ("create_dir", move_dir),
+        ("move", sub, f"{move_dir}/seen.jsonl"),
+    ]
+    assert engine._cleanup([uri]) == [uri] and len(calls) == 2  # replay
+
+
 def test_transient_remote_stat_error_keeps_watermark_and_ack(spark, tmp_path, monkeypatch):
     """Only NotFound means a re-offered file vanished. A remote-FS error
     while stat'ing it must fail the batch (the next trigger retries), not
     purge its non-eof watermark row and ack its discovery message — that
     would skip the file's unread tail for good."""
-    import kafka_connect_fs_spark.streaming.engine as eng_mod
+    from kafka_connect_fs_spark.sources import discovery
 
     fake = _FakeRemoteFS({"bucket/a.jsonl"}, [])
 
@@ -569,7 +627,7 @@ def test_transient_remote_stat_error_keeps_watermark_and_ack(spark, tmp_path, mo
 
     fake.get_file_info = flaky
     monkeypatch.setattr(
-        eng_mod, "_fs_for_uri", lambda uri: (fake, uri.split("://", 1)[1])
+        discovery, "fs_of", lambda uri: (fake, uri.split("://", 1)[1])
     )
     acked: list = []
     engine = make_engine(
@@ -843,16 +901,16 @@ def test_watermark_snapshot_retention_and_cache(spark, tmp_path):
 def test_no_driver_stats_on_happy_path(spark, tmp_path, monkeypatch):
     """The listing already stat'ed every file: a batch where nothing
     vanished must not re-stat files on the driver (at 10^5 files/trigger a
-    per-file pre-check is a second listing). _still_exists is reserved for
-    the native reader's planning-failure path."""
-    import kafka_connect_fs_spark.streaming.engine as E
+    per-file pre-check is a second listing). A stat is reserved for the
+    native reader's planning-failure path."""
+    from kafka_connect_fs_spark.sources import discovery
 
     engine = make_engine(spark, tmp_path)
     rows = transcript_change_events(5, 2)
     write_jsonl(rows, str(tmp_path / "src" / "a.jsonl"))
     calls = []
-    real = E._still_exists
-    monkeypatch.setattr(E, "_still_exists", lambda p: calls.append(p) or real(p))
+    real = discovery.stat
+    monkeypatch.setattr(discovery, "stat", lambda p: calls.append(p) or real(p))
     r = engine.run_once()
     assert r.rows_written == 10
     assert calls == []

@@ -446,6 +446,22 @@ def test_gone_group_read_is_bucket_pruned(spark, base, tmp_path):
     assert_mv_equals_full(mv, base)
 
 
+def test_prev_group_scan_reads_only_group_columns(spark, base, tmp_path):
+    """The previous groups only meet the recomputed ones in a join on the
+    group columns: their parquet scan must not read (and LWW-pack) any
+    aggregate column."""
+    seed(spark, base)
+    mv = mv_of(base, tmp_path)
+    mv.refresh()
+    touched = spark.createDataFrame([("c3",)], "conv_id string")
+    prev = mv._read_prev_groups(touched)
+    plan = prev._jdf.queryExecution().executedPlan().toString()
+    read_schemas = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
+    assert read_schemas, plan
+    for ln in read_schemas:
+        assert not any(a in ln for a in AGGS()), ln
+
+
 def test_null_payload_group_survives_refresh(spark, base, tmp_path):
     """A group with NULL in a payload group column must match its own
     recomputed row (null-safe equality): with plain equality it was

@@ -842,3 +842,58 @@ def test_pack_balances_bins_largest_first():
     loads = sorted(sum([10, 9, 1, 1, 1, 4][i] for i in b) for b in bins)
     assert loads == [13, 13]
     assert len(_pack([5, 5], 8)) == 2  # never more bins than items
+
+
+def _drain_range(path, snap, range_start, range_end):
+    """Run one ``_scan_one_range`` on the driver: (values, offsets, outcome)."""
+    from kafka_connect_fs_spark.sources.readers import _scan_one_range
+
+    gen = _scan_one_range(path, 0, snap, range_start, range_end, "utf-8", False, 10_000)
+    values, offsets = [], []
+    while True:
+        try:
+            pdf = next(gen)
+        except StopIteration as stop:
+            return values, offsets, stop.value
+        values += list(pdf["value"])
+        offsets += list(pdf["_src_offset"])
+
+
+def test_remote_path_scans_like_local(tmp_path, monkeypatch):
+    """A remote path opens a pyarrow file, which has no readline() of its
+    own: the scanner must still skip into a later split and finish a
+    straddling or torn last line exactly as on a local path. Otherwise a
+    remote file larger than one split, or ending in a torn line, never
+    advances. The s3:// client is a pyarrow SubTreeFileSystem over
+    ``tmp_path``, so the bucket's keys are local files."""
+    import pyarrow.fs as pafs
+
+    from kafka_connect_fs_spark.sources import discovery
+
+    local = tmp_path / "bucket" / "a.jsonl"
+    local.parent.mkdir()
+    local.write_bytes(b"".join(b'{"i": %d}\n' % i for i in range(100)) + b'{"i": 1')
+    snap = local.stat().st_size
+    ranges = [(0, snap), (0, snap // 2), (snap // 2, snap)]
+
+    def scans(path):
+        out = []
+        for start, end in ranges:
+            values, offsets, o = _drain_range(path, snap, start, end)
+            out.append((values, offsets, o.range_start, o.consumed_end, o.kind, o.records))
+        return out
+
+    want = scans(str(local))
+
+    class _S3:
+        @staticmethod
+        def from_uri(uri):
+            assert uri.startswith("s3://bucket/"), uri
+            return pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem()), uri[len("s3://"):]
+
+    monkeypatch.setattr(pafs, "FileSystem", _S3)
+    monkeypatch.setattr(discovery, "_REMOTE", {}, raising=False)
+    assert scans("s3://bucket/a.jsonl") == want
+    whole, first, later = want
+    assert len(whole[0]) == 100 and whole[4] == RANGE_PARTIAL  # torn tail held back
+    assert first[0] + later[0] == whole[0] and later[0]

@@ -386,14 +386,14 @@ def test_vanished_nonfinished_file_purged_and_acked(spark, tmp_path):
 def test_stat_uri_bare_path(tmp_path):
     """ADVICE r4 low: a bare (non-URI) path must stat via the local fs,
     not raise IndexError on the '://' split."""
-    from kafka_connect_fs_spark.sources.s3_events import _stat_uri
+    from kafka_connect_fs_spark.sources.discovery import stat
 
     p = tmp_path / "f.txt"
     p.write_text("hello")
-    meta = _stat_uri(str(p))
+    meta = stat(str(p))
     assert meta is not None and meta.length == 5
-    assert _stat_uri(str(tmp_path / "missing.txt")) is None
-    assert _stat_uri(str(tmp_path)) is None  # directory -> not a file
+    assert stat(str(tmp_path / "missing.txt")) is None
+    assert stat(str(tmp_path)) is None  # directory -> not a file
 
 
 def test_bucket_prefix_collision_rejected():
